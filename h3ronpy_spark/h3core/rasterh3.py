@@ -397,6 +397,175 @@ def rasters_to_cells_batch(
     return img_all, vals, cells
 
 
+# --- footprint prefilter: which rasters can reach a cell coverage ------
+
+# Average hexagon edge per resolution (radians): the edge of a regular
+# hexagon of the average cell area.
+_AVG_EDGE_RAD = (
+    np.sqrt(2.0 * AVG_CELL_AREA_KM2 / (3.0 * np.sqrt(3.0))) / EARTH_RADIUS_KM
+)
+# Largest sample-gap radius the prefilter accepts at a coarse resolution
+# rp (see footprint_prefilter): half the average edge at rp.  The
+# smallest slack sigma(rp), measured over the descendants of all 12
+# pentagons and of random cells on every base cell, is about 0.72 of
+# the average edge (at pentagons; 0.87-0.96 of their own edge), so the
+# bound holds with a ~30% margin.  tests/test_footprint_prefilter.py
+# re-checks it at this radius for every rp.
+FOOTPRINT_SAFE_RADIUS_RAD = 0.5 * _AVG_EDGE_RAD
+
+
+def footprint_radius(transforms, ws, hs) -> np.ndarray:
+    """Per raster, an upper bound (radians) on the great-circle distance
+    from any point of its footprint to the nearest of its five samples
+    (four corners and centre); inf where no bound is claimed: rotated
+    transforms (b or d nonzero), footprints reaching past a pole and
+    non-finite transforms.
+
+    In the (lng, lat) degree plane the farthest point of a W x H
+    rectangle from its corners and centre is (W^2 + H^2) / (4 max(W, H))
+    away.  On the sphere ds^2 = dlat^2 + cos^2(lat) dlng^2 <= dlat^2 +
+    dlng^2, so the great-circle distance is at most that planar length
+    in radians (also across the antimeridian: longitudes past 180 are
+    the same points)."""
+    tf = np.asarray(transforms, dtype=np.float64).reshape(-1, 6)
+    ws = np.asarray(ws, dtype=np.float64)
+    hs = np.asarray(hs, dtype=np.float64)
+    wd = np.abs(tf[:, 0]) * ws
+    hd = np.abs(tf[:, 4]) * hs
+    big = np.maximum(wd, hd)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        r = np.where(big > 0, (wd * wd + hd * hd) / (4.0 * big), 0.0)
+    lat_far = np.maximum(np.abs(tf[:, 5]), np.abs(tf[:, 5] + tf[:, 4] * hs))
+    ok = (
+        (tf[:, 1] == 0.0)
+        & (tf[:, 3] == 0.0)
+        & np.isfinite(tf).all(axis=1)
+        & (lat_far <= 90.0)
+    )
+    return np.where(ok, np.radians(r), np.inf)
+
+
+def footprint_prefilter_res(radius_rad: float, max_res: int) -> int | None:
+    """The finest rp <= max_res whose safe radius covers `radius_rad`,
+    or None if even res 0 does not."""
+    ok = np.flatnonzero(FOOTPRINT_SAFE_RADIUS_RAD[: int(max_res) + 1]
+                        >= radius_rad)
+    return int(ok[-1]) if ok.size else None
+
+
+def footprint_index(cov_cells, rp: int) -> tuple:
+    """The two probe sets of a coverage at coarse resolution rp, built
+    once per coverage: (rp, sorted distinct rp-parents of the cells finer
+    than rp, sorted cells at or coarser than rp, their resolutions)."""
+    from . import index as IDX
+
+    cov = np.asarray(cov_cells, dtype=np.int64)
+    res = IDX.get_resolution(cov)
+    fine = np.unique(IDX.cell_to_parent(cov[res > rp], rp))
+    cm = res <= rp
+    coarse = np.sort(cov[cm])
+    coarse_res = tuple(int(r) for r in np.unique(res[cm]))
+    return int(rp), fine, coarse, coarse_res
+
+
+def _in_sorted(sorted_arr: np.ndarray, x: np.ndarray) -> np.ndarray:
+    if sorted_arr.size == 0:
+        return np.zeros(x.shape, dtype=bool)
+    pos = np.minimum(np.searchsorted(sorted_arr, x), sorted_arr.size - 1)
+    return sorted_arr[pos] == x
+
+
+def footprint_mask(transforms, ws, hs, index: tuple) -> np.ndarray:
+    """Bool mask of the rasters that may hold a cell with an ancestor in
+    the coverage behind `index` (footprint_index); see
+    footprint_prefilter for the bound.  Rasters whose footprint_radius
+    exceeds the safe radius at the index's rp are kept."""
+    from . import index as IDX
+    from .grid import neighbors
+
+    rp, fine, coarse, coarse_res = index
+    tf = np.asarray(transforms, dtype=np.float64).reshape(-1, 6)
+    ws = np.asarray(ws, dtype=np.float64)
+    hs = np.asarray(hs, dtype=np.float64)
+    keep = footprint_radius(tf, ws, hs) > FOOTPRINT_SAFE_RADIUS_RAD[rp]
+    test = np.flatnonzero(~keep)
+    if test.size == 0:
+        return keep
+    # corners and centre, in pixel units
+    sx = np.array([0.0, 1.0, 0.0, 1.0, 0.5])
+    sy = np.array([0.0, 0.0, 1.0, 1.0, 0.5])
+    t = tf[test]
+    cols = ws[test, None] * sx
+    rows = hs[test, None] * sy
+    lng = t[:, 0, None] * cols + t[:, 2, None]
+    lat = t[:, 4, None] * rows + t[:, 5, None]
+    q = latlng_to_cell(np.radians(lat.ravel()), np.radians(lng.ravel()), rp)
+    uq, inv = np.unique(q, return_inverse=True)
+    # grid_disk(k=1) of every distinct sample cell
+    valid = uq != -1
+    nb_row, nb_cell = neighbors(uq[valid])
+    vrow = np.flatnonzero(valid)
+    drow = np.concatenate([vrow, vrow[nb_row]])
+    dcell = np.concatenate([uq[valid], nb_cell])
+    hit = _in_sorted(fine, dcell)
+    for r in coarse_res:
+        hit |= _in_sorted(coarse, IDX.cell_to_parent(dcell, r))
+    uhit = ~valid
+    uhit[drow[hit]] = True
+    keep[test] = uhit[inv.reshape(-1)].reshape(-1, sx.size).any(axis=1)
+    return keep
+
+
+def footprint_prefilter(transforms, ws, hs, cov_cells, res_list,
+                        h3_res: int) -> np.ndarray:
+    """Bool mask over rasters: False only where no cell that
+    rasters_to_cells_batch(..., h3_res, nodata_value=None) can emit for
+    that raster has an ancestor in the coverage `cov_cells` (whose
+    resolutions are `res_list`).  A provable superset of the rasters
+    that reach the coverage; it needs only the transforms and sizes, not
+    the pixels.
+
+    The test runs at one coarse resolution rp <= min(h3_res,
+    max(res_list)).  A tile cell c matches a coverage cell x of res r iff
+    cell_to_parent(c, r) == x, so with P = cell_to_parent(c, rp): for
+    r > rp, P is the rp-parent of x (the `fine` set of footprint_index);
+    for r <= rp, cell_to_parent(P, r) == x (the `coarse` set, probed
+    through bit-math ancestors).  It remains to show that P lies in
+    grid_disk(q, 1) of some sample cell q = latlng_to_cell(s, rp):
+
+      (a) tiling emits only cells whose centroid p lies in the
+          footprint (raster_to_cells semantics);
+      (b) p lies in the region of P's descendants, which stays inside
+          the union of grid_disk(P, 1) with a slack sigma(rp): every
+          point within sigma(rp) of a descendant centroid encodes at rp
+          to a cell of grid_disk(P, 1).  So the grid distance between P
+          and latlng_to_cell(p, rp) is at most 1 (aperture-7 drift);
+      (c) some sample s lies within footprint_radius of p, the sampling
+          gap.  Every rp cell the footprint touches that holds no
+          sample is covered because the gap is bounded in distance,
+          not in cells: if the gap is <= sigma(rp), then s encodes to a
+          cell of grid_disk(P, 1), so P is in grid_disk(q, 1).
+
+    rp is therefore the finest resolution whose safe radius
+    FOOTPRINT_SAFE_RADIUS_RAD (a lower bound of sigma) covers the
+    largest footprint_radius of the batch, and k = 1.  Rasters with no
+    bound (rotated, polar, non-finite) are kept.  An empty coverage
+    matches nothing."""
+    tf = np.asarray(transforms, dtype=np.float64).reshape(-1, 6)
+    n = tf.shape[0]
+    if not len(res_list):
+        return np.zeros(n, dtype=bool)
+    rad = footprint_radius(tf, ws, hs)
+    fin = rad[np.isfinite(rad)]
+    rp = footprint_prefilter_res(
+        float(fin.max()) if fin.size else 0.0,
+        min(int(h3_res), int(max(res_list))),
+    )
+    if rp is None:
+        return np.ones(n, dtype=bool)
+    return footprint_mask(tf, ws, hs, footprint_index(cov_cells, rp))
+
+
 def cells_to_raster(
     cells: np.ndarray,
     values: np.ndarray,

@@ -70,8 +70,25 @@ def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
 # (persisted, same object), so the index is cached the same way —
 # INPUT INDEX, not results: every action still probes it from scratch.
 _COV_INDEX_LOCK = threading.Lock()
-_COV_INDEX_CACHE: dict = {}  # (id(cov), attr) -> (cov, broadcast, meta)
+# (id(cov), attr) -> (cov, broadcast, res_list, n_cov, {rp: footprint_index})
+_COV_INDEX_CACHE: dict = {}
 _COV_INDEX_MAX = 8
+
+
+def _cached_index(key, cov):
+    with _COV_INDEX_LOCK:
+        hit = _COV_INDEX_CACHE.get(key)
+    return hit if hit is not None and hit[0] is cov else None
+
+
+def _cache_index(key, cov, bc, res_list, n_cov) -> None:
+    with _COV_INDEX_LOCK:
+        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
+            old = _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
+            # unpersist, not destroy: a DataFrame built on the evicted
+            # index still runs (its tasks re-fetch the value)
+            old[1].unpersist()
+        _COV_INDEX_CACHE[key] = (cov, bc, res_list, n_cov, {})
 
 
 def coverage_index(spark, cov: DataFrame, attr_col: str = "poly_id"):
@@ -81,10 +98,9 @@ def coverage_index(spark, cov: DataFrame, attr_col: str = "poly_id"):
     import numpy as np
 
     key = (id(cov), attr_col)
-    with _COV_INDEX_LOCK:
-        hit = _COV_INDEX_CACHE.get(key)
-        if hit is not None and hit[0] is cov:
-            return hit[1], hit[2], hit[3]
+    hit = _cached_index(key, cov)
+    if hit is not None:
+        return hit[1], hit[2], hit[3]
     cell_col = "__poly_cell" if "__poly_cell" in cov.columns else "cell"
     pdf = cov.select(
         F.col(cell_col).alias("cell"), F.col(attr_col)
@@ -102,53 +118,68 @@ def coverage_index(spark, cov: DataFrame, attr_col: str = "poly_id"):
     bc = spark.sparkContext.broadcast(
         (cells, attr_codes, attr_vals.astype(object))
     )
-    with _COV_INDEX_LOCK:
-        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
-            _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
-        _COV_INDEX_CACHE[key] = (cov, bc, res_list, len(cells))
+    _cache_index(key, cov, bc, res_list, len(cells))
     return bc, res_list, len(cells)
+
+
+def coverage_footprint_index(spark, cov: DataFrame, rp: int,
+                             attr_col: str = "poly_id") -> tuple:
+    """h3core.rasterh3.footprint_index of the coverage_index entry at
+    coarse resolution rp, built on the driver once per (coverage, rp)
+    and kept with the entry."""
+    from ..h3core.rasterh3 import footprint_index
+
+    bc, _, _ = coverage_index(spark, cov, attr_col)
+    entry = _cached_index((id(cov), attr_col), cov)
+    memo = entry[4] if entry is not None else {}
+    if rp not in memo:
+        memo[rp] = footprint_index(bc.value[0], rp)
+    return memo[rp]
 
 
 def _coverage_attr_index(spark, cov: DataFrame, attr_cols: tuple):
     """coverage_index generalized to several attribute columns: returns
     (broadcast[(cells_sorted, code_sorted, {col: values_by_code})],
-    res_list, n_cov) where `code` indexes the DISTINCT attr-row tuples.
+    res_list, n_cov) where `code` indexes the DISTINCT attr-row tuples
+    and the values are Arrow arrays (nulls and int64 stay exact).
     Cached per (coverage DataFrame object, attr_cols)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     key = (id(cov), attr_cols)
-    with _COV_INDEX_LOCK:
-        hit = _COV_INDEX_CACHE.get(key)
-        if hit is not None and hit[0] is cov:
-            return hit[1], hit[2], hit[3]
+    hit = _cached_index(key, cov)
+    if hit is not None:
+        return hit[1], hit[2], hit[3]
     cell_col = "__poly_cell" if "__poly_cell" in cov.columns else "cell"
-    pdf = cov.select(
+    tbl = cov.select(
         F.col(cell_col).alias("cell"), *[F.col(c) for c in attr_cols]
-    ).toPandas()
-    cells = pdf["cell"].to_numpy(np.int64)
-    # use_na_sentinel=False: a null attr value must stay a regular
-    # factor level (the -1 sentinel would collapse distinct
-    # null-containing tuples and wrap the code gather)
-    codes, uniques = pd.factorize(
-        pd.MultiIndex.from_frame(pdf[list(attr_cols)]),
-        use_na_sentinel=False,
+    ).toArrow()
+    cells = tbl.column("cell").to_numpy().astype(np.int64)
+    # per column: dictionary codes, null as one extra level; then codes
+    # of the distinct attr-row tuples
+    col_codes, col_vals = [], []
+    for c in attr_cols:
+        enc = tbl.column(c).combine_chunks().dictionary_encode()
+        dic = enc.dictionary
+        col_codes.append(
+            enc.indices.fill_null(len(dic)).to_numpy().astype(np.int64)
+        )
+        col_vals.append(pa.concat_arrays([dic, pa.nulls(1, dic.type)]))
+    uniq, codes = np.unique(
+        np.stack(col_codes, axis=1), axis=0, return_inverse=True
     )
     attrs = {
-        c: uniques.get_level_values(i).to_numpy(dtype=object)
+        c: col_vals[i].take(pa.array(uniq[:, i]))
         for i, c in enumerate(attr_cols)
     }
     order = np.argsort(cells, kind="stable")
     cells = cells[order]
-    codes = codes[order].astype(np.int64)
+    codes = codes.reshape(-1)[order].astype(np.int64)
     from ..h3core import index as IDX
 
     res_list = sorted(int(r) for r in np.unique(IDX.get_resolution(cells)))
     bc = spark.sparkContext.broadcast((cells, codes, attrs))
-    with _COV_INDEX_LOCK:
-        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
-            _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
-        _COV_INDEX_CACHE[key] = (cov, bc, res_list, len(cells))
+    _cache_index(key, cov, bc, res_list, len(cells))
     return bc, res_list, len(cells)
 
 
@@ -230,7 +261,7 @@ def _pip_join_mapside(
             for acol, pat in zip(attr_cols, attr_pa_types):
                 out = out.append_column(
                     pa.field(acol, pat),
-                    pa.array(attr_vals[acol][codes], type=pat),
+                    attr_vals[acol].take(pa.array(codes)).cast(pat),
                 )
             for ob in out.combine_chunks().to_batches():
                 yield ob
@@ -362,6 +393,8 @@ def pip_join(
         raise ValueError(
             "how must be 'inner', 'left_semi' or 'left_anti'"
         )
+    if strategy not in ("auto", "mapside"):
+        raise ValueError("strategy must be 'auto' or 'mapside'")
     if how in ("left_semi", "left_anti"):
         matched_cells = pip_join(
             left_cells.select(cell_col).distinct(),
@@ -374,6 +407,7 @@ def pip_join(
             how="inner",
             coverage=coverage,
             min_coverage_res=min_coverage_res,
+            strategy=strategy,
         ).select(cell_col).distinct()
         return left_cells.join(matched_cells, cell_col, how)
     if coverage is None:
@@ -415,11 +449,12 @@ def pip_join(
             and res_list
             and n_cov <= broadcast_threshold_rows
         ):
-            return _pip_join_mapside(
-                left_cells, cov, cell_col, attr_cols
-            )
-    elif strategy != "auto":
-        raise ValueError("strategy must be 'auto' or 'mapside'")
+            out = _pip_join_mapside(left_cells, cov, cell_col, attr_cols)
+            if coverage is None:
+                # the index is collected; the plan reads only the
+                # broadcast, so the coverage persisted above can go
+                cov.unpersist()
+            return out
     if not res_list:
         cov.unpersist()
         return left_cells.join(

@@ -43,6 +43,25 @@ budget (the same 2M-row threshold pip_join uses).
 
 Measured (same box, quiet windows, sf0.1 / 60k images):
 flagship raw8 9.77 s -> ~3 s; the png/jpeg legs inherit the same floor.
+
+Footprint prefilter (the Raptor rule: skip raster work no vector can
+reach).  Well under 1% of a globally spread corpus reaches a
+polygon set, yet every image used to pay decode and tiling, about 75% of
+the per-image kernel cost.  The fused kernel now generates every image
+(byte generation, JPEG encode included, stands in for the storage read)
+and then keeps only the images whose footprint can hold a tile cell with
+an ancestor in the coverage (h3core.rasterh3.footprint_mask); only those
+are decoded, tiled and probed.  The test is a provable superset: it
+works at a coarse resolution rp, probes grid_disk(k=1) of the rp cells
+of each image's corners and centre, and holds because tiling emits only
+cells whose centroid lies in the footprint, a descendant centroid
+drifts at most one rp cell from its rp-parent, and the farthest
+footprint point from a sample stays within the measured slack of that
+drift (footprint_prefilter states the bound).  rp is the finest
+resolution whose safe radius covers the largest corpus image
+(MAX_SIDE_PX): res 5 for res-9 tiling.  The probe sets are built once
+per coverage on the driver, with the cached coverage index.  The salted
+Catalyst fallback stays unpruned: it is the independent reference.
 """
 
 from __future__ import annotations
@@ -71,13 +90,33 @@ _BROADCAST_THRESHOLD_ROWS = 2_000_000
 from ..operators.spatial_join import coverage_index as _coverage_index
 
 
+def _footprint_index(spark, cov, res, res_list):
+    """The coverage's footprint-prefilter index at the finest coarse
+    resolution whose safe radius covers the largest synthetic image
+    (MAX_SIDE_PX square; a larger image would be kept unpruned)."""
+    from ..h3core.rasterh3 import footprint_prefilter_res, footprint_radius
+    from ..operators.spatial_join import coverage_footprint_index
+    from ..sources.images import MAX_SIDE_PX, PIXEL_DEG
+
+    radius = footprint_radius(
+        [PIXEL_DEG, 0.0, 0.0, 0.0, -PIXEL_DEG, 0.0],
+        [MAX_SIDE_PX], [MAX_SIDE_PX],
+    )[0]
+    rp = footprint_prefilter_res(radius, min(res, res_list[-1]))
+    return coverage_footprint_index(spark, cov, rp)
+
+
 def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
-                     batch_codecs=None):
+                     batch_codecs, fp_index):
     """The fused generate->decode->tile->PIP-assign->partial-rollup
     kernel (see module docstring).  Returns a mapInPandas function over
     `id` batches yielding (image_id, poly_id, n_tiles, sum_px) rows —
     exactly the per-(poly, image) granularity the round-7 plan reached
     after its tile explode + broadcast join + first groupBy.
+
+    fp_index (h3core.rasterh3.footprint_index of the coverage) drives
+    the footprint prefilter: after generation, only images whose
+    footprint can reach the coverage are decoded, tiled and probed.
 
     The fused stage runs ONE task wave (big tasks — guide §2.2), so the
     kernel bounds per-worker memory itself by processing the id range
@@ -93,7 +132,7 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
 
     def one_chunk(ids):
         from ..h3core import index as IDX
-        from ..h3core.rasterh3 import rasters_to_cells_batch
+        from ..h3core.rasterh3 import footprint_mask, rasters_to_cells_batch
         from ..sources.images import (
             PIXEL_DEG,
             decode_images_with,
@@ -103,27 +142,34 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
         cov_cells, cov_polys, poly_strs = bc.value
         pdf = gen_fn(ids)
         lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
-        blobs = pdf["bytes"].tolist()
         wcol = pdf["w"].to_numpy(np.int64)
         hcol = pdf["h"].to_numpy(np.int64)
+        tfs = np.zeros((len(ids), 6))
+        tfs[:, 0] = PIXEL_DEG
+        tfs[:, 2] = lng
+        tfs[:, 4] = -PIXEL_DEG
+        tfs[:, 5] = lat
+        # footprint prefilter: `sel` are the images that can reach the
+        # coverage; only they are decoded, tiled and probed
+        sel = np.flatnonzero(footprint_mask(tfs, wcol, hcol, fp_index))
+        if sel.size == 0:
+            return pd.DataFrame(_EMPTY)
+        blobs = pdf["bytes"].tolist()
         fmts = pdf["fmt"].tolist()
         # batch path (round 8): fmts with a registered batch decoder
         # whose per-image codec is unoverridden decode via the lockstep
         # batch decoder; a codec_override disables it for that fmt, so
         # the override seam's semantics are unchanged
         bands = decode_images_with(
-            codecs, batch_codecs or {}, blobs, wcol, hcol, fmts
+            codecs, batch_codecs, [blobs[i] for i in sel],
+            wcol[sel], hcol[sel], [fmts[i] for i in sel],
         )
-        tfs = np.zeros((len(ids), 6))
-        tfs[:, 0] = PIXEL_DEG
-        tfs[:, 2] = lng
-        tfs[:, 4] = -PIXEL_DEG
-        tfs[:, 5] = lat
         img_idx, vals, cells = rasters_to_cells_batch(
-            bands, tfs, res, nodata_value=nodata
+            bands, tfs[sel], res, nodata_value=nodata
         )
         if cells.size == 0:
             return pd.DataFrame(_EMPTY)
+        img_idx = sel[img_idx]
         # --- map-side PIP assign: probe the sorted coverage with the
         # tile's bit-math ancestor at every coverage resolution (the
         # exact condition pip_join's equi-join evaluates)
@@ -251,7 +297,18 @@ def flagship(
     decode -> tile -> map-side PIP join -> per-(poly, image) partial
     aggregation into one Python stage (module docstring); `salt=` or a
     coverage past the broadcast budget falls back to the round-7
-    Catalyst pip_join plan, which remains the general operator."""
+    Catalyst pip_join plan, which remains the general operator.
+
+    Footprint prefilter (fused path only): every image is generated,
+    but only images whose footprint can reach the coverage are decoded
+    and tiled — a provable superset of the contributing images (bound
+    in h3core.rasterh3.footprint_prefilter), so the rollup is
+    unchanged.  Trade-offs: a corrupt blob whose footprint misses every
+    polygon is no longer decoded, so it no longer raises; and
+    `codec_override` now sees only the surviving images.  The salted
+    fallback decodes everything.  perfbench's
+    sources.decode_us_per_image still times the codec on all images,
+    so the codec layer stays measured."""
     if fmt == "png":
         from ..sources.png import register_png_codec
 
@@ -320,7 +377,9 @@ def flagship(
             gen_fn = _gen_fn_for(fmt, seed)
             per_img = spark.range(0, n_images, 1, parts).mapInPandas(
                 _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, 0,
-                                 batch_codecs),
+                                 batch_codecs,
+                                 _footprint_index(spark, cov, res,
+                                                  res_list)),
                 "image_id string, poly_id string, "
                 "n_tiles long, sum_px long, caption string",
             )

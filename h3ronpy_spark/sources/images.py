@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 PIXEL_DEG = 0.001
+# the image generators draw both sides from [16, MAX_SIDE_PX]
+MAX_SIDE_PX = 64
 
 IMAGES_SCHEMA = T.StructType(
     [
@@ -71,8 +73,8 @@ def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
     """Generate the image rows for the given int64 ids (row-local)."""
     ids = np.asarray(ids, dtype=np.int64)
     ph = phash_of_ids(ids, seed)
-    w = (16 + (ph % np.uint64(49))).astype(np.int32)
-    h = (16 + ((ph >> np.uint64(8)) % np.uint64(49))).astype(np.int32)
+    w = (16 + (ph % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    h = (16 + ((ph >> np.uint64(8)) % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
     blobs = []
     for i in range(len(ids)):
         # deterministic pixel grid: value = (x*3 + y*7 + phash) & 0xFF,
@@ -426,8 +428,8 @@ def gen_images_typed_pdf(
     dt = np.dtype(RAW_DTYPES[fmt])
     ids = np.asarray(ids, dtype=np.int64)
     ph = phash_of_ids(ids, seed)
-    w = (16 + (ph % np.uint64(49))).astype(np.int32)
-    h = (16 + ((ph >> np.uint64(8)) % np.uint64(49))).astype(np.int32)
+    w = (16 + (ph % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    h = (16 + ((ph >> np.uint64(8)) % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
     blobs = []
     for i in range(len(ids)):
         hh, ww = int(h[i]), int(w[i])

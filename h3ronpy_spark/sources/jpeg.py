@@ -2091,7 +2091,12 @@ def _entropy_decode_gray_lockstep(datas, nblocks, dcp, acp):
     nblk0 = np.asarray(nblocks, np.int64)
     sid = np.arange(S, dtype=np.int64)
     bit = starts * 8
-    maxbit = (starts + lens + 8) * 8
+    # the scalar reader's refill bound: it pads 8 bytes, refills 4
+    # bytes at a time, and raises once it needs bits while fewer than
+    # 32 remain, i.e. before a token starting past bit
+    # 32 * ((len + 8) // 4) - 32.  A lane past it goes to the scalar
+    # path and raises there.
+    maxbit = starts * 8 + 32 * ((lens + 8) // 4) - 32
     blk = np.zeros(S, np.int64)
     k = np.zeros(S, np.int64)
     pred = np.zeros(S, np.int64)

@@ -88,6 +88,50 @@ def test_batch_malformed_raises_like_scalar():
     assert _same(decode_jpeg_batch([good])[0], decode_jpeg(good))
 
 
+def _all_ones_stream(nblocks: int, nbytes: int) -> bytes:
+    """A 8 x (8 * nblocks) gray baseline stream whose one-bit Huffman
+    codes make every all-ones bit string valid: DC "1" is size 0, AC "1"
+    is EOB, so each block is two 1-bits.  The entropy segment holds
+    `nbytes` 0xFF bytes (4 blocks each); the remaining blocks can only
+    come from the reader's 0xFF overdraw pad, which never runs into an
+    invalid code."""
+    import struct
+
+    def seg(marker, body):
+        return b"\xff" + bytes([marker]) + struct.pack(">H", len(body) + 2) + body
+
+    bits = bytes([2] + [0] * 15)
+    return (
+        b"\xff\xd8"
+        + seg(0xDB, b"\x00" + bytes([1] * 64))
+        + seg(0xC0, struct.pack(">BHHB", 8, 8, 8 * nblocks, 1) + b"\x01\x11\x00")
+        + seg(0xC4, b"\x00" + bits + b"\x01\x00" + b"\x10" + bits + b"\x01\x00")
+        + seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
+        + b"\xff\x00" * nbytes
+        + b"\xff\xd9"
+    )
+
+
+@pytest.mark.parametrize(
+    "nblocks,nbytes",
+    # the scalar reader decodes at most 32 * ((nbytes + 8) // 4) - 32
+    # bits: 32 blocks for 4 or 5 data bytes
+    [(32, 4), (33, 4), (40, 4), (48, 4), (32, 5), (34, 5), (36, 5)],
+)
+def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes):
+    blob = _all_ones_stream(nblocks, nbytes)
+    try:
+        want = decode_jpeg(blob)
+    except ValueError:
+        want = None
+    assert (want is None) == (nblocks > 32)
+    if want is None:
+        with pytest.raises(ValueError):
+            decode_jpeg_batch([blob])
+    else:
+        assert _same(decode_jpeg_batch([blob])[0], want)
+
+
 def test_decode_images_with_batch_and_override():
     from h3ronpy_spark.sources.images import (
         batch_codec_snapshot,

@@ -111,3 +111,75 @@ def test_mapside_falls_back_when_ineligible(spark, setup):
     )
     with pytest.raises(ValueError):
         pip_join(cells, polys, res=8, coverage=cov, strategy="bogus")
+
+
+def test_strategy_validated_for_every_how(spark, setup):
+    polys, cov, cells = setup
+    for how in ("inner", "left_semi", "left_anti"):
+        with pytest.raises(ValueError, match="strategy"):
+            pip_join(cells, polys, res=8, coverage=cov, how=how,
+                     strategy="bogus")
+
+
+def test_mapside_semi_anti_match_auto(spark, setup):
+    polys, cov, cells = setup
+    for how in ("left_semi", "left_anti"):
+        ms = pip_join(cells, polys, res=8, coverage=cov, how=how,
+                      strategy="mapside")
+        assert "MapInArrow" in ms._jdf.queryExecution().toString()
+        assert _rows(ms) == _rows(
+            pip_join(cells, polys, res=8, coverage=cov, how=how)
+        )
+
+
+def _null_attr_coverage(cov, col):
+    # every third polygon gets a null attribute; the int64 values sit
+    # past 2^53, where a float64 round trip would change them
+    drop = F.pmod(F.xxhash64("poly_id"), F.lit(3)) == 0
+    if col == "label":
+        val = F.concat(F.lit("L-"), F.col("poly_id"))
+    else:
+        val = F.xxhash64("poly_id").bitwiseOR(F.lit(1 << 60))
+    return cov.select(
+        "__poly_cell", F.when(drop, None).otherwise(val).alias(col)
+    )
+
+
+@pytest.mark.parametrize("col", ["label", "big"])
+def test_mapside_null_attribute_matches_auto(spark, setup, col):
+    polys, cov, cells = setup
+    ncov = _null_attr_coverage(cov, col)
+    auto = _rows(pip_join(cells, polys, res=8, coverage=ncov))
+    ms = _rows(pip_join(cells, polys, res=8, coverage=ncov,
+                        strategy="mapside"))
+    assert ms == auto
+    vals = [r[-1] for r in auto]
+    assert None in vals and any(v is not None for v in vals)
+    if col == "big":
+        assert any(v is not None and v > 2**53 for v in vals)
+
+
+def test_mapside_leaves_no_persisted_coverage(spark, setup):
+    polys, _cov, cells = setup
+    few = polys.limit(4)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        pip_join(cells, few, res=8, strategy="mapside").count()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_evicted_index_dataframe_still_runs(spark, setup):
+    from h3ronpy_spark.operators.spatial_join import (
+        _COV_INDEX_MAX,
+        coverage_index,
+    )
+
+    polys, cov, cells = setup
+    own = cov.select("*")
+    df = pip_join(cells, polys, res=8, coverage=own, strategy="mapside")
+    want = _rows(df)
+    # new coverage objects miss the cache and evict the oldest entries
+    for _ in range(_COV_INDEX_MAX + 1):
+        coverage_index(spark, cov.select("*"))
+    assert _rows(df) == want
