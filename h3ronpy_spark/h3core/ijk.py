@@ -189,10 +189,6 @@ def rotate60ccw(ijk: np.ndarray) -> np.ndarray:
     return _lin(ijk, (1, 1, 0), (0, 1, 1), (1, 0, 1))
 
 
-def rotate60cw(ijk: np.ndarray) -> np.ndarray:
-    return _lin(ijk, (1, 0, 1), (1, 1, 0), (0, 1, 1))
-
-
 def neighbor(ijk: np.ndarray, digit: np.ndarray) -> np.ndarray:
     """Translate by the unit vector of `digit` (broadcastable int array)."""
     digit = np.asarray(digit, dtype=np.int64)
@@ -207,9 +203,3 @@ def unit_ijk_to_digit(ijk: np.ndarray) -> np.ndarray:
         match = np.all(n == UNIT_VECS[d], axis=-1)
         dig = np.where(match, d, dig)
     return dig
-
-
-def ijk_distance(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Hex grid distance between two IJK+ coords (same plane)."""
-    d = normalize(np.asarray(a) - np.asarray(b))
-    return np.max(np.abs(d), axis=-1)

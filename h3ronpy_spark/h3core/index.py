@@ -53,12 +53,6 @@ def get_base_cell(h) -> np.ndarray:
     return ((_u(h) >> _U(45)) & _U(0x7F)).astype(np.int64)
 
 
-def get_digit(h, r) -> np.ndarray:
-    """Digit at res r (1-based). r may be scalar or array."""
-    shift = (_U(45) - _U(3) * np.asarray(r, dtype=np.uint64)).astype(np.uint64)
-    return ((_u(h) >> shift) & _U(7)).astype(np.int64)
-
-
 def get_digits(h) -> np.ndarray:
     """(N,) indexes -> (N, 15) digit array for res 1..15."""
     u = _u(h)
@@ -101,19 +95,6 @@ def is_pentagon(h) -> np.ndarray:
     return pent_bc & all_zero
 
 
-def leading_nonzero_digit(h) -> np.ndarray:
-    """First nonzero digit of each index (0 if none)."""
-    digits = get_digits(h)
-    res = get_resolution(h)
-    rr = np.arange(1, 16)
-    in_range = rr <= res[..., None]
-    d = np.where(in_range, digits, 0)
-    nz = d != 0
-    first = np.argmax(nz, axis=-1)
-    has = nz.any(axis=-1)
-    return np.where(has, np.take_along_axis(d, first[..., None], axis=-1)[..., 0], 0)
-
-
 def is_valid_cell(h) -> np.ndarray:
     """Full H3 cell-index validation, vectorized."""
     u = _u(h)
@@ -141,17 +122,6 @@ def is_valid_cell(h) -> np.ndarray:
     return ok
 
 
-def rotate60(h, ccw: bool) -> np.ndarray:
-    """Rotate all digits of each index by 60 degrees."""
-    digits = get_digits(h)
-    table = IJK.DIGIT_ROT_CCW if ccw else IJK.DIGIT_ROT_CW
-    res = get_resolution(h)
-    rr = np.arange(1, 16)
-    in_range = rr <= res[..., None]
-    nd = np.where(in_range, table[digits], digits)
-    return build_cell(get_base_cell(h), res, nd)
-
-
 def cell_to_parent(h, parent_res) -> np.ndarray:
     """Parent at coarser resolution; -1 (invalid) where parent_res > res.
 
@@ -170,6 +140,33 @@ def cell_to_parent(h, parent_res) -> np.ndarray:
     out = out | mask_bits
     bad = parent_res > res
     return np.where(bad, np.int64(-1), _i(out))
+
+
+def probe_ancestors(
+    cells, sorted_cov, res_list
+) -> tuple[np.ndarray, np.ndarray]:
+    """Point-in-coverage probe: every (row, pos) pair where the ancestor
+    of cells[row] at a resolution in res_list equals sorted_cov[pos].
+
+    sorted_cov is ascending and may repeat a cell (overlapping polygons);
+    each copy is a pair.  A row coarser than r has parent -1 at r, which
+    matches no valid cell.  Pairs come grouped by res_list order, rows
+    ascending within a resolution."""
+    cells = np.asarray(cells, dtype=np.int64)
+    rows = [np.empty(0, np.int64)]
+    pos = [np.empty(0, np.int64)]
+    for r in res_list:
+        par = cell_to_parent(cells, r)
+        lo = np.searchsorted(sorted_cov, par, "left")
+        cnt = np.searchsorted(sorted_cov, par, "right") - lo
+        hit = np.flatnonzero(cnt)
+        reps = cnt[hit]
+        rows.append(np.repeat(hit, reps))
+        # run k of length reps[k] covers lo[hit[k]] .. lo[hit[k]] + reps[k] - 1
+        run_start = np.cumsum(reps) - reps
+        pos.append(np.arange(int(reps.sum()), dtype=np.int64)
+                   + np.repeat(lo[hit] - run_start, reps))
+    return np.concatenate(rows), np.concatenate(pos)
 
 
 def children_count(h, child_res) -> np.ndarray:

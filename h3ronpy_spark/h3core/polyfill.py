@@ -111,28 +111,6 @@ def _pip(plng: np.ndarray, plat: np.ndarray, rings: list[np.ndarray]) -> np.ndar
     return inside
 
 
-def _seg_intersect(a0, a1, b0, b1) -> np.ndarray:
-    """Proper segment intersection test, vectorized: a* (N,2) vs b* (M,2)
-    -> (N, M) bool."""
-
-    def cross(o, d, p):
-        return d[..., 0] * (p[..., 1] - o[..., 1]) - d[..., 1] * (
-            p[..., 0] - o[..., 0]
-        )
-
-    da = a1 - a0  # (N,2)
-    db = b1 - b0  # (M,2)
-    o = a0[:, None, :]
-    d = da[:, None, :]
-    s1 = cross(o, d, b0[None, :, :])
-    s2 = cross(o, d, b1[None, :, :])
-    o2 = b0[None, :, :]
-    d2 = db[None, :, :]
-    s3 = cross(o2, d2, a0[:, None, :])
-    s4 = cross(o2, d2, a1[:, None, :])
-    return (s1 * s2 < 0) & (s3 * s4 < 0)
-
-
 def _seg_intersect_pairs(a0, a1, b0, b1) -> np.ndarray:
     """Proper segment intersection, paired: a*/b* all (P, 2) -> (P,) bool."""
 

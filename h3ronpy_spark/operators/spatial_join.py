@@ -19,6 +19,9 @@ Strategy chooser (SURVEY.md §4.2 custom item 1):
     big side — the plan every 100-TB run wants
   * otherwise -> shuffle hash join on the prefix key, with optional key
     salting for skewed dense regions on top of AQE skew handling
+  * strategy='mapside' (and the fused flagship) -> one mapInArrow probe
+    of a cached broadcast coverage index, when mapside_index finds the
+    coverage non-empty and within the same budget
 """
 
 from __future__ import annotations
@@ -30,23 +33,27 @@ from pyspark.sql import functions as F
 
 from .. import functions as H
 
-# round-8: pip_join runs two metadata jobs per call on its coverage
-# (row count + distinct-resolution collect).  Callers amortize the
-# coverage itself across many joins (persisted, passed as the same
-# DataFrame object), so the metadata is cached per DataFrame object the
-# same way — measured ~0.3-0.4 s saved per call on a 329k-row coverage.
-# This caches INPUT metadata, not results; the join recomputes fully.
+# Input metadata of a coverage (row count, distinct resolutions), cached
+# per DataFrame object: callers amortize one persisted coverage across
+# many joins, and each lookup otherwise costs two Spark jobs.  Results
+# are never cached; every join recomputes fully.
 _COV_META_LOCK = threading.Lock()
 _COV_META_CACHE: dict = {}  # id(df) -> (df, n_cov, res_list)
 _COV_META_MAX = 16
 
 
-def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
-    key = id(cov)
+def _seed_meta(cov: DataFrame, n_cov: int, res_list: list[int]) -> None:
     with _COV_META_LOCK:
-        hit = _COV_META_CACHE.get(key)
-        if hit is not None and hit[0] is cov:
-            return hit[1], hit[2]
+        if len(_COV_META_CACHE) >= _COV_META_MAX:
+            _COV_META_CACHE.pop(next(iter(_COV_META_CACHE)))
+        _COV_META_CACHE[id(cov)] = (cov, n_cov, res_list)
+
+
+def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
+    with _COV_META_LOCK:
+        hit = _COV_META_CACHE.get(id(cov))
+    if hit is not None and hit[0] is cov:
+        return hit[1], hit[2]
     n_cov = cov.count()
     res_list = sorted(
         r[0]
@@ -56,21 +63,19 @@ def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
         .distinct()
         .collect()
     )
-    with _COV_META_LOCK:
-        if len(_COV_META_CACHE) >= _COV_META_MAX:
-            _COV_META_CACHE.pop(next(iter(_COV_META_CACHE)))
-        _COV_META_CACHE[key] = (cov, n_cov, res_list)
+    _seed_meta(cov, n_cov, res_list)
     return n_cov, res_list
 
 
-# coverage-index cache (round 8, moved here from plans/flagship so the
-# generic pip_join can offer the same map-side execution strategy): one
-# collected+sorted numpy index per (coverage DataFrame object, attr
-# column).  Callers amortize the coverage itself across many joins
-# (persisted, same object), so the index is cached the same way —
-# INPUT INDEX, not results: every action still probes it from scratch.
+# Coverage rows a map-side probe or a broadcast join may ship to every
+# executor; a larger coverage takes the shuffle join.
+BROADCAST_BUDGET_ROWS = 2_000_000
+
+# The collected coverage index, cached per (DataFrame object, attribute
+# columns) like the metadata above: an input index, not results.
 _COV_INDEX_LOCK = threading.Lock()
-# (id(cov), attr) -> (cov, broadcast, res_list, n_cov, {rp: footprint_index})
+# (id(cov), attr_cols) ->
+#     (cov, broadcast, res_list, n_cov, {rp: footprint_index})
 _COV_INDEX_CACHE: dict = {}
 _COV_INDEX_MAX = 8
 
@@ -81,70 +86,17 @@ def _cached_index(key, cov):
     return hit if hit is not None and hit[0] is cov else None
 
 
-def _cache_index(key, cov, bc, res_list, n_cov) -> None:
-    with _COV_INDEX_LOCK:
-        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
-            old = _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
-            # unpersist, not destroy: a DataFrame built on the evicted
-            # index still runs (its tasks re-fetch the value)
-            old[1].unpersist()
-        _COV_INDEX_CACHE[key] = (cov, bc, res_list, n_cov, {})
-
-
-def coverage_index(spark, cov: DataFrame, attr_col: str = "poly_id"):
-    """Collect a coverage DataFrame into a broadcast numpy index:
-    (broadcast[(cells_sorted, attr_code_sorted, attr_values)],
-    res_list, n_cov).  Cached per (DataFrame object, attr_col)."""
-    import numpy as np
-
-    key = (id(cov), attr_col)
-    hit = _cached_index(key, cov)
-    if hit is not None:
-        return hit[1], hit[2], hit[3]
-    cell_col = "__poly_cell" if "__poly_cell" in cov.columns else "cell"
-    pdf = cov.select(
-        F.col(cell_col).alias("cell"), F.col(attr_col)
-    ).toPandas()
-    cells = pdf["cell"].to_numpy(np.int64)
-    attr_vals, attr_codes = np.unique(
-        pdf[attr_col].to_numpy(dtype=object), return_inverse=True
-    )
-    order = np.argsort(cells, kind="stable")
-    cells = cells[order]
-    attr_codes = attr_codes[order].astype(np.int64)
-    from ..h3core import index as IDX
-
-    res_list = sorted(int(r) for r in np.unique(IDX.get_resolution(cells)))
-    bc = spark.sparkContext.broadcast(
-        (cells, attr_codes, attr_vals.astype(object))
-    )
-    _cache_index(key, cov, bc, res_list, len(cells))
-    return bc, res_list, len(cells)
-
-
-def coverage_footprint_index(spark, cov: DataFrame, rp: int,
-                             attr_col: str = "poly_id") -> tuple:
-    """h3core.rasterh3.footprint_index of the coverage_index entry at
-    coarse resolution rp, built on the driver once per (coverage, rp)
-    and kept with the entry."""
-    from ..h3core.rasterh3 import footprint_index
-
-    bc, _, _ = coverage_index(spark, cov, attr_col)
-    entry = _cached_index((id(cov), attr_col), cov)
-    memo = entry[4] if entry is not None else {}
-    if rp not in memo:
-        memo[rp] = footprint_index(bc.value[0], rp)
-    return memo[rp]
-
-
-def _coverage_attr_index(spark, cov: DataFrame, attr_cols: tuple):
-    """coverage_index generalized to several attribute columns: returns
-    (broadcast[(cells_sorted, code_sorted, {col: values_by_code})],
-    res_list, n_cov) where `code` indexes the DISTINCT attr-row tuples
-    and the values are Arrow arrays (nulls and int64 stay exact).
-    Cached per (coverage DataFrame object, attr_cols)."""
+def coverage_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",)):
+    """Collect a coverage DataFrame into a broadcast index for the
+    map-side probe: returns (broadcast[(cells_sorted, codes_sorted,
+    {col: values_by_code})], res_list, n_cov).  `code` indexes the
+    distinct attribute-row tuples; the values are Arrow arrays, so nulls
+    and int64 past 2^53 stay exact.  Cached per (DataFrame object,
+    attr_cols), and seeds the coverage's metadata cache."""
     import numpy as np
     import pyarrow as pa
+
+    from ..h3core import index as IDX
 
     key = (id(cov), attr_cols)
     hit = _cached_index(key, cov)
@@ -155,56 +107,85 @@ def _coverage_attr_index(spark, cov: DataFrame, attr_cols: tuple):
         F.col(cell_col).alias("cell"), *[F.col(c) for c in attr_cols]
     ).toArrow()
     cells = tbl.column("cell").to_numpy().astype(np.int64)
-    # per column: dictionary codes, null as one extra level; then codes
-    # of the distinct attr-row tuples
+    # per column: dictionary codes, null as one extra level.  `tup`
+    # numbers the distinct attr-row tuples in lexicographic order, folded
+    # one column at a time with 1-D np.unique (np.unique(axis=0) on the
+    # stacked codes is ~15x slower)
+    tup = np.zeros(len(cells), np.int64)
     col_codes, col_vals = [], []
     for c in attr_cols:
         enc = tbl.column(c).combine_chunks().dictionary_encode()
         dic = enc.dictionary
-        col_codes.append(
-            enc.indices.fill_null(len(dic)).to_numpy().astype(np.int64)
-        )
+        cc = enc.indices.fill_null(len(dic)).to_numpy().astype(np.int64)
+        _, tup = np.unique(tup * (len(dic) + 1) + cc, return_inverse=True)
+        col_codes.append(cc)
         col_vals.append(pa.concat_arrays([dic, pa.nulls(1, dic.type)]))
-    uniq, codes = np.unique(
-        np.stack(col_codes, axis=1), axis=0, return_inverse=True
-    )
+    _, first = np.unique(tup, return_index=True)
     attrs = {
-        c: col_vals[i].take(pa.array(uniq[:, i]))
+        c: col_vals[i].take(pa.array(col_codes[i][first]))
         for i, c in enumerate(attr_cols)
     }
     order = np.argsort(cells, kind="stable")
     cells = cells[order]
-    codes = codes.reshape(-1)[order].astype(np.int64)
-    from ..h3core import index as IDX
-
+    codes = tup[order].astype(np.int64)
     res_list = sorted(int(r) for r in np.unique(IDX.get_resolution(cells)))
     bc = spark.sparkContext.broadcast((cells, codes, attrs))
-    _cache_index(key, cov, bc, res_list, len(cells))
+    with _COV_INDEX_LOCK:
+        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
+            old = _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
+            # unpersist, not destroy: a DataFrame built on the evicted
+            # index still runs (its tasks re-fetch the value)
+            old[1].unpersist()
+        _COV_INDEX_CACHE[key] = (cov, bc, res_list, len(cells), {})
+    _seed_meta(cov, len(cells), res_list)
     return bc, res_list, len(cells)
 
 
+def mapside_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",),
+                  max_rows: int | None = None):
+    """coverage_index(spark, cov, attr_cols) when a map-side probe may
+    run, else None: the coverage is empty or has more than `max_rows`
+    rows (default BROADCAST_BUDGET_ROWS).  The rows are counted before
+    anything is collected."""
+    n_cov, res_list = _coverage_meta(cov)
+    budget = BROADCAST_BUDGET_ROWS if max_rows is None else max_rows
+    if not res_list or n_cov > budget:
+        return None
+    return coverage_index(spark, cov, attr_cols)
+
+
+def coverage_footprint_index(spark, cov: DataFrame, rp: int) -> tuple:
+    """h3core.rasterh3.footprint_index of the coverage_index entry at
+    coarse resolution rp, built on the driver once per (coverage, rp)
+    and kept with the entry."""
+    from ..h3core.rasterh3 import footprint_index
+
+    bc, _, _ = coverage_index(spark, cov)
+    entry = _cached_index((id(cov), ("poly_id",)), cov)
+    memo = entry[4] if entry is not None else {}
+    if rp not in memo:
+        memo[rp] = footprint_index(bc.value[0], rp)
+    return memo[rp]
+
+
 def _pip_join_mapside(
-    left: DataFrame, cov: DataFrame, cell_col: str, attr_cols: tuple
+    left: DataFrame, cov: DataFrame, cell_col: str, attr_cols: tuple, index
 ) -> DataFrame:
-    """The map-side execution of pip_join's inner equi-join (round 8):
-    probe an sc.broadcast sorted coverage index with each row's
-    bit-math ancestors — the exact match condition the Catalyst
-    BroadcastHashJoin evaluates — inside one mapInPandas pass.
+    """The map-side execution of pip_join's inner equi-join: probe the
+    broadcast coverage `index` (mapside_index) with each row's
+    bit-math ancestors, the exact match condition the Catalyst
+    BroadcastHashJoin evaluates, in one mapInArrow pass.
 
-    Why: every Catalyst broadcast relation is rebuilt single-threaded
-    on the driver PER ACTION (~0.3-0.5 s at 329k coverage rows), while
-    the numpy index is collected once per coverage object (cached) and
-    shipped as a plain broadcast variable.  Proven in the fused
-    flagship first; row-identical to the equi-join up to within-
-    partition order (pinned by test) — use only through
-    pip_join(strategy='mapside'), which checks the preconditions."""
+    Why: a Catalyst broadcast relation is rebuilt single-threaded on
+    the driver per action (~0.3-0.5 s at 329k coverage rows), while
+    the index is collected once per coverage object and shipped as a
+    plain broadcast variable.  Row-identical to the equi-join up to
+    within-partition order (pinned by test)."""
     import numpy as np
-
-    spark = left.sparkSession
-    bc, res_list, _n = _coverage_attr_index(spark, cov, attr_cols)
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
+    bc, res_list, _ = index
     out_schema = StructType(
         list(left.schema.fields)
         + [
@@ -227,41 +208,16 @@ def _pip_join_mapside(
         for rb in batches:
             tbl = pa.Table.from_batches([rb])
             col = tbl.column(cell_col).combine_chunks()
-            pos = np.flatnonzero(col.is_valid().to_numpy(
+            valid = np.flatnonzero(col.is_valid().to_numpy(
                 zero_copy_only=False))
-            c = col.fill_null(0).to_numpy()[pos]
-            cres = IDX.get_resolution(c)
-            out_src = []
-            out_code = []
-            for r in res_list:
-                # rows coarser than this coverage res cannot match at
-                # it (the equi-join's NULL-parent filter)
-                sel = np.flatnonzero(cres >= r)
-                par = IDX.cell_to_parent(c[sel], r)
-                lo = np.searchsorted(cov_cells, par, "left")
-                hi = np.searchsorted(cov_cells, par, "right")
-                cnt = hi - lo
-                nz = np.flatnonzero(cnt)
-                if nz.size == 0:
-                    continue
-                reps = cnt[nz]
-                base = lo[nz]
-                off = np.arange(
-                    int(reps.sum()), dtype=np.int64
-                ) - np.repeat(np.cumsum(reps) - reps, reps)
-                out_src.append(pos[sel[np.repeat(nz, reps)]])
-                out_code.append(cov_codes[np.repeat(base, reps) + off])
-            if out_src:
-                src = np.concatenate(out_src)
-                codes = np.concatenate(out_code)
-            else:
-                src = np.empty(0, np.int64)
-                codes = np.empty(0, np.int64)
-            out = tbl.take(pa.array(src))
+            rows, pos = IDX.probe_ancestors(
+                col.fill_null(0).to_numpy()[valid], cov_cells, res_list)
+            out = tbl.take(pa.array(valid[rows]))
+            codes = pa.array(cov_codes[pos])
             for acol, pat in zip(attr_cols, attr_pa_types):
                 out = out.append_column(
                     pa.field(acol, pat),
-                    attr_vals[acol].take(pa.array(codes)).cast(pat),
+                    attr_vals[acol].take(codes).cast(pat),
                 )
             for ob in out.combine_chunks().to_batches():
                 yield ob
@@ -332,7 +288,7 @@ def pip_join(
     res: int,
     mode: str = "containscentroid",
     cell_col: str = "cell",
-    broadcast_threshold_rows: int = 2_000_000,
+    broadcast_threshold_rows: int = BROADCAST_BUDGET_ROWS,
     salt: int | None = None,
     how: str = "inner",
     coverage: DataFrame | None = None,
@@ -430,31 +386,24 @@ def pip_join(
                 "coverage; pre-lift a provided coverage with "
                 "lift_coverage(...) and persist it"
             )
-    n_cov, res_list = _coverage_meta(cov)
-    # strategy='mapside' (round 8): execute the inner equi-join as a
-    # map-side probe of a cached broadcast numpy index instead of a
-    # Catalyst BroadcastHashJoin, skipping the per-action
-    # driver-serial hash-relation build (see _pip_join_mapside).
-    # Preconditions — inner join, no salt, single coverage attribute,
-    # coverage within the broadcast budget, non-empty — else fall
-    # through to the general plan ('auto' is unchanged round-7
-    # behavior; callers amortizing one persisted coverage across many
-    # actions are who this pays for).
-    if strategy == "mapside":
-        attr_cols = tuple(c for c in cov.columns if c != "__poly_cell")
-        if (
-            how == "inner"
-            and not salt
-            and attr_cols
-            and res_list
-            and n_cov <= broadcast_threshold_rows
-        ):
-            out = _pip_join_mapside(left_cells, cov, cell_col, attr_cols)
+    # strategy='mapside': run the inner join as a map-side probe of the
+    # cached coverage index instead of a Catalyst BroadcastHashJoin,
+    # skipping the per-action driver-serial hash-relation build.  Needs
+    # an inner join, no salt, an attribute column and a non-empty
+    # coverage within the budget; otherwise the general plan below runs.
+    attr_cols = tuple(c for c in cov.columns if c != "__poly_cell")
+    if strategy == "mapside" and how == "inner" and not salt and attr_cols:
+        index = mapside_index(left_cells.sparkSession, cov, attr_cols,
+                              broadcast_threshold_rows)
+        if index is not None:
+            out = _pip_join_mapside(left_cells, cov, cell_col, attr_cols,
+                                    index)
             if coverage is None:
                 # the index is collected; the plan reads only the
                 # broadcast, so the coverage persisted above can go
                 cov.unpersist()
             return out
+    n_cov, res_list = _coverage_meta(cov)
     if not res_list:
         cov.unpersist()
         return left_cells.join(

@@ -206,15 +206,6 @@ def try_claim_shard(
     return None
 
 
-def release_claim(base: str, sid: int) -> None:
-    """Best-effort unlink of a claim file (legacy helper; prefer
-    ShardClaim.release which also drops the lock)."""
-    try:
-        os.unlink(_claim_path(base, sid))
-    except OSError:
-        pass
-
-
 def run_sharded(
     spark: SparkSession,
     base: str,

@@ -8,60 +8,32 @@ Touches every layer: encode kernel, raster tiling, polyfill, explode,
 broadcast-vs-shuffle join, hash aggregation.  This is `entry(spark)` and
 the bench job.
 
-Round-8 (optimization round) restructure — guide §8 "decide with small
-rows, move big rows once" + §2.3 "aggregate before you shuffle":
+Default path: one fused Python stage, no joins.  A mapInPandas over
+spark.range ids generates each image (byte generation, JPEG encode
+included, stands in for the storage read), keeps only the images whose
+footprint can reach the coverage (h3core.rasterh3.footprint_mask),
+decodes them through the codec registry snapshot, tiles them, assigns
+each tile to polygons by probing the broadcast coverage index with its
+bit-math ancestors (h3core.index.probe_ancestors, the condition
+pip_join's equi-join evaluates) and rolls up per (poly, image); the
+caption rides those rollup rows.  The coverage index is built once per
+coverage DataFrame (operators.spatial_join.coverage_index) and cached,
+so a scan that reuses one persisted coverage collects it once.
 
-The round-7 plan ran FOUR py<->JVM Arrow crossings and one driver-built
-broadcast per action: synth mapInPandas -> Arrow out (96 MB of image
-blobs) -> Arrow in -> tile mapInPandas -> Arrow out (~7M exploded tile
-rows, each duplicating a 15-byte image_id string) -> x6 ancestor explode
--> BroadcastHashJoin against a 468k-row coverage whose hash relation is
-built SINGLE-THREADED on the driver per action (~1-2 s serial, the
-round-3 Amdahl lesson) -> groupBy(poly, image).  Stage isolation
-(bench_extra.py, OPTIMIZATION_r08.md) measured: synth noop 1.7 s, tiles
-noop 5.3 s, joined 6.0 s, full 7.9-9.8 s — i.e. >6 s of the wall was
-Arrow plumbing + broadcast build, not kernel work.
+The footprint test is a provable superset: it works at a coarse
+resolution rp, probes grid_disk(k=1) of the rp cells of each image's
+corners and centre, and holds because tiling emits only cells whose
+centroid lies in the footprint, a descendant centroid drifts at most one
+rp cell from its rp-parent, and the farthest footprint point from a
+sample stays within the measured slack of that drift (footprint_prefilter
+states the bound).  rp is the finest resolution whose safe radius covers
+the largest corpus image (MAX_SIDE_PX): res 5 for res-9 tiling.
 
-The fused path runs generate -> decode (via the same codec registry
-snapshot, so codec_override= is unchanged) -> tile -> PIP-assign ->
-per-(poly, image) partial aggregation in ONE mapInPandas over
-spark.range ids.  The PIP join becomes a map-side broadcast hash join:
-the compact coverage (an index built once per polygon set and amortized
-across the scan — the production pattern this plan always documented)
-is collected once, sorted by cell, and shipped to executors via
-sc.broadcast (~8 MB at 468k rows); each batch probes it with
-np.searchsorted on bit-math ancestors — the same necessary-and-
-sufficient match condition pip_join's Catalyst join evaluates, minus
-the driver-serial relation build and the 7M-row Arrow explode.  This is
-MORE faithful to the 100-TB deployment, not less: a real scan is a
-JVM-side Parquet read feeding ONE Python stage via Arrow, and the
-per-(poly, image) reduction is classic map-side partial aggregation.
-The Catalyst pip_join operator is unchanged (h3_pip_join and the
-scaling workload still exercise it); the fused path falls back to it
-whenever a salt is requested or the coverage exceeds the broadcast
-budget (the same 2M-row threshold pip_join uses).
-
-Measured (same box, quiet windows, sf0.1 / 60k images):
-flagship raw8 9.77 s -> ~3 s; the png/jpeg legs inherit the same floor.
-
-Footprint prefilter (the Raptor rule: skip raster work no vector can
-reach).  Well under 1% of a globally spread corpus reaches a
-polygon set, yet every image used to pay decode and tiling, about 75% of
-the per-image kernel cost.  The fused kernel now generates every image
-(byte generation, JPEG encode included, stands in for the storage read)
-and then keeps only the images whose footprint can hold a tile cell with
-an ancestor in the coverage (h3core.rasterh3.footprint_mask); only those
-are decoded, tiled and probed.  The test is a provable superset: it
-works at a coarse resolution rp, probes grid_disk(k=1) of the rp cells
-of each image's corners and centre, and holds because tiling emits only
-cells whose centroid lies in the footprint, a descendant centroid
-drifts at most one rp cell from its rp-parent, and the farthest
-footprint point from a sample stays within the measured slack of that
-drift (footprint_prefilter states the bound).  rp is the finest
-resolution whose safe radius covers the largest corpus image
-(MAX_SIDE_PX): res 5 for res-9 tiling.  The probe sets are built once
-per coverage on the driver, with the cached coverage index.  The salted
-Catalyst fallback stays unpruned: it is the independent reference.
+Fallback: with `salt=`, or when operators.spatial_join.mapside_index
+finds the coverage empty or over the broadcast budget, the Catalyst plan
+runs (tile_images -> pip_join -> groupBy -> caption join).  It decodes
+and tiles every image; it is the independent reference for the fused
+path.
 """
 
 from __future__ import annotations
@@ -71,23 +43,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.spatial_join import pip_join, polyfill_polygons
+from ..operators.spatial_join import (
+    mapside_index,
+    pip_join,
+    polyfill_polygons,
+)
 from ..operators.tiling import tile_images
-from ..sources.images import synth_captions, synth_images
+from ..sources.images import (
+    batch_codec_snapshot,
+    codec_snapshot,
+    codecs_overridden,
+    synth_captions,
+    synth_images,
+)
 from ..sources.polygons import synth_polygons
-
-# pip_join's broadcast budget: past this the fused map-side join would
-# ship too large an index per executor — fall back to the shuffle path
-_BROADCAST_THRESHOLD_ROWS = 2_000_000
-
-# coverage-index cache: moved to operators/spatial_join.coverage_index
-# (round 8) so the generic pip_join can offer the same map-side
-# strategy; the flagship keeps using it unchanged.  The bench builds
-# the coverage once OUTSIDE the rep timing and passes the same
-# persisted DataFrame to every flagship call — the documented
-# amortize-across-the-scan pattern.  It caches an INPUT INDEX, not
-# results: every rep still decodes + tiles + joins from scratch.
-from ..operators.spatial_join import coverage_index as _coverage_index
 
 
 def _footprint_index(spark, cov, res, res_list):
@@ -110,9 +79,9 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
                      batch_codecs, fp_index):
     """The fused generate->decode->tile->PIP-assign->partial-rollup
     kernel (see module docstring).  Returns a mapInPandas function over
-    `id` batches yielding (image_id, poly_id, n_tiles, sum_px) rows —
-    exactly the per-(poly, image) granularity the round-7 plan reached
-    after its tile explode + broadcast join + first groupBy.
+    `id` batches yielding (image_id, poly_id, n_tiles, sum_px, caption)
+    rows: the per-(poly, image) granularity the Catalyst fallback
+    reaches after its tile explode, join and first groupBy.
 
     fp_index (h3core.rasterh3.footprint_index of the coverage) drives
     the footprint prefilter: after generation, only images whose
@@ -139,7 +108,7 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
             georef_of_phash,
         )
 
-        cov_cells, cov_polys, poly_strs = bc.value
+        cov_cells, cov_codes, attrs = bc.value
         pdf = gen_fn(ids)
         lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
         wcol = pdf["w"].to_numpy(np.int64)
@@ -170,33 +139,12 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
         if cells.size == 0:
             return pd.DataFrame(_EMPTY)
         img_idx = sel[img_idx]
-        # --- map-side PIP assign: probe the sorted coverage with the
-        # tile's bit-math ancestor at every coverage resolution (the
-        # exact condition pip_join's equi-join evaluates)
-        out_img, out_poly, out_val = [], [], []
-        for r in res_list:
-            par = IDX.cell_to_parent(cells, r)
-            lo = np.searchsorted(cov_cells, par, "left")
-            hi = np.searchsorted(cov_cells, par, "right")
-            cnt = hi - lo
-            nz = np.flatnonzero(cnt)
-            if nz.size == 0:
-                continue
-            reps = cnt[nz]
-            base = lo[nz]
-            off = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-                np.cumsum(reps) - reps, reps
-            )
-            take = np.repeat(base, reps) + off
-            src = np.repeat(nz, reps)
-            out_img.append(img_idx[src])
-            out_poly.append(cov_polys[take])
-            out_val.append(vals[src])
-        if not out_img:
+        src, pos = IDX.probe_ancestors(cells, cov_cells, res_list)
+        if src.size == 0:
             return pd.DataFrame(_EMPTY)
-        ki = np.concatenate(out_img)
-        kp = np.concatenate(out_poly)
-        v = np.concatenate(out_val).astype(np.int64)
+        ki = img_idx[src]
+        kp = cov_codes[pos]
+        v = vals[src].astype(np.int64)
         # --- per-(image, poly) partial rollup (map-side aggregation)
         order = np.lexsort((kp, ki))
         ki, kp, v = ki[order], kp[order], v[order]
@@ -215,7 +163,8 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
         return pd.DataFrame(
             {
                 "image_id": img_ids[ki[starts]],
-                "poly_id": poly_strs[kp[starts]],
+                "poly_id": attrs["poly_id"].to_numpy(
+                    zero_copy_only=False)[kp[starts]],
                 "n_tiles": n_tiles,
                 "sum_px": sum_px,
                 "caption": caps[ki[starts]],
@@ -293,11 +242,11 @@ def flagship(
     changes per-batch decode throughput only, so the 100-TB decode
     ceiling is a plug-in, not a pipeline rewrite.
 
-    Execution strategy (round 8): the default path fuses generate ->
-    decode -> tile -> map-side PIP join -> per-(poly, image) partial
-    aggregation into one Python stage (module docstring); `salt=` or a
-    coverage past the broadcast budget falls back to the round-7
-    Catalyst pip_join plan, which remains the general operator.
+    Execution strategy: the default path fuses generate -> decode ->
+    tile -> map-side PIP join -> per-(poly, image) partial aggregation
+    into one Python stage (module docstring).  `salt=`, or a coverage
+    that operators.spatial_join.mapside_index rejects (empty or over
+    the broadcast budget), runs the Catalyst pip_join plan instead.
 
     Footprint prefilter (fused path only): every image is generated,
     but only images whose footprint can reach the coverage are decoded
@@ -322,74 +271,48 @@ def flagship(
             f"flagship fmt must be 'raw8', 'png' or 'jpeg', got {fmt!r}"
         )
 
-    # codec_override is scoped to THIS plan: the fused kernel (and
-    # tile_images on the fallback path) captures the registry snapshot
-    # into its UDF closure at build time, so the override is applied
-    # for the build and the global registry is restored right after —
-    # no leak into other plans
-    from ..sources.images import (
-        batch_codec_snapshot,
-        codec_snapshot,
-        register_codec,
-        unregister_codec,
-    )
-
-    if codec_override:
-        prev = codec_snapshot()
-        for ofmt, fn in codec_override.items():
-            register_codec(ofmt, fn)
-        try:
-            codecs = codec_snapshot()
-        finally:
-            for ofmt in codec_override:
-                if ofmt in prev:
-                    register_codec(ofmt, prev[ofmt])
-                else:
-                    unregister_codec(ofmt)
-    else:
+    # codec_override is scoped to THIS plan: the fused kernel and
+    # tile_images capture the registry snapshot into their UDF closures
+    # at build time, so the override is registered for the build only
+    with codecs_overridden(codec_override):
         codecs = codec_snapshot()
     batch_codecs = batch_codec_snapshot()
 
     polys = synth_polygons(spark, n_polygons, seed=seed)
     cov = coverage
-    built_cov = False
     if cov is None:
-        cov = polyfill_polygons(polys, res, compact=True).withColumnRenamed(
-            "cell", "__poly_cell"
+        # persisted: the budget check, the index collect and the
+        # fallback's pip_join all read it, and the polyfill runs once
+        cov = (
+            polyfill_polygons(polys, res, compact=True)
+            .withColumnRenamed("cell", "__poly_cell")
+            .persist()
         )
-        built_cov = True
 
-    per_img = None
-    if salt is None:
-        bc, res_list, n_cov = _coverage_index(spark, cov)
-        if n_cov <= _BROADCAST_THRESHOLD_ROWS and res_list:
-            # ONE task wave for the fused map-only stage: the pandas
-            # runner costs a measured ~15-20 ms per task on this box, so
-            # 256 tasks of a 60k-image scan burned ~4 s of pure task
-            # overhead (bench_extra.py: 3.8 s at 32 tasks vs 8.1 s at
-            # 256).  Scale-adaptive (defaultParallelism, not a
-            # constant); per-worker memory is bounded by the kernel's
-            # internal 4096-image chunking, not by task size.  The
-            # caller's `partitions` hint still CAPS the wave for tiny
-            # inputs (no point waking 32 workers for 300 images).
-            dp = spark.sparkContext.defaultParallelism
-            parts = max(1, min(dp, (n_images + 255) // 256))
-            gen_fn = _gen_fn_for(fmt, seed)
-            per_img = spark.range(0, n_images, 1, parts).mapInPandas(
-                _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, 0,
-                                 batch_codecs,
-                                 _footprint_index(spark, cov, res,
-                                                  res_list)),
-                "image_id string, poly_id string, "
-                "n_tiles long, sum_px long, caption string",
-            )
-
-    if per_img is None:
-        # fallback: the round-7 Catalyst plan (salted shuffle join /
-        # oversized coverage).  Captions are dropped BEFORE tiling
-        # (round-4): a caption is constant per image, but tile_images
-        # explodes ~120 tiles/image, so carrying the string through the
-        # tile stage Arrow-serializes ~120 duplicated copies per image.
+    index = mapside_index(spark, cov) if salt is None else None
+    if index is not None:
+        bc, res_list, _ = index
+        fp_index = _footprint_index(spark, cov, res, res_list)
+        if coverage is None:
+            cov.unpersist()
+        # ONE task wave for the fused map-only stage: the pandas runner
+        # costs ~15-20 ms per task, so 256 tasks of a 60k-image scan
+        # burned ~4 s of task overhead (3.8 s at 32 tasks vs 8.1 s at
+        # 256).  Per-worker memory is bounded by the kernel's internal
+        # chunking, not by task size; tiny inputs get fewer tasks.
+        dp = spark.sparkContext.defaultParallelism
+        parts = max(1, min(dp, (n_images + 255) // 256))
+        per_img = spark.range(0, n_images, 1, parts).mapInPandas(
+            _fused_rollup_fn(_gen_fn_for(fmt, seed), codecs, res, res_list,
+                             bc, 0, batch_codecs, fp_index),
+            "image_id string, poly_id string, "
+            "n_tiles long, sum_px long, caption string",
+        )
+    else:
+        # Captions are dropped BEFORE tiling: a caption is constant per
+        # image, but tile_images explodes ~120 tiles/image, so carrying
+        # the string through the tile stage Arrow-serializes ~120
+        # duplicated copies per image.
         if fmt == "png":
             from ..sources.images import synth_images_png
 
@@ -406,24 +329,8 @@ def flagship(
             images = synth_images(
                 spark, n_images, seed=seed, partitions=partitions
             )
-        if codec_override:
-            prev = codec_snapshot()
-            for ofmt, fn in codec_override.items():
-                register_codec(ofmt, fn)
-            try:
-                tiles = tile_images(images, res=res, nodata=0).drop("caption")
-            finally:
-                for ofmt in codec_override:
-                    if ofmt in prev:
-                        register_codec(ofmt, prev[ofmt])
-                    else:
-                        unregister_codec(ofmt)
-        else:
+        with codecs_overridden(codec_override):
             tiles = tile_images(images, res=res, nodata=0).drop("caption")
-        if built_cov:
-            # a coverage built here feeds several pip_join subplans
-            # (count, res scan, join) — persist so polyfill runs once
-            cov = cov.persist()
         joined = pip_join(tiles, polys, res=res, salt=salt, coverage=cov)
         # Two countDistinct in one agg would plan an Expand (x2 row
         # blowup over EVERY tile row — the round-2 100x watch item).
@@ -434,53 +341,29 @@ def flagship(
             F.count("*").alias("n_tiles"),
             F.sum("px_value").alias("sum_px"),
         )
+        # captions: size the stage by ROWS (16k/task, ~25 ms of work
+        # each), not by the image-scan partition count: Python tasks
+        # carry a ~5 ms serialized launch cost and a ~15-20 ms runner
+        # cost each, so 256 tasks made this tiny stage 1.8 s (measured
+        # 0.17 s at 4 tasks vs 0.33 s at 32 for 60k images).
+        dp_caps = spark.sparkContext.defaultParallelism
+        caps_parts = max(1, min(dp_caps, (n_images + 16383) // 16384))
+        caps = synth_captions(spark, n_images, seed=seed,
+                              partitions=caps_parts)
+        # broadcast only while the caption side is genuinely small: the
+        # hash relation is built single-threaded on the driver.  Past
+        # ~200k rows force a shuffled hash join; dropping the hint is
+        # not enough, because Catalyst's size estimate carries the
+        # 8-byte-per-row range stats through mapInPandas and would
+        # auto-broadcast a side that is really n_images * ~50 B.
+        if n_images <= 200_000:
+            caps = F.broadcast(caps)
+        else:
+            caps = caps.hint("shuffle_hash")
+        per_img = per_img.join(caps, "image_id")
 
-    if "caption" in per_img.columns:
-        # fused path: caption already attached in-kernel (see
-        # _fused_rollup_fn) — no caption table, no broadcast build,
-        # no join
-        per_img_c = per_img
-        return (
-            per_img_c.groupBy("poly_id")
-            .agg(
-                F.sum("n_tiles").alias("n_tiles"),
-                F.count("*").alias("n_images"),
-                F.sum("sum_px").alias("sum_px"),
-                F.countDistinct("caption").alias("n_captions"),
-            )
-            .orderBy("poly_id")
-        )
-
-    # captions: do NOT forward the image-scan partition count — the
-    # caption projection is ~1.5 us/row of generation, and at 256 tasks
-    # the pandas-runner per-task cost made this tiny stage a measured
-    # 1.8 s (bench_extra.py).  Python tasks also carry a ~5 ms
-    # SERIALIZED launch cost on top of the parallel work, so even one
-    # 32-task wave pays ~0.16 s of pure scheduling; size the stage by
-    # ROWS (16k/task ≈ 25 ms of real work each) instead — measured
-    # 0.17 s at 4 tasks vs 0.33 s at 32 for 60k images, still
-    # scale-adaptive (task count grows with n_images, capped at the
-    # session parallelism).
-    dp_caps = spark.sparkContext.defaultParallelism
-    caps_parts = max(1, min(dp_caps, (n_images + 16383) // 16384))
-    caps = synth_captions(spark, n_images, seed=seed, partitions=caps_parts)
-    # broadcast only while the caption side is genuinely small: the hash
-    # relation is built single-threaded on the driver (the round-3 Amdahl
-    # lesson, spatial_join.py lift_coverage rule).  Past ~200k rows force
-    # a shuffled hash join (parallel per-partition build) — merely
-    # dropping the hint is NOT enough, because Catalyst's size estimate
-    # for the caption side propagates the 8-byte-per-row range stats
-    # through mapInPandas and auto-broadcasts a side that is really
-    # n_images * ~50 B (round-5 finding; at 10^12 images a real scan's
-    # stats prevent that, but the hint makes the strategy explicit at
-    # every scale).
-    if n_images <= 200_000:
-        caps = F.broadcast(caps)
-    else:
-        caps = caps.hint("shuffle_hash")
-    per_img_c = per_img.join(caps, "image_id")
     return (
-        per_img_c.groupBy("poly_id")
+        per_img.groupBy("poly_id")
         .agg(
             F.sum("n_tiles").alias("n_tiles"),
             F.count("*").alias("n_images"),

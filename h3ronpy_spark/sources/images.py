@@ -18,6 +18,7 @@ PSNR >= 40 dB invariant holds trivially and is still asserted).
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -62,11 +63,6 @@ def georef_of_phash(phash: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lat = (u % np.uint64(1_700_000)).astype(np.float64) / 1e4 - 85.0
     lng = ((u >> np.uint64(20)) % np.uint64(3_600_000)).astype(np.float64) / 1e4 - 180.0
     return lat, lng
-
-
-def transform_of(lat: float, lng: float) -> tuple:
-    """GDAL geotransform anchored at the image's top-left corner."""
-    return (PIXEL_DEG, 0.0, lng, 0.0, -PIXEL_DEG, lat)
 
 
 def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
@@ -309,6 +305,24 @@ def codec_snapshot() -> dict:
     """The current registry, for capture into a UDF closure (see the
     registry note above)."""
     return dict(_CODECS)
+
+
+@contextlib.contextmanager
+def codecs_overridden(override: dict | None):
+    """Register `override` ({fmt: decode_fn}) for the body of the with
+    block, then restore each overridden fmt to its previous codec (or
+    to unregistered), also when the body raises."""
+    prev = codec_snapshot()
+    try:
+        for fmt, fn in (override or {}).items():
+            register_codec(fmt, fn)
+        yield
+    finally:
+        for fmt in override or {}:
+            if fmt in prev:
+                register_codec(fmt, prev[fmt])
+            else:
+                unregister_codec(fmt)
 
 
 def register_batch_codec(fmt: str, batch_fn, companion) -> None:

@@ -111,3 +111,132 @@ def test_fused_salt_falls_back(spark):
         )
     )
     assert a == b and len(a) > 0
+
+
+def _stub_decoder():
+    # a constant raster standing in for a plugged-in native decoder;
+    # nested, so cloudpickle ships it by value (executor workers cannot
+    # import this test module)
+    def stub(blob, w, h, fmt):
+        import numpy as np
+
+        return np.full((int(h), int(w)), 170, np.uint8)
+
+    return stub
+
+
+def _own_coverage(spark, n_polygons, res, seed=42):
+    from h3ronpy_spark.operators.spatial_join import polyfill_polygons
+    from h3ronpy_spark.sources.polygons import synth_polygons
+
+    cov = (
+        polyfill_polygons(synth_polygons(spark, n_polygons, seed=seed), res,
+                          compact=True)
+        .withColumnRenamed("cell", "__poly_cell")
+        .persist()
+    )
+    cov.count()
+    return cov
+
+
+def _index_entries(cov):
+    from h3ronpy_spark.operators import spatial_join as SJ
+
+    return sum(1 for v in SJ._COV_INDEX_CACHE.values() if v[0] is cov)
+
+
+def test_over_budget_coverage_falls_back_without_collecting(
+        spark, monkeypatch):
+    """A coverage over the broadcast budget takes the Catalyst plan with
+    unchanged rows, and is never collected into a coverage index."""
+    from h3ronpy_spark.operators import spatial_join as SJ
+    from h3ronpy_spark.plans.flagship import flagship
+
+    want = sorted(map(tuple, flagship(spark, 1000, n_polygons=20,
+                                      res=9).collect()))
+    cov = _own_coverage(spark, 20, 9)
+    monkeypatch.setattr(SJ, "BROADCAST_BUDGET_ROWS", cov.count() - 1)
+    df = flagship(spark, 1000, n_polygons=20, res=9, coverage=cov)
+    assert "Join" in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, df.collect())) == want and len(want) > 0
+    assert _index_entries(cov) == 0
+    cov.unpersist()
+
+
+def test_warmed_index_is_the_one_flagship_reads(spark):
+    """coverage_index(spark, cov) warms exactly the entry flagship
+    uses: one cache entry, and building the plan runs no Spark job."""
+    from h3ronpy_spark.operators.spatial_join import coverage_index
+    from h3ronpy_spark.plans.flagship import flagship
+
+    cov = _own_coverage(spark, 8, 9)
+    coverage_index(spark, cov)
+    sc = spark.sparkContext
+    sc.setJobGroup("flagship_plan_build", "plan build only")
+    try:
+        df = flagship(spark, 400, n_polygons=8, res=9, coverage=cov)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "flagship_plan_build")) == []
+    assert _index_entries(cov) == 1
+    assert df.count() > 0
+    cov.unpersist()
+
+
+def test_fused_leaves_no_persisted_coverage(spark):
+    from h3ronpy_spark.plans.flagship import flagship
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        flagship(spark, 300, n_polygons=6, res=9).count()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_codec_override_reaches_the_salted_fallback(spark):
+    """The override applies on both paths: the salted Catalyst fallback
+    with a stub decoder gives the fused path's rows, and every pixel
+    summed is the stub's."""
+    from h3ronpy_spark.plans.flagship import flagship
+    from h3ronpy_spark.sources.images import unregister_codec
+
+    override = {"jpeg": _stub_decoder()}
+    try:
+        fused = sorted(map(tuple, flagship(
+            spark, 800, n_polygons=12, res=9, fmt="jpeg",
+            codec_override=override).collect()))
+        salted = sorted(map(tuple, flagship(
+            spark, 800, n_polygons=12, res=9, fmt="jpeg", salt=4,
+            codec_override=override).collect()))
+    finally:
+        unregister_codec("jpeg")
+    assert salted == fused and len(fused) > 0
+    # (poly_id, n_tiles, n_images, sum_px, n_captions)
+    assert all(r[3] == 170 * r[1] for r in fused)
+
+
+def test_codec_override_restored_when_build_raises(spark, monkeypatch):
+    import h3ronpy_spark.plans.flagship as FL
+    from h3ronpy_spark.sources.images import codec_snapshot, unregister_codec
+    from h3ronpy_spark.sources.jpeg import register_jpeg_codec
+
+    seen = {}
+    stub = _stub_decoder()
+
+    def failing_tile_images(*args, **kwargs):
+        seen.update(codec_snapshot())
+        raise RuntimeError("tile build failed")
+
+    monkeypatch.setattr(FL, "tile_images", failing_tile_images)
+    register_jpeg_codec()
+    before = codec_snapshot()
+    try:
+        with pytest.raises(RuntimeError, match="tile build failed"):
+            FL.flagship(spark, 100, n_polygons=4, res=9, fmt="jpeg", salt=4,
+                        codec_override={"jpeg": stub, "toy": stub})
+        # the override was live during the build, and is gone after it
+        assert seen["jpeg"] is stub and seen["toy"] is stub
+        assert codec_snapshot() == before
+    finally:
+        unregister_codec("jpeg")
