@@ -35,7 +35,7 @@ from .. import functions as H
 
 # Input metadata of a coverage (row count, distinct resolutions), cached
 # per DataFrame object: callers amortize one persisted coverage across
-# many joins, and each lookup otherwise costs two Spark jobs.  Results
+# many joins, and each lookup otherwise costs a grouped aggregate.  Results
 # are never cached; every join recomputes fully.
 _COV_META_LOCK = threading.Lock()
 _COV_META_CACHE: dict = {}  # id(df) -> (df, n_cov, res_list)
@@ -54,15 +54,13 @@ def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
         hit = _COV_META_CACHE.get(id(cov))
     if hit is not None and hit[0] is cov:
         return hit[1], hit[2]
-    n_cov = cov.count()
-    res_list = sorted(
-        r[0]
-        for r in cov.select(
-            H.cells_resolution(F.col("__poly_cell")).alias("r")
-        )
-        .distinct()
-        .collect()
-    )
+    # one aggregate gives both: the row count is the sum of the
+    # per-resolution counts
+    counts = cov.groupBy(
+        H.cells_resolution(F.col("__poly_cell")).alias("r")
+    ).count().collect()
+    n_cov = sum(c["count"] for c in counts)
+    res_list = sorted(c["r"] for c in counts)
     _seed_meta(cov, n_cov, res_list)
     return n_cov, res_list
 

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from ..sources.images import (
     codec_snapshot,
     decode_image_with,
-    georef_of_phash,
+    transforms_of_phash,
 )
 
 # Spark value type per requested tile value kind; the reference converts
@@ -59,8 +59,6 @@ def tile_images(
     "bigint" ({u,i}32/i64), or "double" (f32/f64 — pass nodata=float('nan')
     for NaN-nodata rasters; NaN pixels are dropped like the reference's
     OrderedFloat NaN handling)."""
-    from ..sources.images import PIXEL_DEG
-
     if value_type not in _VALUE_TYPES:
         raise ValueError(f"value_type must be one of {sorted(_VALUE_TYPES)}")
     _, np_t = _VALUE_TYPES[value_type]
@@ -70,7 +68,6 @@ def tile_images(
         from ..h3core.rasterh3 import rasters_to_cells_batch
 
         for b in batches:
-            lat, lng = georef_of_phash(b["phash"].to_numpy(np.int64))
             blobs = b["bytes"].tolist()
             wcol = b["w"].to_numpy(np.int64)
             hcol = b["h"].to_numpy(np.int64)
@@ -81,11 +78,7 @@ def tile_images(
                 )
                 for i in range(len(b))
             ]
-            tfs = np.zeros((len(b), 6))
-            tfs[:, 0] = PIXEL_DEG
-            tfs[:, 2] = lng
-            tfs[:, 4] = -PIXEL_DEG
-            tfs[:, 5] = lat
+            tfs = transforms_of_phash(b["phash"].to_numpy(np.int64))
             img_idx, vals, cells = rasters_to_cells_batch(
                 bands, tfs, res, nodata_value=nodata
             )

@@ -1,24 +1,29 @@
 """The flagship pipeline (SURVEY.md §7 Phase 2).
 
 decode images -> georeference -> tile to H3 cells (raster_to_dataframe
-semantics) -> polyfill a polygon set -> PIP join captions to polygons on
+semantics) -> polyfill a polygon set -> PIP join the tiles to polygons on
 the cell key -> per-polygon rollup.
 
-Touches every layer: encode kernel, raster tiling, polyfill, explode,
-broadcast-vs-shuffle join, hash aggregation.  This is `entry(spark)` and
-the bench job.
+Touches every layer: encode kernel, raster tiling, polyfill, map-side or
+Catalyst join, hash aggregation.  This is `entry(spark)` and the bench
+job.
 
-Default path: one fused Python stage, no joins.  A mapInPandas over
-spark.range ids generates each image (byte generation, JPEG encode
-included, stands in for the storage read), keeps only the images whose
-footprint can reach the coverage (h3core.rasterh3.footprint_mask),
-decodes them through the codec registry snapshot, tiles them, assigns
-each tile to polygons by probing the broadcast coverage index with its
-bit-math ancestors (h3core.index.probe_ancestors, the condition
-pip_join's equi-join evaluates) and rolls up per (poly, image); the
-caption rides those rollup rows.  The coverage index is built once per
-coverage DataFrame (operators.spatial_join.coverage_index) and cached,
-so a scan that reuses one persisted coverage collects it once.
+One image producer serves both paths (_image_kernel): a mapInPandas over
+spark.range ids that, per chunk of ids, generates each image (byte
+generation, JPEG encode included, stands in for the storage read),
+decodes it through the codec registry snapshot (batch decoders where
+registered and not overridden) and tiles it.  An emitter decides what
+the chunk's tiles become.
+
+Default path (fused): one Python stage, no joins.  Only the images whose
+footprint can reach the coverage (h3core.rasterh3.footprint_mask) are
+decoded and tiled; each tile is assigned to polygons by probing the
+broadcast coverage index with its bit-math ancestors
+(h3core.index.probe_ancestors, the condition pip_join's equi-join
+evaluates) and rolled up per (poly, image); the caption rides those
+rollup rows.  The coverage index is built once per coverage DataFrame
+(operators.spatial_join.coverage_index) and cached, so a scan that
+reuses one persisted coverage collects it once.
 
 The footprint test is a provable superset: it works at a coarse
 resolution rp, probes grid_disk(k=1) of the rp cells of each image's
@@ -30,13 +35,21 @@ states the bound).  rp is the finest resolution whose safe radius covers
 the largest corpus image (MAX_SIDE_PX): res 5 for res-9 tiling.
 
 Fallback: with `salt=`, or when operators.spatial_join.mapside_index
-finds the coverage empty or over the broadcast budget, the Catalyst plan
-runs (tile_images -> pip_join -> groupBy -> caption join).  It decodes
-and tiles every image; it is the independent reference for the fused
-path.
+finds the coverage empty or over the broadcast budget, the producer
+emits plain tile rows (image long, cell long, px_value long) for every
+image: no footprint mask, no string column.  They go through pip_join's
+Catalyst equi-join and a groupBy to (poly, image); a small mapInPandas
+over those rollup rows adds the caption from the image id
+(sources.images.caption_of_ids).  The fallback is the independent check
+of the fused path's footprint prefilter and map-side probe; it shares
+the fused path's decoder, so the scalar-vs-batch decoder cross-check
+lives in tests (test_fused_equals_legacy builds its reference plan from
+operators.tiling.tile_images).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -48,16 +61,27 @@ from ..operators.spatial_join import (
     pip_join,
     polyfill_polygons,
 )
-from ..operators.tiling import tile_images
 from ..sources.images import (
     batch_codec_snapshot,
+    caption_of_ids,
     codec_snapshot,
     codecs_overridden,
-    synth_captions,
-    synth_images,
+    gen_images_jpeg_pdf,
+    gen_images_pdf,
+    gen_images_png_pdf,
 )
+from ..sources.jpeg import register_jpeg_codec
+from ..sources.png import register_png_codec
 from ..sources.polygons import synth_polygons
 
+# fmt -> (corpus generator, codec registration).  The generators are the
+# ones the synth_images* tables run, so pixels, payload bytes and
+# phash/georef match those tables.
+_FORMATS = {
+    "raw8": (gen_images_pdf, lambda: None),
+    "png": (gen_images_png_pdf, register_png_codec),
+    "jpeg": (gen_images_jpeg_pdf, register_jpeg_codec),
+}
 
 def _footprint_index(spark, cov, res, res_list):
     """The coverage's footprint-prefilter index at the finest coarse
@@ -75,74 +99,74 @@ def _footprint_index(spark, cov, res, res_list):
     return coverage_footprint_index(spark, cov, rp)
 
 
-def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
-                     batch_codecs, fp_index):
-    """The fused generate->decode->tile->PIP-assign->partial-rollup
-    kernel (see module docstring).  Returns a mapInPandas function over
-    `id` batches yielding (image_id, poly_id, n_tiles, sum_px, caption)
-    rows: the per-(poly, image) granularity the Catalyst fallback
-    reaches after its tile explode, join and first groupBy.
+def _image_kernel(gen_fn, codecs, batch_codecs, res, emit, fp_index=None):
+    """The image producer of both flagship paths (module docstring): a
+    mapInPandas function over `id` batches.  Per chunk of ids it
+    generates the images, keeps only those whose footprint can reach
+    the coverage when fp_index (h3core.rasterh3.footprint_index) is
+    given, decodes and tiles them, and yields emit(ids, pdf, img, vals,
+    cells), where img indexes the chunk's rows.  A chunk with no tile
+    left, or whose emit returns None, yields nothing.
 
-    fp_index (h3core.rasterh3.footprint_index of the coverage) drives
-    the footprint prefilter: after generation, only images whose
-    footprint can reach the coverage are decoded, tiled and probed.
-
-    The fused stage runs ONE task wave (big tasks — guide §2.2), so the
+    The stage runs ONE task wave (big tasks — guide §2.2), so the
     kernel bounds per-worker memory itself by processing the id range
     in fixed-size chunks regardless of task size."""
 
-    _EMPTY = {
-        "image_id": pd.Series([], dtype=object),
-        "poly_id": pd.Series([], dtype=object),
-        "n_tiles": pd.Series([], dtype=np.int64),
-        "sum_px": pd.Series([], dtype=np.int64),
-        "caption": pd.Series([], dtype=object),
-    }
-
     def one_chunk(ids):
-        from ..h3core import index as IDX
         from ..h3core.rasterh3 import footprint_mask, rasters_to_cells_batch
-        from ..sources.images import (
-            PIXEL_DEG,
-            decode_images_with,
-            georef_of_phash,
-        )
+        from ..sources.images import decode_images_with, transforms_of_phash
 
-        cov_cells, cov_codes, attrs = bc.value
         pdf = gen_fn(ids)
-        lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
+        tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
         wcol = pdf["w"].to_numpy(np.int64)
         hcol = pdf["h"].to_numpy(np.int64)
-        tfs = np.zeros((len(ids), 6))
-        tfs[:, 0] = PIXEL_DEG
-        tfs[:, 2] = lng
-        tfs[:, 4] = -PIXEL_DEG
-        tfs[:, 5] = lat
-        # footprint prefilter: `sel` are the images that can reach the
-        # coverage; only they are decoded, tiled and probed
-        sel = np.flatnonzero(footprint_mask(tfs, wcol, hcol, fp_index))
-        if sel.size == 0:
-            return pd.DataFrame(_EMPTY)
+        if fp_index is None:
+            sel = np.arange(len(ids))
+        else:
+            sel = np.flatnonzero(footprint_mask(tfs, wcol, hcol, fp_index))
+            if sel.size == 0:
+                return None
         blobs = pdf["bytes"].tolist()
         fmts = pdf["fmt"].tolist()
-        # batch path (round 8): fmts with a registered batch decoder
-        # whose per-image codec is unoverridden decode via the lockstep
-        # batch decoder; a codec_override disables it for that fmt, so
-        # the override seam's semantics are unchanged
         bands = decode_images_with(
             codecs, batch_codecs, [blobs[i] for i in sel],
             wcol[sel], hcol[sel], [fmts[i] for i in sel],
         )
         img_idx, vals, cells = rasters_to_cells_batch(
-            bands, tfs[sel], res, nodata_value=nodata
+            bands, tfs[sel], res, nodata_value=0
         )
         if cells.size == 0:
-            return pd.DataFrame(_EMPTY)
-        img_idx = sel[img_idx]
+            return None
+        return emit(ids, pdf, sel[img_idx], vals, cells)
+
+    def run(batches):
+        for b in batches:
+            all_ids = b["id"].to_numpy(np.int64)
+            # 1024-image chunks: large enough to amortize per-chunk
+            # numpy overhead, small enough that the kernel's sample
+            # arrays stay near-cache-resident with 32 concurrent
+            # workers (the latlng._CHUNK lesson)
+            for c0 in range(0, all_ids.size, 1024):
+                out = one_chunk(all_ids[c0 : c0 + 1024])
+                if out is not None:
+                    yield out
+
+    return run
+
+
+def _rollup_emitter(bc, res_list):
+    """The fused path's emitter: assign each tile to polygons through
+    the broadcast coverage index and roll up per (poly, image), giving
+    (image_id, poly_id, n_tiles, sum_px, caption) rows."""
+
+    def emit(ids, pdf, img, vals, cells):
+        from ..h3core import index as IDX
+
+        cov_cells, cov_codes, attrs = bc.value
         src, pos = IDX.probe_ancestors(cells, cov_cells, res_list)
         if src.size == 0:
-            return pd.DataFrame(_EMPTY)
-        ki = img_idx[src]
+            return None
+        ki = img[src]
         kp = cov_codes[pos]
         v = vals[src].astype(np.int64)
         # --- per-(image, poly) partial rollup (map-side aggregation)
@@ -154,11 +178,6 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
         n_tiles = np.diff(np.append(starts, ki.size)).astype(np.int64)
         sum_px = np.add.reduceat(v, starts)
         img_ids = pdf["image_id"].to_numpy(dtype=object)
-        # caption rides the per-(poly, image) rollup rows (round 8):
-        # it is already generated in this pdf (a pure function of
-        # id + phash, byte-identical to synth_captions), so emitting it
-        # here removes the caption table, its per-action driver-serial
-        # broadcast hash build, and the join from the fused plan
         caps = pdf["caption"].to_numpy(dtype=object)
         return pd.DataFrame(
             {
@@ -171,40 +190,16 @@ def _fused_rollup_fn(gen_fn, codecs, res, res_list, bc, nodata,
             }
         )
 
-    def run(batches):
-        saw = False
-        for b in batches:
-            all_ids = b["id"].to_numpy(np.int64)
-            # 1024-image chunks: large enough to amortize per-chunk
-            # numpy overhead, small enough that the kernel's sample
-            # arrays stay near-cache-resident with 32 concurrent
-            # workers (the latlng._CHUNK lesson)
-            for c0 in range(0, all_ids.size, 1024):
-                saw = True
-                yield one_chunk(all_ids[c0 : c0 + 1024])
-        if not saw:
-            yield pd.DataFrame(_EMPTY)
-
-    return run
+    return emit
 
 
-def _gen_fn_for(fmt: str, seed: int):
-    """Picklable per-batch corpus generator for the fused path (the
-    same generators the synth_images* tables run, so pixels, payload
-    bytes and phash/georef are identical)."""
-    import functools
-
-    if fmt == "png":
-        from ..sources.images import gen_images_png_pdf
-
-        return functools.partial(gen_images_png_pdf, seed=seed)
-    if fmt == "jpeg":
-        from ..sources.images import gen_images_jpeg_pdf
-
-        return functools.partial(gen_images_jpeg_pdf, seed=seed)
-    from ..sources.images import gen_images_pdf
-
-    return functools.partial(gen_images_pdf, seed=seed)
+def _tile_rows(ids, pdf, img, vals, cells):
+    """The fallback's emitter: one (image, cell, px_value) row per
+    tile.  No string column rides the ~120 tiles an image explodes to;
+    the caption is added after the rollup."""
+    return pd.DataFrame(
+        {"image": ids[img], "cell": cells, "px_value": vals.astype(np.int64)}
+    )
 
 
 def flagship(
@@ -246,7 +241,10 @@ def flagship(
     tile -> map-side PIP join -> per-(poly, image) partial aggregation
     into one Python stage (module docstring).  `salt=`, or a coverage
     that operators.spatial_join.mapside_index rejects (empty or over
-    the broadcast budget), runs the Catalyst pip_join plan instead.
+    the broadcast budget), sends the same producer's tile rows through
+    the Catalyst pip_join plan instead.  Both paths size the image
+    stage as one task wave, so `partitions` has no effect; it is kept
+    because existing callers (bench.py) pass it.
 
     Footprint prefilter (fused path only): every image is generated,
     but only images whose footprint can reach the coverage are decoded
@@ -255,25 +253,21 @@ def flagship(
     unchanged.  Trade-offs: a corrupt blob whose footprint misses every
     polygon is no longer decoded, so it no longer raises; and
     `codec_override` now sees only the surviving images.  The salted
-    fallback decodes everything.  perfbench's
+    fallback decodes everything, with the same decoder as the fused
+    path (batch decoders included), so it checks the prefilter and the
+    map-side probe but not the batch decoder.  perfbench's
     sources.decode_us_per_image still times the codec on all images,
     so the codec layer stays measured."""
-    if fmt == "png":
-        from ..sources.png import register_png_codec
-
-        register_png_codec()
-    elif fmt == "jpeg":
-        from ..sources.jpeg import register_jpeg_codec
-
-        register_jpeg_codec()
-    elif fmt != "raw8":
+    if fmt not in _FORMATS:
         raise ValueError(
             f"flagship fmt must be 'raw8', 'png' or 'jpeg', got {fmt!r}"
         )
+    gen, register = _FORMATS[fmt]
+    register()
 
-    # codec_override is scoped to THIS plan: the fused kernel and
-    # tile_images capture the registry snapshot into their UDF closures
-    # at build time, so the override is registered for the build only
+    # codec_override is scoped to THIS plan: the image kernel captures
+    # the registry snapshot into its UDF closure at build time, so the
+    # override is registered for the build only
     with codecs_overridden(codec_override):
         codecs = codec_snapshot()
     batch_codecs = batch_codec_snapshot()
@@ -289,79 +283,51 @@ def flagship(
             .persist()
         )
 
+    # ONE task wave for the image stage: the pandas runner costs
+    # ~15-20 ms per task, so 256 tasks of a 60k-image scan burned ~4 s
+    # of task overhead (3.8 s at 32 tasks vs 8.1 s at 256).  Per-worker
+    # memory is bounded by the kernel's internal chunking, not by task
+    # size; tiny inputs get fewer tasks.
+    dp = spark.sparkContext.defaultParallelism
+    ids = spark.range(0, n_images, 1, max(1, min(dp, (n_images + 255) // 256)))
+    gen_fn = functools.partial(gen, seed=seed)
+
     index = mapside_index(spark, cov) if salt is None else None
     if index is not None:
         bc, res_list, _ = index
         fp_index = _footprint_index(spark, cov, res, res_list)
         if coverage is None:
             cov.unpersist()
-        # ONE task wave for the fused map-only stage: the pandas runner
-        # costs ~15-20 ms per task, so 256 tasks of a 60k-image scan
-        # burned ~4 s of task overhead (3.8 s at 32 tasks vs 8.1 s at
-        # 256).  Per-worker memory is bounded by the kernel's internal
-        # chunking, not by task size; tiny inputs get fewer tasks.
-        dp = spark.sparkContext.defaultParallelism
-        parts = max(1, min(dp, (n_images + 255) // 256))
-        per_img = spark.range(0, n_images, 1, parts).mapInPandas(
-            _fused_rollup_fn(_gen_fn_for(fmt, seed), codecs, res, res_list,
-                             bc, 0, batch_codecs, fp_index),
+        per_img = ids.mapInPandas(
+            _image_kernel(gen_fn, codecs, batch_codecs, res,
+                          _rollup_emitter(bc, res_list), fp_index),
             "image_id string, poly_id string, "
             "n_tiles long, sum_px long, caption string",
         )
     else:
-        # Captions are dropped BEFORE tiling: a caption is constant per
-        # image, but tile_images explodes ~120 tiles/image, so carrying
-        # the string through the tile stage Arrow-serializes ~120
-        # duplicated copies per image.
-        if fmt == "png":
-            from ..sources.images import synth_images_png
-
-            images = synth_images_png(
-                spark, n_images, seed=seed, partitions=partitions
-            )
-        elif fmt == "jpeg":
-            from ..sources.images import synth_images_jpeg
-
-            images = synth_images_jpeg(
-                spark, n_images, seed=seed, partitions=partitions
-            )
-        else:
-            images = synth_images(
-                spark, n_images, seed=seed, partitions=partitions
-            )
-        with codecs_overridden(codec_override):
-            tiles = tile_images(images, res=res, nodata=0).drop("caption")
-        joined = pip_join(tiles, polys, res=res, salt=salt, coverage=cov)
-        # Two countDistinct in one agg would plan an Expand (x2 row
-        # blowup over EVERY tile row — the round-2 100x watch item).
-        # caption is constant per image, so pre-reducing to
-        # (poly, image) granularity first makes the final agg a single
-        # countDistinct over already-reduced rows.
-        per_img = joined.groupBy("poly_id", "image_id").agg(
-            F.count("*").alias("n_tiles"),
-            F.sum("px_value").alias("sum_px"),
+        tiles = ids.mapInPandas(
+            _image_kernel(gen_fn, codecs, batch_codecs, res, _tile_rows),
+            "image long, cell long, px_value long",
         )
-        # captions: size the stage by ROWS (16k/task, ~25 ms of work
-        # each), not by the image-scan partition count: Python tasks
-        # carry a ~5 ms serialized launch cost and a ~15-20 ms runner
-        # cost each, so 256 tasks made this tiny stage 1.8 s (measured
-        # 0.17 s at 4 tasks vs 0.33 s at 32 for 60k images).
-        dp_caps = spark.sparkContext.defaultParallelism
-        caps_parts = max(1, min(dp_caps, (n_images + 16383) // 16384))
-        caps = synth_captions(spark, n_images, seed=seed,
-                              partitions=caps_parts)
-        # broadcast only while the caption side is genuinely small: the
-        # hash relation is built single-threaded on the driver.  Past
-        # ~200k rows force a shuffled hash join; dropping the hint is
-        # not enough, because Catalyst's size estimate carries the
-        # 8-byte-per-row range stats through mapInPandas and would
-        # auto-broadcast a side that is really n_images * ~50 B.
-        if n_images <= 200_000:
-            caps = F.broadcast(caps)
-        else:
-            caps = caps.hint("shuffle_hash")
-        per_img = per_img.join(caps, "image_id")
 
+        def add_caption(batches):
+            for b in batches:
+                b["caption"] = caption_of_ids(
+                    b.pop("image").to_numpy(np.int64), seed)
+                yield b
+
+        per_img = (
+            pip_join(tiles, polys, res=res, salt=salt, coverage=cov)
+            .groupBy("poly_id", "image")
+            .agg(F.count("*").alias("n_tiles"),
+                 F.sum("px_value").alias("sum_px"))
+            .mapInPandas(add_caption, "poly_id string, n_tiles long, "
+                         "sum_px long, caption string")
+        )
+
+    # both paths arrive at (poly, image) granularity, so the final
+    # aggregate needs a single countDistinct (two in one agg would plan
+    # an Expand)
     return (
         per_img.groupBy("poly_id")
         .agg(

@@ -65,6 +65,28 @@ def georef_of_phash(phash: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return lat, lng
 
 
+def transforms_of_phash(phash: np.ndarray) -> np.ndarray:
+    """(n, 6) affine geotransforms (a, b, c, d, e, f) of the images with
+    these phashes: north-up PIXEL_DEG pixels whose top-left corner is
+    georef_of_phash's (lng, lat)."""
+    lat, lng = georef_of_phash(phash)
+    tfs = np.zeros((len(lat), 6))
+    tfs[:, 0] = PIXEL_DEG
+    tfs[:, 2] = lng
+    tfs[:, 4] = -PIXEL_DEG
+    tfs[:, 5] = lat
+    return tfs
+
+
+def caption_of_ids(ids: np.ndarray, seed: int = 42) -> list[str]:
+    """The caption of each image id: a pure function of id + phash."""
+    ph = phash_of_ids(np.asarray(ids, dtype=np.int64), seed)
+    return [
+        f"caption-{int(i):012d}-{int(p) & 0xFFFFFFFF:08x}"
+        for i, p in zip(ids, ph)
+    ]
+
+
 def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
     """Generate the image rows for the given int64 ids (row-local)."""
     ids = np.asarray(ids, dtype=np.int64)
@@ -82,9 +104,6 @@ def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
         band[0, :] = 0
         band[:, 0] = 0
         blobs.append(band.tobytes())
-    caption = [
-        f"caption-{int(i):012d}-{int(p) & 0xFFFFFFFF:08x}" for i, p in zip(ids, ph)
-    ]
     return pd.DataFrame(
         {
             "image_id": [f"img{int(i):012d}" for i in ids],
@@ -92,7 +111,7 @@ def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
             "w": w,
             "h": h,
             "fmt": "raw8",
-            "caption": caption,
+            "caption": caption_of_ids(ids, seed),
             "phash": ph.view(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF),
         }
     )
@@ -214,34 +233,22 @@ def synth_captions(
     spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None
 ) -> DataFrame:
     """(image_id, caption) ONLY — the column-pruned projection of the
-    images table (captions are a pure function of id + phash, no pixel
-    generation).  At 10^12-image scale this is the stand-in for a
-    column-pruned Iceberg scan of two string columns; the flagship joins
-    it at per-image granularity instead of hauling a duplicated caption
-    through every exploded tile row (see plans/flagship.py).
-
-    Round-8: the generator itself is ~90 ms of Python for 60k rows —
-    what made this table cost 1.8 s per flagship action was running it
-    as 256 mapInPandas tasks (the ~40 ms/task pandas-runner cost noted
-    at _default_parts).  Callers should let `partitions` default so the
-    tiny projection runs in one task wave (a wrapping-int64 SQL rewrite
-    of splitmix64 was prototyped but Spark 4's ANSI mode rejects the
-    overflowing multiplies; the few-task Python stage is within noise
-    of that plan)."""
+    images table (caption_of_ids; no pixel generation), the stand-in
+    for a column-pruned scan of two string columns.  Tests join it to
+    rebuild the reference flagship plan.  Let `partitions` default: the
+    generator is ~90 ms of Python for 60k rows, so the table belongs in
+    one task wave (the ~40 ms/task pandas-runner cost noted at
+    _default_parts)."""
     parts = partitions or _default_parts(spark, n)
     base = spark.range(0, n, 1, parts)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             ids = b["id"].to_numpy(np.int64)
-            ph = phash_of_ids(ids, seed)
             yield pd.DataFrame(
                 {
                     "image_id": [f"img{int(i):012d}" for i in ids],
-                    "caption": [
-                        f"caption-{int(i):012d}-{int(p) & 0xFFFFFFFF:08x}"
-                        for i, p in zip(ids, ph)
-                    ],
+                    "caption": caption_of_ids(ids, seed),
                 }
             )
 
@@ -460,10 +467,6 @@ def gen_images_typed_pdf(
             band[0, :] = 0
             band[:, 0] = 0
         blobs.append(band.astype(dt.newbyteorder("<")).tobytes())
-    caption = [
-        f"caption-{int(i):012d}-{int(p) & 0xFFFFFFFF:08x}"
-        for i, p in zip(ids, ph)
-    ]
     return pd.DataFrame(
         {
             "image_id": [f"img{int(i):012d}" for i in ids],
@@ -471,7 +474,7 @@ def gen_images_typed_pdf(
             "w": w,
             "h": h,
             "fmt": fmt,
-            "caption": caption,
+            "caption": caption_of_ids(ids, seed),
             "phash": ph.view(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF),
         }
     )

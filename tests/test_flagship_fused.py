@@ -3,7 +3,7 @@ tile -> map-side PIP assign -> per-(poly, image) partial rollup in one
 mapInPandas) must be ROW-IDENTICAL to the round-7 Catalyst plan
 (tile_images -> pip_join -> groupBy) for every corpus format, and the
 plan must keep its shape guarantees (no coverage BroadcastHashJoin, no
-Expand, caption join strategy unchanged)."""
+Expand, no caption join on either path)."""
 
 from __future__ import annotations
 
@@ -94,6 +94,30 @@ def test_fused_plan_shape(spark):
     assert "Join" not in plan, plan[:3000]
     assert "Expand" not in plan
     assert plan.count("MapInPandas") == 1, plan[:3000]
+
+
+def _nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def test_fallback_tile_rows_carry_no_string(spark):
+    """The salted fallback's tile stage emits (image, cell, px_value),
+    all long: no per-image string rides the tile explode."""
+    from h3ronpy_spark.plans.flagship import flagship
+
+    df = flagship(spark, 400, n_polygons=8, res=9, salt=4)
+    tile_stages = [
+        [(a.name(), a.dataType().typeName()) for a in
+         (n.output().apply(i) for i in range(n.output().size()))]
+        for n in _nodes(df._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "MapInPandas"
+        and "cell" in n.output().toString()
+    ]
+    assert tile_stages == [[("image", "long"), ("cell", "long"),
+                            ("px_value", "long")]], tile_stages
 
 
 def test_fused_salt_falls_back(spark):
@@ -224,15 +248,16 @@ def test_codec_override_restored_when_build_raises(spark, monkeypatch):
     seen = {}
     stub = _stub_decoder()
 
-    def failing_tile_images(*args, **kwargs):
+    def failing_snapshot():
+        # the snapshot flagship takes inside its one override block
         seen.update(codec_snapshot())
-        raise RuntimeError("tile build failed")
+        raise RuntimeError("plan build failed")
 
-    monkeypatch.setattr(FL, "tile_images", failing_tile_images)
+    monkeypatch.setattr(FL, "codec_snapshot", failing_snapshot)
     register_jpeg_codec()
     before = codec_snapshot()
     try:
-        with pytest.raises(RuntimeError, match="tile build failed"):
+        with pytest.raises(RuntimeError, match="plan build failed"):
             FL.flagship(spark, 100, n_polygons=4, res=9, fmt="jpeg", salt=4,
                         codec_override={"jpeg": stub, "toy": stub})
         # the override was live during the build, and is gone after it

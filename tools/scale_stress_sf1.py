@@ -1,14 +1,16 @@
 """Round-5 scale-stress (VERDICT r04 item 2): run the flagship and the
 dedup/ANN families at ~10x the per-round bench volume on local[32],
 recording wall time plus peak shuffle/memory from the Spark event log,
-and confirming the two branches that never execute at bench scale:
+and confirming the flagship plan invariants at 600k images and the
+branch that never executes at bench scale:
 
-  * flagship's  >200k-image caption join (shuffled hash, not broadcast)
+  * the fused flagship has no join; its salted fallback joins only the
+    coverage (pip_join's prefix key), never a caption table
   * pip_join's salted / non-broadcast coverage join
 
 Row-count oracles: the salted pip_join must match the broadcast path's
 count on the SAME 24M-point input; the flagship rollup must satisfy
-n_captions == n_images per polygon (caption join correctness) and
+n_captions == n_images per polygon (caption correctness) and
 cover exactly n_polygons rows; replicated-corpus minhash must find at
 least the closed-form count of identical-replica pairs.
 
@@ -120,7 +122,8 @@ def main() -> None:
         "sections": {},
     }
 
-    # ---- A: flagship at 600k images — executes the >200k caption branch
+    # ---- A: flagship at 600k images: the fused plan has no join, and
+    # the salted fallback's only joins are pip_join's coverage joins
     polys = synth_polygons(spark, 60, seed=42)
     cov = (
         polyfill_polygons(polys, 9, compact=True)
@@ -129,14 +132,23 @@ def main() -> None:
     )
     cov.count()
     flag = flagship(
-        spark, n_images=N_IMAGES, n_polygons=60, res=9, partitions=512,
+        spark, n_images=N_IMAGES, n_polygons=60, res=9,
         coverage=cov,
     )
     plan = flag._jdf.queryExecution().executedPlan().toString()
-    if N_IMAGES > 200_000:
-        assert "ShuffledHashJoin" in plan, "caption branch not shuffled!"
-    caption_join = (
-        "ShuffledHashJoin" if "ShuffledHashJoin" in plan else "Broadcast"
+    assert "Join" not in plan, "fused flagship plan has a join!"
+    salted = flagship(
+        spark, n_images=N_IMAGES, n_polygons=60, res=9, coverage=cov, salt=4
+    )
+    salted_joins = [
+        ln.strip()
+        for ln in salted._jdf.queryExecution().executedPlan()
+        .toString().splitlines()
+        if "Join" in ln
+    ]
+    assert salted_joins and all("__pref" in j for j in salted_joins), (
+        "salted flagship fallback joins more than the coverage!",
+        salted_joins,
     )
     t0 = time.time()
     rows = flag.collect()
@@ -149,7 +161,7 @@ def main() -> None:
         "rows": len(rows),
         "sum_tiles": int(sum(r["n_tiles"] for r in rows)),
         "sum_images": int(sum(r["n_images"] for r in rows)),
-        "caption_join": caption_join,
+        "salted_fallback_joins": len(salted_joins),
         "oracle_n_captions_eq_n_images": True,
         "images_per_sec": round(N_IMAGES / t_flag, 1),
     }
@@ -162,12 +174,12 @@ def main() -> None:
     n_jpeg = int(os.environ.get("STRESS_JPEG_IMAGES", str(N_IMAGES)))
     t0 = time.time()
     jrows = flagship(
-        spark, n_images=n_jpeg, n_polygons=60, res=9, partitions=512,
+        spark, n_images=n_jpeg, n_polygons=60, res=9,
         coverage=cov, fmt="jpeg",
     ).collect()
     t_jpeg = time.time() - t0
     jmap = {r["poly_id"]: r for r in jrows}
-    # every poly internally consistent (caption join correct)
+    # every poly internally consistent (captions correct)
     jbad = [r for r in jrows if r["n_captions"] != r["n_images"]]
     assert not jbad, jbad[:3]
     tile_rel = img_mism = None

@@ -21,7 +21,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 import numpy as np
 
 from h3ronpy_spark.h3core.rasterh3 import rasters_to_cells_batch
-from tests.test_rasterh3_v2 import _reference_round7, _synth_batch
+from tests.test_rasterh3_v2 import _reference_round7
 
 
 def check(name, bands, tfs, res, nodata):
@@ -35,11 +35,10 @@ def check(name, bands, tfs, res, nodata):
 
 def main():
     from h3ronpy_spark.sources.images import (
-        PIXEL_DEG,
         gen_images_jpeg_pdf,
         gen_images_pdf,
         gen_images_typed_pdf,
-        georef_of_phash,
+        transforms_of_phash,
     )
     from h3ronpy_spark.sources.jpeg import decode_jpeg
 
@@ -47,59 +46,38 @@ def main():
     for c0 in range(0, 60000, 6000):
         ids = np.arange(c0, c0 + 6000, dtype=np.int64)
         pdf = gen_images_pdf(ids)
-        lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
         bands = [
             np.frombuffer(b, np.uint8).reshape(h, w)
             for b, w, h in zip(pdf["bytes"], pdf["w"], pdf["h"])
         ]
-        tfs = np.zeros((len(bands), 6))
-        tfs[:, 0] = PIXEL_DEG
-        tfs[:, 2] = lng
-        tfs[:, 4] = -PIXEL_DEG
-        tfs[:, 5] = lat
+        tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
         check(f"bench raw8 ids {c0}..{c0+6000}", bands, tfs, 9, 0)
 
     # decoded-JPEG twin pixels (lossy -> different values than raw8)
     for c0 in range(0, 60000, 12000):
         ids = np.arange(c0, c0 + 12000, dtype=np.int64)
         pdf = gen_images_jpeg_pdf(ids)
-        lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
         bands = [decode_jpeg(b) for b in pdf["bytes"]]
-        tfs = np.zeros((len(bands), 6))
-        tfs[:, 0] = PIXEL_DEG
-        tfs[:, 2] = lng
-        tfs[:, 4] = -PIXEL_DEG
-        tfs[:, 5] = lat
+        tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
         check(f"bench jpeg ids {c0}..{c0+12000}", bands, tfs, 9, 0)
 
     # h3_tiling oracle corpus (300 images seed 42, res 9)
-    bands, tfs = _synth_batch(300, seed=0)
     pdf = gen_images_pdf(np.arange(300, dtype=np.int64))  # seed 42 ids 0..300
-    lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
     bands = [
         np.frombuffer(b, np.uint8).reshape(h, w)
         for b, w, h in zip(pdf["bytes"], pdf["w"], pdf["h"])
     ]
-    tfs = np.zeros((300, 6))
-    tfs[:, 0] = PIXEL_DEG
-    tfs[:, 2] = lng
-    tfs[:, 4] = -PIXEL_DEG
-    tfs[:, 5] = lat
+    tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
     check("h3_tiling oracle corpus (300)", bands, tfs, 9, 0)
 
     # h3_tiling_f64 oracle corpus (150 f64 seed 11, NaN nodata)
     pdf = gen_images_typed_pdf(np.arange(150, dtype=np.int64), "raw_f64",
                                seed=11)
-    lat, lng = georef_of_phash(pdf["phash"].to_numpy(np.int64))
     bands = [
         np.frombuffer(b, np.float64).reshape(h, w)
         for b, w, h in zip(pdf["bytes"], pdf["w"], pdf["h"])
     ]
-    tfs = np.zeros((150, 6))
-    tfs[:, 0] = PIXEL_DEG
-    tfs[:, 2] = lng
-    tfs[:, 4] = -PIXEL_DEG
-    tfs[:, 5] = lat
+    tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
     check("h3_tiling_f64 oracle corpus (150)", bands, tfs, 9,
           float("nan"))
 
