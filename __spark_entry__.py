@@ -466,7 +466,7 @@ def _q_image_resize(spark, sf):
     h3ronpy/tests/arrow/test_raster.py:39-55), and `bmp_ok` the BMP
     roundtrip — every registry codec now sits inside the driver's
     value-hash gate."""
-    from h3ronpy_spark.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
     from h3ronpy_spark.operators.multimodal import (
         extract_image_features,
         resize_images,
@@ -619,7 +619,7 @@ def _q_video_frames(spark, sf):
         F.round(F.col("embedding")[2].cast("double"), 6).alias("a_zcr"),
     )
 
-    from h3ronpy_spark.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
     def g711_rt_ok(b: pd.Series) -> pd.Series:

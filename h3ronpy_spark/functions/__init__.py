@@ -1,29 +1,36 @@
 """Spark SQL function layer over the h3core kernels.
 
 This is the engine's equivalent of h3ronpy's polars expression namespace
-(SURVEY.md §2.9): every H3 kernel exposed as a Column function, Arrow-batch
-vectorized via pandas UDFs — plus *pure Spark SQL fast paths* where the
-operation is just int64 bit math (resolution extraction, parent truncation,
-hex formatting, validity pre-filters).  Pure-SQL paths stay inside
-whole-stage codegen and cost no Python round-trip.
+(SURVEY.md §2.9): every H3 kernel exposed as a Column function, vectorized
+as Arrow UDFs (``arrow_udf``: each call maps the ``pa.Array`` columns of one
+Arrow batch to a ``pa.Array``, no pandas in between) — plus *pure Spark SQL
+fast paths* where the operation is just int64 bit math (resolution
+extraction, parent truncation, hex formatting, validity pre-filters).
+Pure-SQL paths stay inside whole-stage codegen and cost no Python round-trip.
 
 Conventions (SURVEY.md §1.3):
-  * H3 indexes are LongType; NULL = invalid/missing (reference uses Arrow
-    validity bitmaps the same way).
+  * H3 indexes are LongType; NULL = invalid/missing, carried as the Arrow
+    validity bitmap like the reference's.  Ids reach the kernels as exact
+    int64 (NULL as the -1 invalid sentinel), also next to NULLs.
+  * A NULL input gives NULL, with these exceptions:
+    ``*_valid`` and ``cells_is_pentagon`` give False, ``uncompact_list``
+    gives [], and struct outputs are non-null structs with NULL fields.
+    A NaN float result is NULL.
   * lat/lng are degrees at this layer (radians inside the kernels).
   * list-returning kernels yield ArrayType(LongType) for explode().
 
-All UDFs are registered for SQL use by ``register_sql_functions(spark)``.
+Every UDF is registered for SQL under its ``h3_*`` name by
+``register_sql_functions(spark)``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 # ---------------------------------------------------------------------------
 # pure SQL fast paths (no Python worker involved)
@@ -63,145 +70,155 @@ def cells_base_cell(cell: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (Arrow-vectorized numpy kernels)
+# Arrow UDFs (numpy kernels over one Arrow batch per call)
 # ---------------------------------------------------------------------------
 
-
-def _cells_np(s: pd.Series) -> np.ndarray:
-    """Nullable int64 Series -> int64 ndarray with -1 for nulls."""
-    return s.fillna(-1).to_numpy(dtype=np.int64, na_value=-1)
+_SQL_FUNCS: dict = {}
 
 
-def _to_cells_series(h: np.ndarray) -> pd.Series:
-    # nullable Int64, NOT .mask() on an int64 series: mask() coerces to
-    # float64, which silently corrupts cell ids (> 2^53) in any batch that
-    # contains a null row.  Round-8: batches with no invalid rows (the
-    # overwhelming case on clean inputs) return a plain int64 Series —
-    # the nullable IntegerArray's mask handling costs real time in the
-    # Arrow write-back of large encode batches, and a -1 can only come
-    # from the kernels' invalid-input sentinel, never a valid cell id.
-    h = h.astype(np.int64, copy=False)
-    mask = h == -1
-    if not mask.any():
-        return pd.Series(h)
-    return pd.Series(pd.arrays.IntegerArray(h, mask=mask))
+def _udf(sql_name: str, return_type: T.DataType):
+    """``arrow_udf`` over ``pa.Array`` batches, registered for SQL as
+    ``sql_name`` by ``register_sql_functions``."""
+
+    def wrap(f):
+        _SQL_FUNCS[sql_name] = fn = arrow_udf(f, return_type)
+        return fn
+
+    return wrap
 
 
-@pandas_udf(T.LongType())
-def coordinates_to_cells(lat: pd.Series, lng: pd.Series, res: pd.Series) -> pd.Series:
+def _ints(a: pa.Array) -> np.ndarray:
+    """Integer column -> exact int64 ndarray with -1 for NULL (-1 is the
+    kernels' invalid sentinel and never a valid H3 index)."""
+    return a.cast(pa.int64()).fill_null(-1).to_numpy()
+
+
+def _ids(h: np.ndarray) -> pa.Array:
+    """int64 ids -> LongType column, NULL where the kernels returned -1."""
+    return pa.array(h, mask=h == -1)
+
+
+def _floats(x: np.ndarray) -> pa.Array:
+    """float64 -> DoubleType column, NaN as NULL."""
+    return pa.array(x, from_pandas=True)
+
+
+def _lists(n: int, rows: np.ndarray, values, null_rows) -> pa.ListArray:
+    """Flat (row, value) pairs -> one list per row, values in emitted
+    order; a row with no pairs is [] unless ``null_rows`` marks it NULL."""
+    order = np.argsort(rows, kind="stable")
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(rows, minlength=n), out=offsets[1:])
+    mask = None if null_rows is None else pa.array(null_rows)
+    return pa.ListArray.from_arrays(offsets, values.take(order), mask=mask)
+
+
+@_udf("h3_coordinates_to_cells", T.LongType())
+def coordinates_to_cells(lat: pa.Array, lng: pa.Array, res: pa.Array) -> pa.Array:
     """(lat_deg, lng_deg, res) -> cell (op 28 — THE encode kernel)."""
     from h3ronpy_spark.h3core.latlng import latlng_to_cell
 
-    la = np.radians(lat.to_numpy(dtype=np.float64, na_value=np.nan))
-    lo = np.radians(lng.to_numpy(dtype=np.float64, na_value=np.nan))
-    rs = res.fillna(-1).to_numpy(dtype=np.int64, na_value=-1)
-    return _to_cells_series(latlng_to_cell(la, lo, rs))
+    la = np.radians(lat.cast(pa.float64()).to_numpy(zero_copy_only=False))
+    lo = np.radians(lng.cast(pa.float64()).to_numpy(zero_copy_only=False))
+    return _ids(latlng_to_cell(la, lo, _ints(res)))
 
 
-@pandas_udf(
+@_udf(
+    "h3_cells_to_coordinates",
     T.StructType(
         [
             T.StructField("lat", T.DoubleType()),
             T.StructField("lng", T.DoubleType()),
         ]
-    )
+    ),
 )
-def cells_to_coordinates(cell: pd.Series) -> pd.DataFrame:
+def cells_to_coordinates(cell: pa.Array) -> pa.Array:
     """cell -> centroid (degrees) (op 27)."""
     from h3ronpy_spark.h3core.latlng import cell_to_latlng
 
-    lat, lng = cell_to_latlng(_cells_np(cell))
-    return pd.DataFrame({"lat": np.degrees(lat), "lng": np.degrees(lng)})
+    lat, lng = cell_to_latlng(_ints(cell))
+    return pa.StructArray.from_arrays(
+        [_floats(np.degrees(lat)), _floats(np.degrees(lng))], ["lat", "lng"]
+    )
 
 
-@pandas_udf(T.BooleanType())
-def cells_valid(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_valid", T.BooleanType())
+def cells_valid(cell: pa.Array) -> pa.Array:
     """Full H3 validity (op 12)."""
     from h3ronpy_spark.h3core.index import is_valid_cell
 
-    return pd.Series(is_valid_cell(_cells_np(cell)) & cell.notna().to_numpy())
+    return pa.array(is_valid_cell(_ints(cell)))
 
 
-@pandas_udf(T.BooleanType())
-def cells_is_pentagon(cell: pd.Series) -> pd.Series:
+@_udf("h3_is_pentagon", T.BooleanType())
+def cells_is_pentagon(cell: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.index import is_pentagon, is_valid_cell
 
-    h = _cells_np(cell)
-    return pd.Series(is_pentagon(h) & is_valid_cell(h))
+    h = _ints(cell)
+    return pa.array(is_pentagon(h) & is_valid_cell(h))
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def change_resolution_list(cell: pd.Series, res: pd.Series) -> pd.Series:
+@_udf("h3_change_resolution_list", T.ArrayType(T.LongType()))
+def change_resolution_list(cell: pa.Array, res: pa.Array) -> pa.Array:
     """Length-preserving resolution change: one list per row (op 2).
     Coarser target -> [parent]; finer -> all children; null -> null."""
     from h3ronpy_spark.h3core import index as IDX
 
-    h = _cells_np(cell)
-    r = res.fillna(-1).to_numpy(dtype=np.int64, na_value=-1)
-    out: list = [None] * len(h)
+    h, r = _ints(cell), _ints(res)
     valid = IDX.is_valid_cell(h) & (r >= 0) & (r <= 15)
-    cur = IDX.get_resolution(h)
-    up = valid & (r <= cur)
-    if up.any():
-        pars = IDX.cell_to_parent(h[up], r[up])
-        for i, p in zip(np.nonzero(up)[0], pars):
-            out[i] = [int(p)]
-    down = valid & (r > cur)
-    if down.any():
-        rows, kids = IDX.cell_to_children_flat(h[down], r[down])
-        order = np.argsort(rows, kind="stable")
-        rows, kids = rows[order], kids[order]
-        d_idx = np.nonzero(down)[0]
-        groups = np.split(kids, np.searchsorted(rows, np.arange(1, down.sum())))
-        for gi, cells in enumerate(groups):
-            out[d_idx[gi]] = cells.tolist()
-    return pd.Series(out)
+    up = valid & (r <= IDX.get_resolution(h))
+    down = valid & ~up
+    rows, kids = IDX.cell_to_children_flat(h[down], r[down])
+    return _lists(
+        len(h),
+        np.concatenate([np.flatnonzero(up), np.flatnonzero(down)[rows]]),
+        np.concatenate([IDX.cell_to_parent(h[up], r[up]), kids]),
+        ~valid,
+    )
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def uncompact_list(cell: pd.Series, res: pd.Series) -> pd.Series:
-    """uncompact (op 11): children at target res; finer-than-target -> []."""
+@_udf("h3_uncompact", T.ArrayType(T.LongType()))
+def uncompact_list(cell: pa.Array, res: pa.Array) -> pa.Array:
+    """uncompact (op 11): children at target res; finer-than-target or
+    null -> []."""
     from h3ronpy_spark.h3core import index as IDX
 
-    h = _cells_np(cell)
-    r = res.fillna(-1).to_numpy(dtype=np.int64, na_value=-1)
-    out: list = [[]] * len(h)
+    h, r = _ints(cell), _ints(res)
     valid = IDX.is_valid_cell(h) & (r >= 0) & (r <= 15) & (
         IDX.get_resolution(h) <= r
     )
-    if valid.any():
-        rows, kids = IDX.cell_to_children_flat(h[valid], r[valid])
-        order = np.argsort(rows, kind="stable")
-        rows, kids = rows[order], kids[order]
-        v_idx = np.nonzero(valid)[0]
-        groups = np.split(kids, np.searchsorted(rows, np.arange(1, valid.sum())))
-        for gi, cells in enumerate(groups):
-            out[v_idx[gi]] = cells.tolist()
-    return pd.Series([list(x) for x in out])
+    rows, kids = IDX.cell_to_children_flat(h[valid], r[valid])
+    return _lists(len(h), np.flatnonzero(valid)[rows], kids, None)
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def grid_disk(cell: pd.Series, k: pd.Series) -> pd.Series:
-    """grid_disk (op 23): all cells within grid distance k, as a list."""
+def _disks(cell: pa.Array, k: pa.Array):
+    """Per-row k-disks as flat (rows, cells, distances), plus the rows
+    that are NULL (invalid cell or NULL k).  The kernel runs once per
+    distinct k in the batch."""
     from h3ronpy_spark.h3core.grid import grid_disk_distances
     from h3ronpy_spark.h3core.index import is_valid_cell
 
-    h = _cells_np(cell)
-    kk = int(k.iloc[0]) if len(k) else 0
-    valid = is_valid_cell(h)
-    out: list = [None] * len(h)
-    if valid.any():
-        rows, cells, _ = grid_disk_distances(h[valid], kk)
-        v_idx = np.nonzero(valid)[0]
-        order = np.argsort(rows, kind="stable")
-        rows, cells = rows[order], cells[order]
-        groups = np.split(cells, np.searchsorted(rows, np.arange(1, valid.sum())))
-        for gi, cs in enumerate(groups):
-            out[v_idx[gi]] = cs.tolist()
-    return pd.Series(out)
+    h, kk = _ints(cell), _ints(k)
+    ok = is_valid_cell(h) & k.is_valid().to_numpy(zero_copy_only=False)
+    empty = np.empty(0, dtype=np.int64)
+    parts = [(empty, empty, empty)]
+    for kv in np.unique(kk[ok]):
+        idx = np.flatnonzero(ok & (kk == kv))
+        rows, cells, dist = grid_disk_distances(h[idx], int(kv))
+        parts.append((idx[rows], cells, dist))
+    rows, cells, dist = (np.concatenate(p) for p in zip(*parts))
+    return rows, cells, dist, ~ok
 
 
-@pandas_udf(
+@_udf("h3_grid_disk", T.ArrayType(T.LongType()))
+def grid_disk(cell: pa.Array, k: pa.Array) -> pa.Array:
+    """grid_disk (op 23): all cells within grid distance k, as a list."""
+    rows, cells, _, null = _disks(cell, k)
+    return _lists(len(cell), rows, cells, null)
+
+
+@_udf(
+    "h3_grid_disk_distances",
     T.ArrayType(
         T.StructType(
             [
@@ -209,59 +226,47 @@ def grid_disk(cell: pd.Series, k: pd.Series) -> pd.Series:
                 T.StructField("k", T.IntegerType()),
             ]
         )
-    )
+    ),
 )
-def grid_disk_distances(cell: pd.Series, k: pd.Series) -> pd.Series:
+def grid_disk_distances(cell: pa.Array, k: pa.Array) -> pa.Array:
     """grid_disk_distances (op 24): disk + per-cell grid distance."""
-    from h3ronpy_spark.h3core.grid import grid_disk_distances as gdd
-    from h3ronpy_spark.h3core.index import is_valid_cell
-
-    h = _cells_np(cell)
-    kk = int(k.iloc[0]) if len(k) else 0
-    valid = is_valid_cell(h)
-    out: list = [None] * len(h)
-    if valid.any():
-        rows, cells, dist = gdd(h[valid], kk)
-        v_idx = np.nonzero(valid)[0]
-        order = np.argsort(rows, kind="stable")
-        rows, cells, dist = rows[order], cells[order], dist[order]
-        bounds = np.searchsorted(rows, np.arange(1, valid.sum()))
-        cg = np.split(cells, bounds)
-        dg = np.split(dist, bounds)
-        for gi in range(len(cg)):
-            out[v_idx[gi]] = [
-                {"cell": int(c), "k": int(d)} for c, d in zip(cg[gi], dg[gi])
-            ]
-    return pd.Series(out)
+    rows, cells, dist, null = _disks(cell, k)
+    values = pa.StructArray.from_arrays(
+        [pa.array(cells), pa.array(dist, type=pa.int32())], ["cell", "k"]
+    )
+    return _lists(len(cell), rows, values, null)
 
 
-@pandas_udf(T.DoubleType())
-def cells_area_km2(cell: pd.Series) -> pd.Series:
+def _area(cell: pa.Array, area) -> pa.Array:
+    # the area kernels give 0.0, not NaN, for the -1 NULL sentinel
+    return _floats(np.where(cell.is_valid(), area(_ints(cell)), np.nan))
+
+
+@_udf("h3_cells_area_km2", T.DoubleType())
+def cells_area_km2(cell: pa.Array) -> pa.Array:
     """Exact spherical area (op 15)."""
-    from h3ronpy_spark.h3core.boundary import cell_area_km2 as area
+    from h3ronpy_spark.h3core.boundary import cell_area_km2
 
-    a = area(_cells_np(cell))
-    return pd.Series(a).mask(~cell.notna().to_numpy())
-
-
-@pandas_udf(T.DoubleType())
-def cells_area_m2(cell: pd.Series) -> pd.Series:
-    from h3ronpy_spark.h3core.boundary import cell_area_m2 as area
-
-    a = area(_cells_np(cell))
-    return pd.Series(a).mask(~cell.notna().to_numpy())
+    return _area(cell, cell_area_km2)
 
 
-@pandas_udf(T.DoubleType())
-def cells_area_rads2(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_area_m2", T.DoubleType())
+def cells_area_m2(cell: pa.Array) -> pa.Array:
+    from h3ronpy_spark.h3core.boundary import cell_area_m2
+
+    return _area(cell, cell_area_m2)
+
+
+@_udf("h3_cells_area_rads2", T.DoubleType())
+def cells_area_rads2(cell: pa.Array) -> pa.Array:
     """Exact spherical area in steradians (op 15, rads2 variant)."""
-    from h3ronpy_spark.h3core.boundary import cell_area_rads2 as area
+    from h3ronpy_spark.h3core.boundary import cell_area_rads2
 
-    a = area(_cells_np(cell))
-    return pd.Series(a).mask(~cell.notna().to_numpy())
+    return _area(cell, cell_area_rads2)
 
 
-@pandas_udf(
+@_udf(
+    "h3_cells_bounds",
     T.StructType(
         [
             T.StructField("minx", T.DoubleType()),
@@ -269,138 +274,114 @@ def cells_area_rads2(cell: pd.Series) -> pd.Series:
             T.StructField("maxx", T.DoubleType()),
             T.StructField("maxy", T.DoubleType()),
         ]
-    )
+    ),
 )
-def cells_bounds_arrays(cell: pd.Series) -> pd.DataFrame:
+def cells_bounds_arrays(cell: pa.Array) -> pa.Array:
     """Per-cell bbox in degrees (op 30)."""
     from h3ronpy_spark.h3core.boundary import cells_bounds_arrays as cba
 
-    b = cba(_cells_np(cell))
-    return pd.DataFrame(
-        {"minx": b[:, 0], "miny": b[:, 1], "maxx": b[:, 2], "maxy": b[:, 3]}
+    b = cba(_ints(cell))
+    return pa.StructArray.from_arrays(
+        [_floats(b[:, i]) for i in range(4)], ["minx", "miny", "maxx", "maxy"]
     )
 
 
-@pandas_udf(T.BinaryType())
-def cells_to_wkb_polygons(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_to_wkb_polygons", T.BinaryType())
+def cells_to_wkb_polygons(cell: pa.Array) -> pa.Array:
     """Hexagon polygon WKB per cell (op 31)."""
     from h3ronpy_spark.h3core.boundary import cell_boundary
     from h3ronpy_spark.h3core.wkb import write_polygons
 
-    lats, lngs, counts = cell_boundary(_cells_np(cell))
-    return pd.Series(
-        write_polygons(np.degrees(lats), np.degrees(lngs), counts)
+    lats, lngs, counts = cell_boundary(_ints(cell))
+    return pa.array(
+        write_polygons(np.degrees(lats), np.degrees(lngs), counts), pa.binary()
     )
 
 
-@pandas_udf(T.BinaryType())
-def cells_to_wkb_points(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_to_wkb_points", T.BinaryType())
+def cells_to_wkb_points(cell: pa.Array) -> pa.Array:
     """Centroid WKB point per cell (op 32)."""
     from h3ronpy_spark.h3core.latlng import cell_to_latlng
     from h3ronpy_spark.h3core.wkb import write_points
 
-    lat, lng = cell_to_latlng(_cells_np(cell))
-    return pd.Series(write_points(np.degrees(lng), np.degrees(lat)))
+    lat, lng = cell_to_latlng(_ints(cell))
+    return pa.array(write_points(np.degrees(lng), np.degrees(lat)), pa.binary())
 
 
-@pandas_udf(T.LongType())
-def cells_parse(s: pd.Series) -> pd.Series:
+@_udf("h3_cells_parse", T.LongType())
+def cells_parse(s: pa.Array) -> pa.Array:
     """Parse hex / decimal / "x, y, res" strings (op 5), nulling failures
     (set_failing_to_invalid semantics; the raising variant is driver-side)."""
     from h3ronpy_spark.h3core.strings import cells_parse as parse
 
-    h = parse(s.tolist(), set_failing_to_invalid=True)
-    return _to_cells_series(h)
+    return _ids(parse(s.to_pylist(), set_failing_to_invalid=True))
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def wkb_to_cells(wkb: pd.Series, res: pd.Series, mode: pd.Series) -> pd.Series:
-    """Polyfill (op 35): WKB geometry -> covering cells at res."""
+def _polyfill(wkb: pa.Array, res: pa.Array, mode: pa.Array, compact: bool):
     from h3ronpy_spark.h3core.polyfill import wkb_to_cells as pf
 
-    rr = res.fillna(-1).astype(np.int64)
-    out = []
-    for buf, r, m in zip(wkb, rr, mode):
-        if buf is None or r < 0:
-            out.append(None)
-        else:
-            out.append(pf(bytes(buf), int(r), str(m)).tolist())
-    return pd.Series(out)
+    r = _ints(res)
+    null = wkb.is_null().to_numpy(zero_copy_only=False) | (r < 0)
+    cells = [
+        pf(buf, int(rr), str(m), compact=compact)
+        for buf, rr, m, skip in zip(wkb.to_pylist(), r, mode.to_pylist(), null)
+        if not skip
+    ]
+    rows = np.repeat(np.flatnonzero(~null), [len(c) for c in cells])
+    values = np.concatenate([np.empty(0, dtype=np.int64), *cells])
+    return _lists(len(r), rows, values, null)
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def wkb_to_cells_compact(wkb: pd.Series, res: pd.Series, mode: pd.Series) -> pd.Series:
+@_udf("h3_wkb_to_cells", T.ArrayType(T.LongType()))
+def wkb_to_cells(wkb: pa.Array, res: pa.Array, mode: pa.Array) -> pa.Array:
+    """Polyfill (op 35): WKB geometry -> covering cells at res."""
+    return _polyfill(wkb, res, mode, False)
+
+
+@_udf("h3_wkb_to_cells_compact", T.ArrayType(T.LongType()))
+def wkb_to_cells_compact(wkb: pa.Array, res: pa.Array, mode: pa.Array) -> pa.Array:
     """Hierarchical polyfill -> mixed-resolution compact coverage (op 35
     with compact=True).  Cost scales with polygon perimeter, not area —
     the variant the PIP join planner uses at scale."""
-    from h3ronpy_spark.h3core.polyfill import wkb_to_cells as pf
-
-    rr = res.fillna(-1).astype(np.int64)
-    out = []
-    for buf, r, m in zip(wkb, rr, mode):
-        if buf is None or r < 0:
-            out.append(None)
-        else:
-            out.append(pf(bytes(buf), int(r), str(m), compact=True).tolist())
-    return pd.Series(out)
+    return _polyfill(wkb, res, mode, True)
 
 
-@pandas_udf(
+@_udf(
+    "h3_cells_to_localij",
     T.StructType(
         [
             T.StructField("i", T.IntegerType()),
             T.StructField("j", T.IntegerType()),
             T.StructField("anchor", T.LongType()),
         ]
-    )
+    ),
 )
-def cells_to_localij(cell: pd.Series, anchor: pd.Series) -> pd.DataFrame:
+def cells_to_localij(cell: pa.Array, anchor: pa.Array) -> pa.Array:
     """Anchor-relative IJ coordinates (op 13)."""
     from h3ronpy_spark.h3core.localij import FAIL, cells_to_localij as clij
 
-    h = _cells_np(cell)
-    a = _cells_np(anchor)
-    i, j = clij(a, h)
-    i_s = pd.Series(i).mask(i == FAIL).astype("Int32")
-    j_s = pd.Series(j).mask(j == FAIL).astype("Int32")
-    return pd.DataFrame({"i": i_s, "j": j_s, "anchor": pd.Series(a)})
+    i, j = clij(_ints(anchor), _ints(cell))
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(i, pa.int32(), mask=i == FAIL),
+            pa.array(j, pa.int32(), mask=j == FAIL),
+            anchor.cast(pa.int64()),
+        ],
+        ["i", "j", "anchor"],
+    )
 
 
-@pandas_udf(T.LongType())
-def localij_to_cells(anchor: pd.Series, i: pd.Series, j: pd.Series) -> pd.Series:
+@_udf("h3_localij_to_cells", T.LongType())
+def localij_to_cells(anchor: pa.Array, i: pa.Array, j: pa.Array) -> pa.Array:
     """Inverse of cells_to_localij (op 14)."""
     from h3ronpy_spark.h3core.localij import FAIL, localij_to_cells as lij
 
-    a = _cells_np(anchor)
-    ii = i.fillna(FAIL).to_numpy(dtype=np.int64)
-    jj = j.fillna(FAIL).to_numpy(dtype=np.int64)
-    return _to_cells_series(lij(a, ii, jj))
-
-
-_SQL_FUNCS = {
-    "h3_coordinates_to_cells": coordinates_to_cells,
-    "h3_cells_to_coordinates": cells_to_coordinates,
-    "h3_cells_valid": cells_valid,
-    "h3_is_pentagon": cells_is_pentagon,
-    "h3_change_resolution_list": change_resolution_list,
-    "h3_uncompact": uncompact_list,
-    "h3_grid_disk": grid_disk,
-    "h3_grid_disk_distances": grid_disk_distances,
-    "h3_cells_area_km2": cells_area_km2,
-    "h3_cells_area_m2": cells_area_m2,
-    "h3_cells_bounds": cells_bounds_arrays,
-    "h3_cells_to_wkb_polygons": cells_to_wkb_polygons,
-    "h3_cells_to_wkb_points": cells_to_wkb_points,
-    "h3_cells_parse": cells_parse,
-    "h3_wkb_to_cells": wkb_to_cells,
-    "h3_wkb_to_cells_compact": wkb_to_cells_compact,
-    "h3_cells_to_localij": cells_to_localij,
-    "h3_localij_to_cells": localij_to_cells,
-}
+    ii, jj = _ints(i.fill_null(FAIL)), _ints(j.fill_null(FAIL))
+    return _ids(lij(_ints(anchor), ii, jj))
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Register every kernel for SQL, e.g.
+    """Register every Arrow UDF for SQL under its ``h3_*`` name, e.g.
     ``SELECT h3_coordinates_to_cells(lat, lng, 9) FROM t``."""
     for name, fn in _SQL_FUNCS.items():
         spark.udf.register(name, fn)
@@ -411,66 +392,54 @@ def register_sql_functions(spark: SparkSession) -> None:
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def cells_to_edges(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_to_edges", T.ArrayType(T.LongType()))
+def cells_to_edges(cell: pa.Array) -> pa.Array:
     """All directed edges originating at each cell."""
     from h3ronpy_spark.h3core.edges import cells_to_edges as c2e
     from h3ronpy_spark.h3core.index import is_valid_cell
 
-    h = _cells_np(cell)
+    h = _ints(cell)
     valid = is_valid_cell(h)
-    out: list = [None] * len(h)
-    if valid.any():
-        rows, eds = c2e(h[valid])
-        v_idx = np.nonzero(valid)[0]
-        order = np.argsort(rows, kind="stable")
-        rows, eds = rows[order], eds[order]
-        groups = np.split(eds, np.searchsorted(rows, np.arange(1, valid.sum())))
-        for gi, es in enumerate(groups):
-            out[v_idx[gi]] = es.tolist()
-    return pd.Series(out)
+    rows, eds = c2e(h[valid])
+    return _lists(len(h), np.flatnonzero(valid)[rows], eds, ~valid)
 
 
-@pandas_udf(T.LongType())
-def edges_origin(edge: pd.Series) -> pd.Series:
+@_udf("h3_edges_origin", T.LongType())
+def edges_origin(edge: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import edge_origin, edges_valid
 
-    e = _cells_np(edge)
-    out = edge_origin(e)
-    return _to_cells_series(np.where(edges_valid(e), out, -1))
+    e = _ints(edge)
+    return _ids(np.where(edges_valid(e), edge_origin(e), -1))
 
 
-@pandas_udf(T.LongType())
-def edges_destination(edge: pd.Series) -> pd.Series:
+@_udf("h3_edges_destination", T.LongType())
+def edges_destination(edge: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import edge_destination, edges_valid
 
-    e = _cells_np(edge)
-    out = np.where(edges_valid(e), edge_destination(e), -1)
-    return _to_cells_series(out)
+    e = _ints(edge)
+    return _ids(np.where(edges_valid(e), edge_destination(e), -1))
 
 
-@pandas_udf(T.BooleanType())
-def directededges_valid(edge: pd.Series) -> pd.Series:
+@_udf("h3_directededges_valid", T.BooleanType())
+def directededges_valid(edge: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import edges_valid
 
-    return pd.Series(edges_valid(_cells_np(edge)) & edge.notna().to_numpy())
+    return pa.array(edges_valid(_ints(edge)))
 
 
-@pandas_udf(T.DoubleType())
-def edges_length_km(edge: pd.Series) -> pd.Series:
+@_udf("h3_edges_length_km", T.DoubleType())
+def edges_length_km(edge: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import edge_length_km
 
-    out = edge_length_km(_cells_np(edge))
-    return pd.Series(out).mask(~edge.notna().to_numpy())
+    return _floats(edge_length_km(_ints(edge)))
 
 
-@pandas_udf(T.DoubleType())
-def edges_length_rads(edge: pd.Series) -> pd.Series:
+@_udf("h3_edges_length_rads", T.DoubleType())
+def edges_length_rads(edge: pa.Array) -> pa.Array:
     """Edge length in radians of arc (reference directededge.rs:17-33)."""
     from h3ronpy_spark.h3core.edges import edge_length_rads
 
-    out = edge_length_rads(_cells_np(edge))
-    return pd.Series(out).mask(~edge.notna().to_numpy())
+    return _floats(edge_length_rads(_ints(edge)))
 
 
 def edges_length_m(edge: Column) -> Column:
@@ -478,130 +447,91 @@ def edges_length_m(edge: Column) -> Column:
     return edges_length_km(edge) * F.lit(1000.0)
 
 
-@pandas_udf(T.BinaryType())
-def directededges_to_wkb_linestrings(edge: pd.Series) -> pd.Series:
+@_udf("h3_edges_to_wkb_linestrings", T.BinaryType())
+def directededges_to_wkb_linestrings(edge: pa.Array) -> pa.Array:
     """Edge -> 2-point WKB linestring along the shared cell boundary."""
     from h3ronpy_spark.h3core.edges import edge_boundary
     from h3ronpy_spark.h3core.wkb import write_linestrings
 
-    lats, lngs = edge_boundary(_cells_np(edge))
-    coords = []
-    for i in range(len(edge)):
-        if np.isfinite(lats[i]).all():
-            coords.append(
-                np.stack(
-                    [np.degrees(lngs[i]), np.degrees(lats[i])], axis=-1
-                )
-            )
-        else:
-            coords.append(None)
-    return pd.Series(write_linestrings(coords))
+    lats, lngs = edge_boundary(_ints(edge))
+    coords = [
+        np.stack([np.degrees(lo), np.degrees(la)], axis=-1)
+        if np.isfinite(la).all()
+        else None
+        for la, lo in zip(lats, lngs)
+    ]
+    return pa.array(write_linestrings(coords), pa.binary())
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def cells_to_vertexes(cell: pd.Series) -> pd.Series:
+@_udf("h3_cells_to_vertexes", T.ArrayType(T.LongType()))
+def cells_to_vertexes(cell: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import cells_to_vertexes as c2v
     from h3ronpy_spark.h3core.index import is_valid_cell
 
-    h = _cells_np(cell)
+    h = _ints(cell)
     valid = is_valid_cell(h)
-    out: list = [None] * len(h)
-    if valid.any():
-        rows, vs = c2v(h[valid])
-        v_idx = np.nonzero(valid)[0]
-        order = np.argsort(rows, kind="stable")
-        rows, vs = rows[order], vs[order]
-        groups = np.split(vs, np.searchsorted(rows, np.arange(1, valid.sum())))
-        for gi, g in enumerate(groups):
-            out[v_idx[gi]] = g.tolist()
-    return pd.Series(out)
+    rows, vs = c2v(h[valid])
+    return _lists(len(h), np.flatnonzero(valid)[rows], vs, ~valid)
 
 
-@pandas_udf(T.LongType())
-def vertexes_owner(vertex: pd.Series) -> pd.Series:
+@_udf("h3_vertexes_owner", T.LongType())
+def vertexes_owner(vertex: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import vertex_owner, vertexes_valid
 
-    v = _cells_np(vertex)
-    return _to_cells_series(np.where(vertexes_valid(v), vertex_owner(v), -1))
+    v = _ints(vertex)
+    return _ids(np.where(vertexes_valid(v), vertex_owner(v), -1))
 
 
-@pandas_udf(T.BooleanType())
-def vertexes_valid(vertex: pd.Series) -> pd.Series:
+@_udf("h3_vertexes_valid", T.BooleanType())
+def vertexes_valid(vertex: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import vertexes_valid as vv
 
-    return pd.Series(vv(_cells_np(vertex)) & vertex.notna().to_numpy())
+    return pa.array(vv(_ints(vertex)))
 
 
-@pandas_udf(T.BinaryType())
-def vertexes_to_wkb_points(vertex: pd.Series) -> pd.Series:
+@_udf("h3_vertexes_to_wkb_points", T.BinaryType())
+def vertexes_to_wkb_points(vertex: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.edges import vertexes_to_latlng
     from h3ronpy_spark.h3core.wkb import write_points
 
-    lat, lng = vertexes_to_latlng(_cells_np(vertex))
-    return pd.Series(write_points(np.degrees(lng), np.degrees(lat)))
+    lat, lng = vertexes_to_latlng(_ints(vertex))
+    return pa.array(write_points(np.degrees(lng), np.degrees(lat)), pa.binary())
 
 
-@pandas_udf(T.LongType())
-def vertexes_parse(s: pd.Series) -> pd.Series:
+def _parse_ids(s: pa.Array, valid) -> pa.Array:
+    """Hex (else decimal) strings -> ids, NULL where unparsable or where
+    ``valid`` rejects the value."""
+    out = np.full(len(s), -1, dtype=np.int64)
+    for i, x in enumerate(s.to_pylist()):
+        if x is None:
+            continue
+        try:
+            v = int(str(x).strip(), 16)
+        except ValueError:
+            try:
+                v = int(str(x).strip(), 10)
+            except ValueError:
+                continue
+        if 0 <= v < (1 << 63):
+            out[i] = v
+    return _ids(np.where(valid(out), out, -1))
+
+
+@_udf("h3_vertexes_parse", T.LongType())
+def vertexes_parse(s: pa.Array) -> pa.Array:
     """Parse vertex indexes from hex/decimal strings (op 6), nulling
     failures."""
     from h3ronpy_spark.h3core.edges import vertexes_valid as vv
 
-    out = np.full(len(s), -1, dtype=np.int64)
-    for i, x in enumerate(s):
-        if x is None:
-            continue
-        try:
-            v = int(str(x).strip(), 16)
-        except ValueError:
-            try:
-                v = int(str(x).strip(), 10)
-            except ValueError:
-                continue
-        if 0 <= v < (1 << 63):
-            out[i] = v
-    out = np.where(vv(out), out, -1)
-    return _to_cells_series(out)
+    return _parse_ids(s, vv)
 
 
-@pandas_udf(T.LongType())
-def directededges_parse(s: pd.Series) -> pd.Series:
+@_udf("h3_directededges_parse", T.LongType())
+def directededges_parse(s: pa.Array) -> pa.Array:
     """Parse directed-edge indexes from hex/decimal strings (op 7)."""
     from h3ronpy_spark.h3core.edges import edges_valid as ev
 
-    out = np.full(len(s), -1, dtype=np.int64)
-    for i, x in enumerate(s):
-        if x is None:
-            continue
-        try:
-            v = int(str(x).strip(), 16)
-        except ValueError:
-            try:
-                v = int(str(x).strip(), 10)
-            except ValueError:
-                continue
-        if 0 <= v < (1 << 63):
-            out[i] = v
-    out = np.where(ev(out), out, -1)
-    return _to_cells_series(out)
-
-
-_SQL_FUNCS.update(
-    {
-        "h3_cells_to_edges": cells_to_edges,
-        "h3_edges_origin": edges_origin,
-        "h3_edges_destination": edges_destination,
-        "h3_directededges_valid": directededges_valid,
-        "h3_edges_length_km": edges_length_km,
-        "h3_edges_to_wkb_linestrings": directededges_to_wkb_linestrings,
-        "h3_cells_to_vertexes": cells_to_vertexes,
-        "h3_vertexes_owner": vertexes_owner,
-        "h3_vertexes_valid": vertexes_valid,
-        "h3_vertexes_to_wkb_points": vertexes_to_wkb_points,
-        "h3_vertexes_parse": vertexes_parse,
-        "h3_directededges_parse": directededges_parse,
-    }
-)
+    return _parse_ids(s, ev)
 
 
 # ---------------------------------------------------------------------------
@@ -689,8 +619,6 @@ def to_geoarrow_table(df):
     """df.toArrow() with any ARROW:extension:* tags from the Spark schema
     re-attached as Arrow field metadata (Spark's Arrow conversion drops
     column metadata, so the tag is restored here at the boundary)."""
-    import pyarrow as pa
-
     tbl = df.toArrow()
     fields = []
     for sf in df.schema.fields:

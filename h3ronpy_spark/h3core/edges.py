@@ -103,19 +103,20 @@ def cells_to_edges(cells) -> tuple[np.ndarray, np.ndarray]:
 
 
 def edge_destination(edges) -> np.ndarray:
-    """Directed edge -> destination cell."""
+    """Directed edge -> destination cell; -1 where the edge's origin is
+    not a valid cell (such as the -1 null sentinel)."""
     edges = np.asarray(edges, dtype=np.int64)
     origin = edge_origin(edges)
     dig = get_edge_digit(edges)
     out = np.full(edges.shape, -1, dtype=np.int64)
-    uniq, inv = np.unique(origin, return_inverse=True)
+    ok = IDX.is_valid_cell(origin)
+    uniq, inv = np.unique(origin[ok], return_inverse=True)
     rows, nbr, digs = _neighbor_digits(uniq)
     # map (origin_pos, digit) -> neighbor
     key = rows * 8 + digs
     lut = dict(zip(key.tolist(), nbr.tolist()))
-    want = inv * 8 + dig
-    for i, k in enumerate(want.tolist()):
-        out[i] = lut.get(k, -1)
+    want = inv * 8 + dig[ok]
+    out[ok] = [lut.get(k, -1) for k in want.tolist()]
     return out
 
 

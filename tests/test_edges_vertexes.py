@@ -54,8 +54,13 @@ class TestEdges:
         assert ((km > 0.3) & (km < 0.8)).all()
 
     def test_invalid_inputs(self):
-        bad = np.array([0, -1, 45, int(CELLS[0])], dtype=np.int64)
+        bad = np.array(
+            [0, -1, -5, 45, (1 << 63) - 1, int(CELLS[0])], dtype=np.int64
+        )
         assert not E.edges_valid(bad).any()  # cells are not edges
+        # -1 is the NULL sentinel of the column functions
+        assert (E.edge_destination(bad) == -1).all()
+        assert np.isnan(E.edge_length_km(bad)).all()
 
 
 class TestVertexes:

@@ -12,6 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 import h3ronpy_spark.functions as H
+from h3ronpy_spark.h3core import boundary as KB
+from h3ronpy_spark.h3core import edges as KE
+from h3ronpy_spark.h3core import grid as KG
+from h3ronpy_spark.h3core import index as KI
+from h3ronpy_spark.h3core import latlng as KLL
+from h3ronpy_spark.h3core import localij as KL
+from h3ronpy_spark.h3core import wkb as KW
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
@@ -24,6 +31,152 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+_SQL_NAMES = {
+    "h3_coordinates_to_cells", "h3_cells_to_coordinates", "h3_cells_valid",
+    "h3_is_pentagon", "h3_change_resolution_list", "h3_uncompact",
+    "h3_grid_disk", "h3_grid_disk_distances", "h3_cells_area_km2",
+    "h3_cells_area_m2", "h3_cells_area_rads2", "h3_cells_bounds",
+    "h3_cells_to_wkb_polygons", "h3_cells_to_wkb_points", "h3_cells_parse",
+    "h3_wkb_to_cells", "h3_wkb_to_cells_compact", "h3_cells_to_localij",
+    "h3_localij_to_cells", "h3_cells_to_edges", "h3_edges_origin",
+    "h3_edges_destination", "h3_directededges_valid", "h3_edges_length_km",
+    "h3_edges_length_rads", "h3_edges_to_wkb_linestrings",
+    "h3_cells_to_vertexes", "h3_vertexes_owner", "h3_vertexes_valid",
+    "h3_vertexes_to_wkb_points", "h3_vertexes_parse",
+    "h3_directededges_parse",
+}
+
+# a res-10 and a res-15 cell, both above 2^53 (as is every cell at res >= 1)
+_CELLS = np.array([0x8A2A1072B59FFFF, 0x8F2A1072B59A0C1], dtype=np.int64)
+
+
+def _ids_of(kind):
+    if kind == "cell":
+        return _CELLS
+    if kind == "edge":
+        return KE.cells_to_edges(_CELLS)[1][[0, -1]]
+    return KE.cells_to_vertexes(_CELLS)[1][[0, -1]]
+
+
+def _per_row(rows, values):
+    return [[v for r, v in zip(rows, values) if r == i] for i in range(2)]
+
+
+def _plain(v):
+    """Collected Spark value -> plain lists/tuples for comparison."""
+    if isinstance(v, list):
+        return [_plain(x) for x in v]
+    return tuple(v) if isinstance(v, tuple) else v
+
+
+def _one(name):
+    return lambda c, x: getattr(H, name)(c)
+
+
+def _wkb_points(lat, lng):
+    return KW.write_points(np.degrees(lng), np.degrees(lat))
+
+
+def _linestrings(x):
+    lats, lngs = KE.edge_boundary(x)
+    return KW.write_linestrings(
+        [np.stack([np.degrees(lo), np.degrees(la)], -1) for la, lo in zip(lats, lngs)]
+    )
+
+
+def _localij_back(c, x):
+    i, j = KL.cells_to_localij(x[:1], x[:1])
+    return H.localij_to_cells(c, F.lit(int(i[0])), F.lit(int(j[0])))
+
+
+def _localij_back_want(x):
+    i, j = KL.cells_to_localij(x[:1], x[:1])
+    out = KL.localij_to_cells(x, np.full(2, i[0]), np.full(2, j[0]))
+    return [None if v == -1 else v for v in out.tolist()]
+
+
+# name -> (id kind, function making the Column, kernel oracle on the two
+# exact ids, value of the NULL row)
+_EXACT_CASES = {
+    "cells_to_coordinates": (
+        "cell", _one("cells_to_coordinates"),
+        lambda x: list(zip(*np.degrees(KLL.cell_to_latlng(x)).tolist())),
+        (None, None),
+    ),
+    "cells_valid": ("cell", _one("cells_valid"), lambda x: KI.is_valid_cell(x).tolist(), False),
+    "cells_is_pentagon": ("cell", _one("cells_is_pentagon"), lambda x: KI.is_pentagon(x).tolist(), False),
+    "change_resolution_list": (
+        "cell", lambda c, x: H.change_resolution_list(c, F.lit(9)),
+        lambda x: [[p] for p in KI.cell_to_parent(x, 9).tolist()], None,
+    ),
+    "uncompact_list": (
+        "cell", lambda c, x: H.uncompact_list(c, F.lit(11)),
+        # the res-15 cell is finer than 11 -> []
+        lambda x: [KI.cell_to_children_flat(x[:1], 11)[1].tolist(), []], [],
+    ),
+    "grid_disk": (
+        "cell", lambda c, x: H.grid_disk(c, F.lit(1)),
+        lambda x: _per_row(*KG.grid_disk_distances(x, 1)[:2]), None,
+    ),
+    "grid_disk_distances": (
+        "cell", lambda c, x: H.grid_disk_distances(c, F.lit(1)),
+        lambda x: _per_row(
+            KG.grid_disk_distances(x, 1)[0],
+            list(zip(*KG.grid_disk_distances(x, 1)[1:])),
+        ),
+        None,
+    ),
+    "cells_area_km2": ("cell", _one("cells_area_km2"), lambda x: KB.cell_area_km2(x).tolist(), None),
+    "cells_area_m2": ("cell", _one("cells_area_m2"), lambda x: KB.cell_area_m2(x).tolist(), None),
+    "cells_area_rads2": ("cell", _one("cells_area_rads2"), lambda x: KB.cell_area_rads2(x).tolist(), None),
+    "cells_bounds_arrays": (
+        "cell", _one("cells_bounds_arrays"),
+        lambda x: [tuple(b) for b in KB.cells_bounds_arrays(x).tolist()],
+        (None,) * 4,
+    ),
+    "cells_to_wkb_polygons": (
+        "cell", _one("cells_to_wkb_polygons"),
+        lambda x: (lambda la, lo, n: KW.write_polygons(np.degrees(la), np.degrees(lo), n))(
+            *KB.cell_boundary(x)
+        ),
+        None,
+    ),
+    "cells_to_wkb_points": (
+        "cell", _one("cells_to_wkb_points"), lambda x: _wkb_points(*KLL.cell_to_latlng(x)), None,
+    ),
+    "cells_to_localij": (
+        "cell", lambda c, x: H.cells_to_localij(c, c),
+        lambda x: list(zip(*KL.cells_to_localij(x, x), x.tolist())),
+        (None, None, None),
+    ),
+    "localij_to_cells": ("cell", _localij_back, _localij_back_want, None),
+    "cells_to_edges": ("cell", _one("cells_to_edges"), lambda x: _per_row(*KE.cells_to_edges(x)), None),
+    "cells_to_vertexes": (
+        "cell", _one("cells_to_vertexes"), lambda x: _per_row(*KE.cells_to_vertexes(x)), None,
+    ),
+    "edges_origin": ("edge", _one("edges_origin"), lambda x: KE.edge_origin(x).tolist(), None),
+    "edges_destination": (
+        "edge", _one("edges_destination"), lambda x: KE.edge_destination(x).tolist(), None,
+    ),
+    "directededges_valid": (
+        "edge", _one("directededges_valid"), lambda x: KE.edges_valid(x).tolist(), False,
+    ),
+    "edges_length_km": ("edge", _one("edges_length_km"), lambda x: KE.edge_length_km(x).tolist(), None),
+    "edges_length_rads": (
+        "edge", _one("edges_length_rads"), lambda x: KE.edge_length_rads(x).tolist(), None,
+    ),
+    "directededges_to_wkb_linestrings": (
+        "edge", _one("directededges_to_wkb_linestrings"), _linestrings, None,
+    ),
+    "vertexes_owner": ("vertex", _one("vertexes_owner"), lambda x: KE.vertex_owner(x).tolist(), None),
+    "vertexes_valid": ("vertex", _one("vertexes_valid"), lambda x: KE.vertexes_valid(x).tolist(), False),
+    "vertexes_to_wkb_points": (
+        "vertex", _one("vertexes_to_wkb_points"),
+        lambda x: _wkb_points(*KE.vertexes_to_latlng(x)), None,
+    ),
+}
 
 
 class TestFunctions:
@@ -73,6 +226,50 @@ class TestFunctions:
             "SELECT h3_coordinates_to_cells(45.5d, 10.2d, 5) AS c"
         ).first()
         assert r["c"] == 0x851F9923FFFFFFF
+        # every UDF of the module is registered, under the stable names
+        udfs = [v for v in vars(H).values() if hasattr(v, "evalType")]
+        assert {id(u) for u in udfs} == {id(u) for u in H._SQL_FUNCS.values()}
+        assert set(H._SQL_FUNCS) == _SQL_NAMES
+        assert all(spark.catalog.functionExists(n) for n in _SQL_NAMES)
+        # a cell function through SQL, next to a NULL in one Arrow batch
+        cells = [int(c) for c in _CELLS]
+        spark.createDataFrame(
+            [(cells[0],), (None,), (cells[1],)], "c long"
+        ).coalesce(1).createOrReplaceTempView("h3_sql_cells")
+        got = spark.sql(
+            "SELECT h3_cells_valid(c) AS ok, h3_grid_disk(c, 0) AS d "
+            "FROM h3_sql_cells"
+        ).collect()
+        assert [r["ok"] for r in got] == [True, False, True]
+        assert [r["d"] for r in got] == [[cells[0]], None, [cells[1]]]
+
+    @pytest.mark.parametrize("name", sorted(_EXACT_CASES))
+    def test_exact_ids_next_to_null(self, spark, name):
+        """(id > 2^53, NULL, id) in one Arrow batch: the valid rows equal
+        the kernel on the exact int64 ids, the NULL row the function's
+        null value."""
+        kind, col, oracle, null = _EXACT_CASES[name]
+        x = _ids_of(kind)
+        df = spark.createDataFrame(
+            [(int(x[0]),), (None,), (int(x[1]),)], "c long"
+        ).coalesce(1)
+        got = [_plain(r[0]) for r in df.select(col(F.col("c"), x)).collect()]
+        want = oracle(x)
+        assert got == [want[0], null, want[1]]
+
+    def test_grid_disk_k_per_row(self, spark):
+        cell = int(_CELLS[0])
+        df = spark.createDataFrame(
+            [(cell, 0), (cell, 1), (cell, None), (cell, 2)], "c long, k int"
+        ).coalesce(1)
+        got = df.select(
+            H.grid_disk("c", "k").alias("d"),
+            H.grid_disk_distances("c", "k").alias("dd"),
+        ).collect()
+        assert [r["d"] and len(r["d"]) for r in got] == [1, 7, None, 19]
+        assert [r["dd"] and max(s["k"] for s in r["dd"]) for r in got] == [
+            0, 1, None, 2
+        ]
 
 
 class TestFlagship:
