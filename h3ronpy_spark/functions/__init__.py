@@ -158,6 +158,22 @@ def cells_is_pentagon(cell: pa.Array) -> pa.Array:
     return pa.array(is_pentagon(h) & is_valid_cell(h))
 
 
+def _children(h: np.ndarray, r: np.ndarray):
+    """cell_to_children_flat of a batch, refused (ValueError naming the
+    largest row) when it would allocate more than MAX_EXPAND_CELLS."""
+    from h3ronpy_spark.h3core import index as IDX
+
+    counts = IDX.children_count(h, r)
+    if counts.sum(dtype=np.float64) > IDX.MAX_EXPAND_CELLS:
+        i = int(np.argmax(counts))
+        raise ValueError(
+            f"cell {int(h[i]):x} to resolution {int(r[i])} expands to "
+            f"{int(counts[i])} cells; a batch may expand to at most "
+            f"{IDX.MAX_EXPAND_CELLS}"
+        )
+    return IDX.cell_to_children_flat(h, r)
+
+
 @_udf("h3_change_resolution_list", T.ArrayType(T.LongType()))
 def change_resolution_list(cell: pa.Array, res: pa.Array) -> pa.Array:
     """Length-preserving resolution change: one list per row (op 2).
@@ -168,7 +184,7 @@ def change_resolution_list(cell: pa.Array, res: pa.Array) -> pa.Array:
     valid = IDX.is_valid_cell(h) & (r >= 0) & (r <= 15)
     up = valid & (r <= IDX.get_resolution(h))
     down = valid & ~up
-    rows, kids = IDX.cell_to_children_flat(h[down], r[down])
+    rows, kids = _children(h[down], r[down])
     return _lists(
         len(h),
         np.concatenate([np.flatnonzero(up), np.flatnonzero(down)[rows]]),
@@ -187,7 +203,7 @@ def uncompact_list(cell: pa.Array, res: pa.Array) -> pa.Array:
     valid = IDX.is_valid_cell(h) & (r >= 0) & (r <= 15) & (
         IDX.get_resolution(h) <= r
     )
-    rows, kids = IDX.cell_to_children_flat(h[valid], r[valid])
+    rows, kids = _children(h[valid], r[valid])
     return _lists(len(h), np.flatnonzero(valid)[rows], kids, None)
 
 
@@ -237,24 +253,19 @@ def grid_disk_distances(cell: pa.Array, k: pa.Array) -> pa.Array:
     return _lists(len(cell), rows, values, null)
 
 
-def _area(cell: pa.Array, area) -> pa.Array:
-    # the area kernels give 0.0, not NaN, for the -1 NULL sentinel
-    return _floats(np.where(cell.is_valid(), area(_ints(cell)), np.nan))
-
-
 @_udf("h3_cells_area_km2", T.DoubleType())
 def cells_area_km2(cell: pa.Array) -> pa.Array:
     """Exact spherical area (op 15)."""
     from h3ronpy_spark.h3core.boundary import cell_area_km2
 
-    return _area(cell, cell_area_km2)
+    return _floats(cell_area_km2(_ints(cell)))
 
 
 @_udf("h3_cells_area_m2", T.DoubleType())
 def cells_area_m2(cell: pa.Array) -> pa.Array:
     from h3ronpy_spark.h3core.boundary import cell_area_m2
 
-    return _area(cell, cell_area_m2)
+    return _floats(cell_area_m2(_ints(cell)))
 
 
 @_udf("h3_cells_area_rads2", T.DoubleType())
@@ -262,7 +273,7 @@ def cells_area_rads2(cell: pa.Array) -> pa.Array:
     """Exact spherical area in steradians (op 15, rads2 variant)."""
     from h3ronpy_spark.h3core.boundary import cell_area_rads2
 
-    return _area(cell, cell_area_rads2)
+    return _floats(cell_area_rads2(_ints(cell)))
 
 
 @_udf(

@@ -299,10 +299,12 @@ def _hex2d_point_to_geo(xy, face: int, res: int):
 
 
 def cell_area_rads2(h) -> np.ndarray:
-    """Exact spherical area of each cell (steradians)."""
+    """Exact spherical area of each cell (steradians); NaN for an
+    invalid id."""
     lats, lngs, counts = cell_boundary(h)
     clat, clng = _centers(h)
-    return _poly_area_rads2(lats, lngs, counts, clat, clng)
+    area = _poly_area_rads2(lats, lngs, counts, clat, clng)
+    return np.where(counts > 0, area, np.nan)
 
 
 def _centers(h):

@@ -27,6 +27,10 @@ MODE_CELL = 1
 MODE_EDGE = 2
 MODE_VERTEX = 4
 
+# Largest number of cells one expansion (a polyfill uncompacted to its
+# resolution, a batch of children lists) may allocate.
+MAX_EXPAND_CELLS = 50_000_000
+
 _U = np.uint64
 
 

@@ -15,10 +15,22 @@ sampling plus gap-free dedupe, multis/collections recurse, empty -> empty.
 Output per geometry is a sorted, deduped cell list; optional `compact`.
 
 Algorithm: candidate cells = encodings of a sub-cell-spaced lat/lng sample
-grid over the polygon bbox, dilated by one neighbor ring; candidates are
-then classified by point-in-polygon tests of their centroid and boundary
-vertices plus segment-intersection tests.  All numpy-vectorized across
-candidates.
+grid over the polygon bbox dilated by one cell size.  Each candidate gets
+only the predicates its mode and level need, all in the planar lng/lat
+frame of the point-in-polygon test:
+
+  * ContainsCentroid result cells take the centroid test alone.
+  * Every other classification also encodes the polygon vertices (a
+    vertex inside a cell), and only candidates whose centroid lies
+    within FAR_RADIUS_RAD[res] of a ring edge (or near a pole or the
+    longitude seam) compute their boundary: vertex point-in-polygon and
+    cell-edge x ring-edge crossings.  A farther cell lies wholly on its
+    centroid's side of the ring.
+
+Polygons too big for a direct fill take the hierarchical compact fill
+(polygon_to_cells_compact): fully-inside coarse cells are emitted as-is
+and only partial ones are refined a resolution finer.  All
+numpy-vectorized across candidates.
 """
 
 from __future__ import annotations
@@ -30,6 +42,7 @@ import numpy as np
 from . import index as IDX
 from .boundary import cell_boundary
 from .latlng import cell_to_latlng, latlng_to_cell
+from .rasterh3 import AVG_EDGE_RAD
 from .wkb import parse_wkb
 
 MODE_CENTROID = "containscentroid"
@@ -71,6 +84,16 @@ def coerce_containment_mode(mode) -> str:
 # grid itself: res-0 lattice unit is atan(RES0_U_GNOMONIC*...) ~ spacing /
 # sqrt(7)^res.  Used only for sampling density, so approximate is fine.
 _EDGE_DEG = 24.0 / (7.0 ** (np.arange(16) / 2.0))
+
+# Upper bound (radians) on the great-circle distance from a cell's
+# centroid to any point of the cell, per resolution.  The largest
+# centroid-to-vertex distance, measured over random cells on every base
+# cell, face-edge cells and the descendants of all 12 pentagons, is
+# 1.098 average edges at every resolution; cell edges are great-circle
+# arcs, so no point of a cell is farther than its farthest vertex.
+# 1.25 average edges leaves a ~14% margin; tests/test_polyfill_classify.py
+# re-checks the bound for every resolution.
+FAR_RADIUS_RAD = 1.25 * AVG_EDGE_RAD
 
 
 def _pip(plng: np.ndarray, plat: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
@@ -195,32 +218,77 @@ def _candidate_cells(
     return np.unique(cells[cells != -1])
 
 
-def _classify_cells(
-    cand: np.ndarray,
+def _centroids(cand: np.ndarray, shifted: bool):
+    """Candidate centroids in the working plane: (lng deg, lat deg,
+    lat rad)."""
+    clat, clng = cell_to_latlng(cand)
+    return _shift_lng(np.degrees(clng), shifted), np.degrees(clat), clat
+
+
+def _near_ring(
+    x: np.ndarray,
+    y: np.ndarray,
+    lat: np.ndarray,
     rings: list[np.ndarray],
     res: int,
-    shifted: bool = False,
-):
-    """Per-candidate geometry predicates vs the polygon.
+    shifted: bool,
+) -> np.ndarray:
+    """Candidates (centroids x, y in degrees, lat in radians) that need
+    the boundary tests: a ring edge passes within R = FAR_RADIUS_RAD[res]
+    of the centroid, the cell may reach a pole, or it may straddle the
+    working plane's longitude seam (±180, or 0/360 when `shifted`).
 
-    Returns (cen_in, full, intersects, covers): centroid-inside;
-    fully-inside (all boundary verts in, no edge crossing, no polygon
-    vertex inside the cell — the last also handles holes/islands smaller
-    than a cell); boundary-overlap; and covers = intersects PLUS cells
-    that contain the whole (sub-cell) geometry without touching its
-    boundary — the reference's ContainmentMode::Covers distinction
-    (h3ronpy/src/vector.rs:59-60; round-5 split, previously both modes
-    returned the covers set).  With `shifted`, rings live in the
-    transmeridian plane and cell coordinates are shifted to match."""
-    clat, clng = cell_to_latlng(cand)
-    cen_in = _pip(
-        _shift_lng(np.degrees(clng), shifted), np.degrees(clat), rings
-    )
+    Along a path of length <= R from a centroid at latitude lat,
+    ds^2 = dlat^2 + cos^2(lat') dlng^2 >= dlat^2 + k^2 dlng^2 with
+    k = cos(|lat| + R), so every point of the cell lies within R (in
+    degrees) of the centroid in the (k lng, lat) plane.  A linear
+    scaling keeps segments and their crossings, so when no ring edge
+    comes that close no cell edge crosses a ring edge and every cell
+    vertex has its centroid's point-in-polygon parity.  Points are
+    y-sorted once and each edge only measures the searchsorted slice
+    within R of its y-span, as in _pip."""
+    r = FAR_RADIUS_RAD[res]
+    rd = np.degrees(r)
+    polar = np.abs(lat) + r >= 0.5 * np.pi
+    k = np.where(polar, 1.0, np.cos(np.abs(lat) + r))
+    half_w = rd / k
+    lo, hi = (0.0, 360.0) if shifted else (-180.0, 180.0)
+    near = polar | (x - half_w <= lo) | (x + half_w >= hi)
+    order = np.argsort(y, kind="stable")
+    sy, sx, sk, snear = y[order], x[order], k[order], near[order]
+    for ring in rings:
+        for e in range(ring.shape[0] - 1):
+            x0, y0 = ring[e]
+            x1, y1 = ring[e + 1]
+            i0 = np.searchsorted(sy, min(y0, y1) - rd, side="left")
+            i1 = np.searchsorted(sy, max(y0, y1) + rd, side="right")
+            if i0 == i1:
+                continue
+            kk = sk[i0:i1]
+            px = (sx[i0:i1] - x0) * kk
+            py = sy[i0:i1] - y0
+            ex = (x1 - x0) * kk
+            ey = y1 - y0
+            den = ex * ex + ey * ey
+            t = np.divide(px * ex + py * ey, den,
+                          out=np.zeros_like(den), where=den > 0)
+            t = np.clip(t, 0.0, 1.0)
+            dx = px - t * ex
+            dy = py - t * ey
+            snear[i0:i1] |= dx * dx + dy * dy <= rd * rd
+    near[order] = snear
+    return near
 
-    blat, blng, counts = cell_boundary(cand)
+
+def _boundary_tests(cells: np.ndarray, rings: list[np.ndarray],
+                    shifted: bool):
+    """(all_in, any_in, crossed) per cell: every / some boundary vertex
+    inside the polygon, and some cell edge properly crossing a ring
+    edge."""
+    blat, blng, counts = cell_boundary(cells)
     blatd = np.degrees(blat)
     blngd = _shift_lng(np.degrees(blng), shifted)
-    n = cand.size
+    n = cells.size
     flat = blngd.ravel()
     flaty = blatd.ravel()
     fin = np.isfinite(flat)
@@ -248,8 +316,8 @@ def _classify_cells(
     e1 = np.stack([np.concatenate(cell_e1x), np.concatenate(cell_e1y)], axis=-1)
     erows = np.concatenate(rows)
     # bbox prefilter: the exact N_cell_edges x M_ring_edges intersection
-    # was the polyfill hot spot (4 cross products per pair); a 4-compare
-    # bbox-overlap pass keeps only near-boundary pairs (typically <1%)
+    # is 4 cross products per pair; a 4-compare bbox-overlap pass keeps
+    # only near-boundary pairs
     ce_min = np.minimum(e0, e1)
     ce_max = np.maximum(e0, e1)
     re_min = np.minimum(ring_edges0, ring_edges1)
@@ -267,6 +335,31 @@ def _classify_cells(
             e0[pi], e1[pi], ring_edges0[pj], ring_edges1[pj]
         )
         np.logical_or.at(crossed, erows[pi], hits)
+    return all_in, any_in, crossed
+
+
+def _classify_cells(
+    cand: np.ndarray,
+    rings: list[np.ndarray],
+    res: int,
+    shifted: bool = False,
+):
+    """Per-candidate geometry predicates vs the polygon.
+
+    Returns (cen_in, full, intersects, covers): centroid-inside;
+    fully-inside (all boundary verts in, no edge crossing, no polygon
+    vertex inside the cell — the last also handles holes/islands smaller
+    than a cell); boundary-overlap; and covers = intersects PLUS cells
+    that contain the whole (sub-cell) geometry without touching its
+    boundary — the reference's ContainmentMode::Covers distinction
+    (h3ronpy/src/vector.rs:59-60).  With `shifted`, rings live in the
+    transmeridian plane and cell coordinates are shifted to match.
+
+    Only the candidates _near_ring keeps take the boundary tests; for
+    the others every vertex shares the centroid's side and no edge
+    crosses, so all_in = any_in = cen_in and crossed = False."""
+    x, y, lat = _centroids(cand, shifted)
+    cen_in = _pip(x, y, rings)
 
     vx = np.vstack(rings)
     vlng = vx[:, 0]
@@ -275,14 +368,36 @@ def _classify_cells(
     vcells = latlng_to_cell(np.radians(vx[:, 1]), np.radians(vlng), res)
     has_vert = np.isin(cand, vcells[vcells != -1])
 
-    full = cen_in & all_in & ~crossed & ~has_vert
+    full = cen_in & ~has_vert
+    intersects = cen_in.copy()
+    near = np.flatnonzero(_near_ring(x, y, lat, rings, res, shifted))
+    if near.size:
+        all_in, any_in, crossed = _boundary_tests(cand[near], rings, shifted)
+        full[near] &= all_in & ~crossed
+        intersects[near] |= any_in | crossed
     # a polygon vertex inside the cell with no boundary crossing and no
     # cell vertex inside the polygon = geometry strictly inside the cell
     # (or a degenerate touch): IntersectsBoundary excludes it, Covers
     # returns the covering cell (reference semantics)
-    intersects = cen_in | any_in | crossed
     covers = intersects | has_vert
     return cen_in, full, intersects, covers
+
+
+def _fill_level(
+    cand: np.ndarray, rings: list[np.ndarray], res: int, mode: str,
+    shifted: bool,
+) -> np.ndarray:
+    """The candidates at the result resolution that `mode` keeps.
+    ContainsCentroid needs only the centroid test."""
+    if mode == MODE_CENTROID:
+        x, y, _ = _centroids(cand, shifted)
+        return cand[_pip(x, y, rings)]
+    _, full, intersects, covers = _classify_cells(cand, rings, res, shifted)
+    if mode == MODE_CONTAINS:
+        return cand[full]
+    if mode == MODE_INTERSECTS:
+        return cand[intersects]
+    return cand[covers]
 
 
 def _close_rings(rings: list[np.ndarray]) -> list[np.ndarray]:
@@ -344,26 +459,16 @@ def polygon_to_cells(
     rings, shifted = _normalize_transmeridian(rings)
     if _est_cells(rings, res) > _DIRECT_BUDGET:
         comp = polygon_to_cells_compact(rings, res, mode)
-        if comp.size and IDX.children_count(comp, res).sum() > 50_000_000:
+        if IDX.children_count(comp, res).sum() > IDX.MAX_EXPAND_CELLS:
             raise ValueError(
-                "polyfill would produce >50M cells; use the compact variant"
+                f"polyfill would produce >{IDX.MAX_EXPAND_CELLS} cells; "
+                "use the compact variant"
             )
         _, cells = IDX.uncompact(comp, res)
         return np.sort(cells)
 
     cand = _candidate_cells(rings, res, shifted)
-    if cand.size == 0:
-        return cand
-    cen_in, full, intersects, covers = _classify_cells(
-        cand, rings, res, shifted
-    )
-    if mode == MODE_CENTROID:
-        return np.sort(cand[cen_in])
-    if mode == MODE_CONTAINS:
-        return np.sort(cand[full])
-    if mode == MODE_INTERSECTS:
-        return np.sort(cand[intersects])
-    return np.sort(cand[covers])
+    return np.sort(_fill_level(cand, rings, res, mode, shifted))
 
 
 def polygon_to_cells_compact(
@@ -387,45 +492,22 @@ def polygon_to_cells_compact(
     while r0 > 0 and _est_cells(rings, r0) > budget:
         r0 -= 1
     cand = _candidate_cells(rings, r0, shifted)
-    if cand.size == 0:
-        return cand
-    out_full = []
-    cen_in, full, inter, covers = _classify_cells(cand, rings, r0, shifted)
     if r0 == res:
-        if mode == MODE_CENTROID:
-            return np.sort(cand[cen_in])
-        if mode == MODE_CONTAINS:
-            return np.sort(cand[full])
-        if mode == MODE_INTERSECTS:
-            return np.sort(cand[inter])
-        return np.sort(cand[covers])
-    out_full.append(cand[full])
-    # descend through COVERS (not intersects): a coarse cell strictly
-    # containing the whole polygon has no boundary overlap at all and
-    # would otherwise terminate the refinement with an empty result
-    partial = cand[covers & ~full]
-    for r in range(r0 + 1, res + 1):
+        return np.sort(_fill_level(cand, rings, res, mode, shifted))
+    out = []
+    for r in range(r0, res):
+        _, full, _, covers = _classify_cells(cand, rings, r, shifted)
+        out.append(cand[full])
+        # descend through COVERS (not intersects): a coarse cell strictly
+        # containing the whole polygon has no boundary overlap at all and
+        # would otherwise terminate the refinement with an empty result
+        partial = cand[covers & ~full]
         if partial.size == 0:
             break
-        _, kids = IDX.cell_to_children_flat(partial, r)
-        cen_in, full, inter, covers = _classify_cells(
-            kids, rings, r, shifted
-        )
-        if r == res:
-            if mode == MODE_CENTROID:
-                out_full.append(kids[cen_in])
-            elif mode == MODE_CONTAINS:
-                out_full.append(kids[full])
-            elif mode == MODE_INTERSECTS:
-                out_full.append(kids[inter])
-            else:
-                out_full.append(kids[covers])
-            partial = kids[:0]
-        else:
-            out_full.append(kids[full])
-            partial = kids[covers & ~full]
-    cells = np.concatenate(out_full) if out_full else cand[:0]
-    return IDX.compact(np.unique(cells))
+        _, cand = IDX.cell_to_children_flat(partial, r + 1)
+    else:
+        out.append(_fill_level(cand, rings, res, mode, shifted))
+    return IDX.compact(np.unique(np.concatenate(out)))
 
 
 def line_to_cells(coords: np.ndarray, res: int) -> np.ndarray:

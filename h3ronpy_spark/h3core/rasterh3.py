@@ -401,7 +401,7 @@ def rasters_to_cells_batch(
 
 # Average hexagon edge per resolution (radians): the edge of a regular
 # hexagon of the average cell area.
-_AVG_EDGE_RAD = (
+AVG_EDGE_RAD = (
     np.sqrt(2.0 * AVG_CELL_AREA_KM2 / (3.0 * np.sqrt(3.0))) / EARTH_RADIUS_KM
 )
 # Largest sample-gap radius the prefilter accepts at a coarse resolution
@@ -411,7 +411,7 @@ _AVG_EDGE_RAD = (
 # the average edge (at pentagons; 0.87-0.96 of their own edge), so the
 # bound holds with a ~30% margin.  tests/test_footprint_prefilter.py
 # re-checks it at this radius for every rp.
-FOOTPRINT_SAFE_RADIUS_RAD = 0.5 * _AVG_EDGE_RAD
+FOOTPRINT_SAFE_RADIUS_RAD = 0.5 * AVG_EDGE_RAD
 
 
 def footprint_radius(transforms, ws, hs) -> np.ndarray:

@@ -78,6 +78,28 @@ _COV_INDEX_CACHE: dict = {}
 _COV_INDEX_MAX = 8
 
 
+# Coverages pip_join built and persisted itself (coverage=None) for the
+# Catalyst plans it returned: those plans read the cached rows, so the
+# newest stay persisted and the oldest is unpersisted on overflow (a plan
+# built on it still runs, recomputing the polyfill).
+_OWN_COV_LOCK = threading.Lock()
+_OWN_COVERAGES: list = []
+_OWN_COV_MAX = 4
+
+
+def _keep_coverage(cov: DataFrame) -> None:
+    sc = cov.sparkSession.sparkContext
+    with _OWN_COV_LOCK:
+        # a stopped SparkContext took its cached rows with it, and
+        # unpersist on its DataFrames fails
+        _OWN_COVERAGES[:] = [
+            d for d in _OWN_COVERAGES if d.sparkSession.sparkContext is sc
+        ]
+        _OWN_COVERAGES.append(cov)
+        while len(_OWN_COVERAGES) > _OWN_COV_MAX:
+            _OWN_COVERAGES.pop(0).unpersist()
+
+
 def _cached_index(key, cov):
     with _COV_INDEX_LOCK:
         hit = _COV_INDEX_CACHE.get(key)
@@ -401,9 +423,10 @@ def pip_join(
                 # broadcast, so the coverage persisted above can go
                 cov.unpersist()
             return out
+    if coverage is None:
+        _keep_coverage(cov)
     n_cov, res_list = _coverage_meta(cov)
     if not res_list:
-        cov.unpersist()
         return left_cells.join(
             polygons.drop("wkb").limit(0), F.lit(False), how
         )

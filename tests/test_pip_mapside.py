@@ -169,6 +169,60 @@ def test_mapside_leaves_no_persisted_coverage(spark, setup):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_catalyst_coverages_stay_bounded(spark, setup):
+    """pip_join(coverage=None) on the Catalyst path keeps at most
+    _OWN_COV_MAX of the coverages it persisted; an evicted one's plan
+    still runs."""
+    from h3ronpy_spark.operators.spatial_join import _OWN_COV_MAX
+
+    polys, _cov, cells = setup
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    first = pip_join(cells, polys.limit(3), res=8)
+    want = _rows(first)
+    for k in range(_OWN_COV_MAX + 3):
+        pip_join(cells, polys.limit(4 + k), res=8).count()
+        assert jsc.getPersistentRDDs().size() - before <= _OWN_COV_MAX
+    assert _rows(first) == want
+
+
+def test_empty_provided_coverage_stays_persisted(spark, setup):
+    """An empty caller-provided coverage gives no rows and is left as
+    the caller persisted it."""
+    _polys, cov, cells = setup
+    empty = cov.limit(0).persist()
+    empty.count()
+    out = pip_join(cells, _polys, res=8, coverage=empty)
+    assert out.count() == 0
+    assert empty.is_cached
+    empty.unpersist()
+
+
+def test_kept_coverages_of_a_stopped_context_are_dropped(monkeypatch):
+    """Coverages kept under an earlier (stopped) SparkContext leave the
+    registry without an unpersist call, which would fail on them."""
+    from types import SimpleNamespace
+
+    from h3ronpy_spark.operators import spatial_join as SJ
+
+    monkeypatch.setattr(SJ, "_OWN_COVERAGES", [])
+    unpersisted = []
+
+    def cov(sc, name):
+        return SimpleNamespace(
+            sparkSession=SimpleNamespace(sparkContext=sc),
+            unpersist=lambda: unpersisted.append(name),
+        )
+
+    old_sc, new_sc = object(), object()
+    for i in range(3):
+        SJ._keep_coverage(cov(old_sc, f"old{i}"))
+    for i in range(SJ._OWN_COV_MAX + 1):
+        SJ._keep_coverage(cov(new_sc, f"new{i}"))
+    assert unpersisted == ["new0"]
+    assert len(SJ._OWN_COVERAGES) == SJ._OWN_COV_MAX
+
+
 def test_evicted_index_dataframe_still_runs(spark, setup):
     from h3ronpy_spark.operators.spatial_join import (
         _COV_INDEX_MAX,

@@ -257,6 +257,37 @@ class TestFunctions:
         want = oracle(x)
         assert got == [want[0], null, want[1]]
 
+    def test_area_null_for_invalid_ids(self, spark):
+        """Non-null invalid ids give NaN from the area kernels and NULL
+        from the column functions, like every other float function."""
+        bad = [0, 1, -5, 2**63 - 1]
+        for fn in (KB.cell_area_km2, KB.cell_area_m2, KB.cell_area_rads2):
+            assert np.isnan(fn(np.array(bad, np.int64))).all()
+        df = spark.createDataFrame(
+            [(b,) for b in bad] + [(int(_CELLS[0]),)], "c long"
+        ).coalesce(1)
+        rows = df.select(
+            H.cells_area_km2("c"), H.cells_area_m2("c"),
+            H.cells_area_rads2("c"),
+        ).collect()
+        assert [tuple(r) for r in rows[:4]] == [(None, None, None)] * 4
+        assert all(v > 0 for v in rows[4])
+
+    def test_children_lists_refuse_oversized_expansion(self, spark):
+        """A res-0 cell to res 15 (~4.7e12 children) raises a ValueError
+        naming the row instead of allocating; the session keeps
+        working."""
+        base = 0x8001FFFFFFFFFFF
+        df = spark.createDataFrame([(base,)], "c long")
+        for fn in (H.change_resolution_list, H.uncompact_list):
+            with pytest.raises(Exception) as err:
+                df.select(fn(F.col("c"), F.lit(15))).collect()
+            msg = str(err.value)
+            assert "ValueError: cell 8001fffffffffff to resolution 15" in msg
+            assert "exited unexpectedly" not in msg
+        kids = df.select(H.uncompact_list(F.col("c"), F.lit(2))).first()[0]
+        assert len(kids) == 49
+
     def test_grid_disk_k_per_row(self, spark):
         cell = int(_CELLS[0])
         df = spark.createDataFrame(
