@@ -13,7 +13,11 @@ spark.range ids that, per chunk of ids, generates each image (byte
 generation, JPEG encode included, stands in for the storage read),
 decodes it through the codec registry snapshot (batch decoders where
 registered and not overridden) and tiles it.  An emitter decides what
-the chunk's tiles become.
+the chunk's tiles become.  The JPEG batch codec decodes a chunk's
+images image by image when they are fewer than
+sources.jpeg.LOCKSTEP_MIN_LANES, as the few the fused path's footprint
+prefilter keeps are; the fallback's full chunks take the lockstep
+decoder.
 
 Default path (fused): one Python stage, no joins.  Only the images whose
 footprint can reach the coverage (h3core.rasterh3.footprint_mask) are
@@ -40,7 +44,12 @@ emits plain tile rows (image long, cell long, px_value long) for every
 image: no footprint mask, no string column.  They go through pip_join's
 Catalyst equi-join and a groupBy to (poly, image); a small mapInPandas
 over those rollup rows adds the caption from the image id
-(sources.images.caption_of_ids).  The fallback is the independent check
+(sources.images.caption_of_ids).  A coverage the fallback polyfilled
+itself (coverage=None) joins pip_join's bounded registry of the
+coverages it persisted (operators.spatial_join._keep_coverage), so
+repeated calls do not pile up persisted coverages.  The polygon
+DataFrame is built only where it is read: that polyfill and the
+fallback's pip_join.  The fallback is the independent check
 of the fused path's footprint prefilter and map-side probe; it shares
 the fused path's decoder, so the scalar-vs-batch decoder cross-check
 lives in tests (test_fused_equals_legacy builds its reference plan from
@@ -57,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.spatial_join import (
+    _keep_coverage,
     mapside_index,
     pip_join,
     polyfill_polygons,
@@ -272,11 +282,14 @@ def flagship(
         codecs = codec_snapshot()
     batch_codecs = batch_codec_snapshot()
 
-    polys = synth_polygons(spark, n_polygons, seed=seed)
+    # the polygon DataFrame is built only where it is read: the
+    # polyfill below and the fallback's pip_join
+    polys = None
     cov = coverage
     if cov is None:
         # persisted: the budget check, the index collect and the
         # fallback's pip_join all read it, and the polyfill runs once
+        polys = synth_polygons(spark, n_polygons, seed=seed)
         cov = (
             polyfill_polygons(polys, res, compact=True)
             .withColumnRenamed("cell", "__poly_cell")
@@ -305,6 +318,12 @@ def flagship(
             "n_tiles long, sum_px long, caption string",
         )
     else:
+        if polys is None:
+            polys = synth_polygons(spark, n_polygons, seed=seed)
+        if coverage is None:
+            # the returned plan reads the persisted coverage: it joins
+            # pip_join's bounded registry of the coverages it persisted
+            _keep_coverage(cov)
         tiles = ids.mapInPandas(
             _image_kernel(gen_fn, codecs, batch_codecs, res, _tile_rows),
             "image long, cell long, px_value long",

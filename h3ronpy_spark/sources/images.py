@@ -195,10 +195,9 @@ def gen_images_jpeg_pdf(
     from .jpeg import encode_jpeg_batch_gray
 
     pdf = gen_images_pdf(ids, seed)
-    # batched encoder (round-8): byte-identical to per-image
-    # encode_jpeg(band, quality) — pinned by test — at ~1.6x the
-    # throughput (DCT/quantization/entropy stages amortized across the
-    # whole batch)
+    # batched encoder: byte-identical to per-image
+    # encode_jpeg(band, quality) — pinned by test — with the gather,
+    # DCT, quantization and entropy stages run once per 64-image group
     pdf["bytes"] = encode_jpeg_batch_gray(
         [
             np.frombuffer(b, np.uint8).reshape(hh, ww)

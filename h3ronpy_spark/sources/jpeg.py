@@ -290,6 +290,56 @@ _DC_CODE, _DC_LEN = _enc_arrays(_ENC_DC, 12)
 _AC_CODE, _AC_LEN = _enc_arrays(_ENC_AC, 256)
 
 
+def _pack_streams(full: np.ndarray, flen: np.ndarray, ntok) -> list:
+    """Pack Huffman tokens into entropy-coded segments, one per stream.
+
+    Token t holds its code in the low flen[t] bits of full[t] (at most
+    26: a 16-bit AC code plus a 10-bit magnitude); tokens are in stream
+    order, the first ntok[0] belonging to stream 0, and so on.  Each
+    stream starts on a byte boundary, its last byte is padded with
+    1-bits, and a 0x00 is stuffed after every 0xFF (T.81 F.1.2.3): the
+    serial _BitWriter's bytes, pinned by test.
+
+    A token's first bit comes from the cumulative sum of code lengths.
+    Its code is shifted into the 40-bit window that starts at that
+    bit's byte (bit offset <= 7, so 7 + 26 bits fit).  Tokens never
+    share a bit, so adding windows is OR-ing them: np.add.reduceat sums
+    the windows of the tokens that start in the same byte, and each
+    byte is the OR of its 8-bit slices of the (at most 5) windows that
+    start in it or in one of the 4 bytes before it."""
+    ntok = np.asarray(ntok, np.int64)
+    n = ntok.size
+    end = np.cumsum(flen)
+    ends = np.concatenate(([0], end))[np.cumsum(ntok)]
+    nbits = np.diff(ends, prepend=0)
+    nbytes = (nbits + 7) >> 3
+    byte0 = np.zeros(n + 1, np.int64)
+    np.cumsum(nbytes, out=byte0[1:])
+    # token start bit: its offset in the concatenated bits, moved from
+    # its stream's unpadded start to the stream's first byte
+    off = end - flen + np.repeat(8 * byte0[:-1] - (ends - nbits), ntok)
+    win = full << (40 - (off & 7) - flen)
+    b = off >> 3
+    first = np.flatnonzero(np.diff(b, prepend=-1))
+    nb = int(byte0[-1])
+    wp = np.zeros(nb + 4, np.int64)
+    wp[b[first] + 4] = np.add.reduceat(win, first)
+    buf = wp[4:] >> 32
+    for j in range(1, 5):
+        buf |= (wp[4 - j : nb + 4 - j] >> (32 - 8 * j)) & 0xFF
+    # fill the unused low bits of each stream's last byte with 1s
+    pad = 8 * nbytes - nbits
+    last = nbytes > 0
+    buf[byte0[1:][last] - 1] |= (1 << pad[last]) - 1
+    scan = buf.astype(np.uint8).tobytes()
+    cut = byte0.tolist()
+    # bytes.replace IS the byte-stuffing rule, at C speed
+    return [
+        scan[cut[i] : cut[i + 1]].replace(b"\xff", b"\xff\x00")
+        for i in range(n)
+    ]
+
+
 def _entropy_encode(qblocks: list, samp: list, mcux: int,
                     mcuy: int) -> bytes:
     """Vectorized Huffman entropy coder: byte-identical to the serial
@@ -302,8 +352,7 @@ def _entropy_encode(qblocks: list, samp: list, mcux: int,
     Token model: one int64 `(huffman_code << size) | magnitude_bits`
     plus a bit length per token; tokens are ordered by a per-block slot
     key (DC=0, ZRL/value pairs by zigzag position, EOB last) with a
-    stable argsort, expanded to a 0/1 stream, np.packbits-ed, 1-padded
-    per T.81 F.1.2.3, and FF-stuffed with one np.insert."""
+    stable argsort and packed by _pack_streams."""
     n_comp = len(qblocks)
     per_mcu = [hi * vi for hi, vi in samp]
     B = sum(per_mcu)
@@ -378,23 +427,7 @@ def _entropy_encode(qblocks: list, samp: list, mcux: int,
     full = np.concatenate([dc_full, zrl_full, ac_full, eob_full])
     flen = np.concatenate([dc_flen, zrl_flen, ac_flen, eob_flen])
     order2 = np.argsort(keys, kind="stable")
-    full = full[order2]
-    flen = flen[order2]
-
-    # --- expand to a 0/1 stream (row-major boolean select keeps token
-    # order), pack, pad with 1s, stuff FF bytes
-    m = int(flen.max())
-    sh = flen[:, None] - 1 - np.arange(m)[None, :]
-    bits = ((full[:, None] >> np.maximum(sh, 0)) & 1).astype(np.uint8)
-    stream = bits[sh >= 0]
-    padn = (-stream.size) % 8
-    if padn:
-        stream = np.concatenate([stream, np.ones(padn, np.uint8)])
-    scan = np.packbits(stream)
-    ffs = np.flatnonzero(scan == 0xFF)
-    if ffs.size:
-        scan = np.insert(scan, ffs + 1, np.uint8(0))
-    return scan.tobytes()
+    return _pack_streams(full[order2], flen[order2], [full.size])[0]
 
 
 def _pad_to(comp: np.ndarray, ph: int, pw: int) -> np.ndarray:
@@ -417,7 +450,7 @@ def encode_jpeg(
     arr = np.asarray(arr)
     if arr.dtype != np.uint8 or arr.ndim not in (2, 3) or (
         arr.ndim == 3 and arr.shape[2] != 3
-    ):
+    ) or arr.size == 0:
         raise ValueError(
             f"unsupported array for JPEG encode: shape={arr.shape} "
             f"dtype={arr.dtype}"
@@ -543,58 +576,72 @@ def _gray_header_cached(h: int, w: int, quality: int) -> bytes:
     return _gray_header(h, w, q_lum)
 
 
+# images per encode_jpeg_batch_gray group (see its docstring)
+ENCODE_GROUP = 64
+
+
 def encode_jpeg_batch_gray(
     bands: list, quality: int = 90
 ) -> list[bytes]:
     """Batched greyscale baseline encode: byte-identical per image to
-    encode_jpeg(band, quality) (pinned by test), but the DCT, the
-    quantization, and every stage of the entropy coder run ONCE over
-    the concatenated blocks of the whole batch (round-8: the per-image
-    encoder spent most of its 565 us/img in ~40 numpy calls on tiny
-    arrays; batching amortizes that across the corpus generators, which
-    encode 60k images per bench rep).  The per-image tail (bit-stream
-    split, byte padding, FF stuffing, header) stays per image because
-    the JPEG byte stream is per image.
+    encode_jpeg(band, quality) (pinned by test), but the block gather,
+    the DCT, the quantization and every stage of the entropy coder run
+    once over the concatenated blocks of a group of images (the
+    per-image encoder spent most of its 565 us/img in ~40 numpy calls
+    on tiny arrays).  Only the header and the byte stuffing are per
+    image: _pack_streams places every image's tokens in one buffer,
+    each image's stream starting on a byte boundary.
 
-    Batches beyond 256 images are processed in 256-image groups: the
-    batched stages' temporaries grow with the group (a 4096-image group
-    is ~60 MB per DCT temporary), and with every core running one this
-    box goes DRAM-bound and LOSES to the cache-resident per-image
-    encoder — the same chunking lesson as latlng._CHUNK.  Images are
+    Batches are processed in ENCODE_GROUP-image groups: the batched
+    stages' temporaries grow with the group, and cost per image rises
+    once they leave the core's L2 (one core of a 4-vCPU Xeon with 2 MB
+    L2 per core, 1024 perfbench images: ~100 ms in groups of 32-64,
+    ~170 ms in groups of 256)
+    — the same chunking lesson as latlng._CHUNK.  Images are
     independent streams (DC prediction resets per image), so grouping
     cannot change bytes."""
     q_lum, _ = _quality_tables(quality)
     n = len(bands)
     if n == 0:
         return []
-    if n > 256:
+    if n > ENCODE_GROUP:
         out: list[bytes] = []
-        for g0 in range(0, n, 256):
-            out.extend(
-                encode_jpeg_batch_gray(bands[g0 : g0 + 256], quality)
-            )
+        for g0 in range(0, n, ENCODE_GROUP):
+            out.extend(encode_jpeg_batch_gray(
+                bands[g0 : g0 + ENCODE_GROUP], quality))
         return out
-    # --- per-image block extraction (pad to MCU grid, 8x8 raster order)
-    blk_parts = []
-    counts = np.empty(n, np.int64)
-    dims = []
-    for i, arr in enumerate(bands):
-        arr = np.asarray(arr)
-        if arr.dtype != np.uint8 or arr.ndim != 2:
-            raise ValueError("encode_jpeg_batch_gray needs (h, w) uint8")
-        h, w = arr.shape
-        mcux = (w + 7) // 8
-        mcuy = (h + 7) // 8
-        comp = _pad_to(arr.astype(np.float64), mcuy * 8, mcux * 8)
-        blocks = (
-            comp.reshape(mcuy, 8, mcux, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(-1, 8, 8)
-        )
-        blk_parts.append(blocks)
-        counts[i] = blocks.shape[0]
-        dims.append((h, w))
-    allb = np.concatenate(blk_parts) - 128.0
+    # --- block extraction: one gather over the group, each image's
+    # indices clamped to its last row and column (np.pad mode="edge"
+    # up to the MCU grid), blocks in raster order
+    arrs = [np.asarray(a) for a in bands]
+    for arr in arrs:
+        if arr.dtype != np.uint8 or arr.ndim != 2 or arr.size == 0:
+            raise ValueError("encode_jpeg_batch_gray needs non-empty "
+                             "(h, w) uint8")
+    dims = [arr.shape for arr in arrs]
+    hw = np.array(dims, np.int64)
+    hs, ws = hw[:, 0], hw[:, 1]
+    mcux = (ws + 7) // 8
+    counts = mcux * ((hs + 7) // 8)
+    pix0 = np.cumsum(hs * ws) - hs * ws
+    starts_b = np.cumsum(counts) - counts
+    img_of_block = np.repeat(np.arange(n, dtype=np.int64), counts)
+    blk = np.arange(int(counts.sum())) - starts_b[img_of_block]
+    mx = mcux[img_of_block]
+    e8 = np.arange(8)
+    rows = np.minimum(
+        (blk // mx * 8)[:, None] + e8, (hs - 1)[img_of_block][:, None]
+    )
+    cols = np.minimum(
+        (blk % mx * 8)[:, None] + e8, (ws - 1)[img_of_block][:, None]
+    )
+    gidx = (
+        (pix0[img_of_block][:, None] + rows * ws[img_of_block][:, None])
+        [:, :, None]
+        + cols[:, None, :]
+    )
+    flat = np.concatenate([arr.ravel() for arr in arrs])
+    allb = flat[gidx].astype(np.float64) - 128.0
     # NOTE: keep the broadcast matmul form — a two-big-GEMM transpose
     # reformulation changes float summation order and flips np.round on
     # half-ulp coefficients, breaking byte identity with encode_jpeg
@@ -602,8 +649,6 @@ def encode_jpeg_batch_gray(
     qz = np.round(coef / q_lum).astype(np.int32)
     A = qz.reshape(-1, 64)[:, _ZIGZAG].astype(np.int64)
     tot = A.shape[0]
-    starts_b = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    img_of_block = np.repeat(np.arange(n, dtype=np.int64), counts)
 
     # --- DC differentials with a reset at every image boundary
     dc = A[:, 0]
@@ -647,42 +692,14 @@ def encode_jpeg_batch_gray(
     full = np.concatenate([dc_full, zrl_full, ac_full, eob_full])
     flen = np.concatenate([dc_flen, zrl_flen, ac_flen, eob_flen])
     order2 = np.argsort(keys, kind="stable")
-    keys = keys[order2]
-    full = full[order2]
-    flen = flen[order2]
-
-    # --- bit expansion in cache-resident chunks (one global matrix is
-    # ~20 DRAM passes over >100 MB of temporaries — measured 2.3 s for
-    # 670k tokens; 32k-token chunks keep every temporary in L2), then
-    # split the stream per image
-    m = int(flen.max()) if flen.size else 0
-    parts = []
-    marange = np.arange(m)[None, :]
-    for c0 in range(0, flen.size, 32768):
-        fl = flen[c0 : c0 + 32768]
-        fu = full[c0 : c0 + 32768]
-        sh = fl[:, None] - 1 - marange
-        bits = ((fu[:, None] >> np.maximum(sh, 0)) & 1).astype(np.uint8)
-        parts.append(bits[sh >= 0])
-    stream = np.concatenate(parts) if parts else np.array([], np.uint8)
-    img_of_token = img_of_block[keys // 130]
-    bits_per_img = np.bincount(img_of_token, weights=flen, minlength=n)
-    cuts = np.cumsum(bits_per_img).astype(np.int64)
-
-    out = []
-    prev = 0
-    for i in range(n):
-        seg = stream[prev:cuts[i]]
-        prev = int(cuts[i])
-        padn = (-seg.size) % 8
-        if padn:
-            seg = np.concatenate([seg, np.ones(padn, np.uint8)])
-        # bytes.replace IS the T.81 byte-stuffing rule (a 0x00 after
-        # every 0xFF) at C speed — np.insert was ~14 us/img here
-        scan = np.packbits(seg).tobytes().replace(b"\xff", b"\xff\x00")
-        h, w = dims[i]
-        out.append(_gray_header_cached(h, w, quality) + scan + b"\xff\xd9")
-    return out
+    ntok = np.diff(
+        np.searchsorted(keys[order2], np.append(starts_b, tot) * 130)
+    )
+    scans = _pack_streams(full[order2], flen[order2], ntok)
+    return [
+        _gray_header_cached(h, w, quality) + scan + b"\xff\xd9"
+        for (h, w), scan in zip(dims, scans)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1595,7 +1612,7 @@ def encode_jpeg_progressive(
     arr = np.asarray(arr)
     if arr.dtype != np.uint8 or arr.ndim not in (2, 3) or (
         arr.ndim == 3 and arr.shape[2] != 3
-    ):
+    ) or arr.size == 0:
         raise ValueError(
             f"unsupported array for JPEG encode: shape={arr.shape} "
             f"dtype={arr.dtype}"
@@ -1920,6 +1937,17 @@ def apply_exif_orientation(arr: np.ndarray, orientation) -> np.ndarray:
 # Any stream the fast path cannot prove trivial (progressive, color,
 # restart markers, missing tables, invalid codes, overdraw) falls back
 # to the scalar decode_jpeg, keeping its exact result/error behavior.
+#
+# Lockstep cost is about (iterations) x (a fixed numpy cost per
+# iteration), whatever the number of lanes: ~28 ms for 1 image, 90-150 ms
+# for 128, single core on the perfbench corpus, against ~0.5 ms per
+# image for decode_jpeg.  So it pays only on wide batches, and the
+# registry adapter jpeg_codec_batch decodes a batch of fewer than
+# LOCKSTEP_MIN_LANES blobs image by image — the fused flagship's
+# chunks, which keep a few images each after the footprint prefilter.
+# tools/codec_layers.py measures the crossover; on a shared 4-vCPU
+# host it read 144-304 images, and lockstep lost at 128 in every run.
+LOCKSTEP_MIN_LANES = 256
 
 
 def _parse_gray_baseline(blob: bytes):
@@ -2198,7 +2226,9 @@ def decode_jpeg_batch(blobs, chunk: int = 512) -> list:
     exactly (pinned by test), including raising the scalar path's error
     for malformed streams.  Single-component baseline streams sharing a
     table set run through the lockstep entropy decoder + one batched
-    dequant/IDCT; everything else decodes per image."""
+    dequant/IDCT, in ceil(n / chunk) equal chunks; everything else
+    decodes per image.  This is the lockstep entry point whatever the
+    batch size; jpeg_codec_batch sends narrow batches to decode_jpeg."""
     out: list = [None] * len(blobs)
     fast: list = []
     for i, blob in enumerate(blobs):
@@ -2219,10 +2249,13 @@ def decode_jpeg_batch(blobs, chunk: int = 512) -> list:
         for i, (fh, fw, q, _d, _a, ss) in items:
             data, _ = _unstuff_scan(blobs[i], ss)
             entries.append((i, fh, fw, q, data))
-        # sort by entropy length so lockstep chunks finish together
+        # sort by entropy length so lockstep chunks finish together, and
+        # split into equal chunks so none is a few-lane tail
         entries.sort(key=lambda e: len(e[4]))
-        for c0 in range(0, len(entries), chunk):
-            part = entries[c0 : c0 + chunk]
+        m = len(entries)
+        nparts = -(-m // chunk)
+        for c in range(nparts):
+            part = entries[c * m // nparts : (c + 1) * m // nparts]
             nb = np.array(
                 [((e[2] + 7) // 8) * ((e[1] + 7) // 8) for e in part],
                 np.int64,
@@ -2279,7 +2312,11 @@ def jpeg_codec(blob: bytes, w: int, h: int, fmt: str) -> np.ndarray:
 
 def jpeg_codec_batch(blobs, ws, hs, fmt) -> list:
     """Batch codec-registry adapter (companion of jpeg_codec): same
-    geometry check per image, decode via decode_jpeg_batch."""
+    geometry check per image.  A batch of LOCKSTEP_MIN_LANES blobs or
+    more decodes through decode_jpeg_batch; a smaller one decodes image
+    by image through jpeg_codec, which is cheaper there."""
+    if len(blobs) < LOCKSTEP_MIN_LANES:
+        return [jpeg_codec(b, w, h, fmt) for b, w, h in zip(blobs, ws, hs)]
     arrs = decode_jpeg_batch(blobs)
     for a, w, h in zip(arrs, ws, hs):
         if a.shape[:2] != (int(h), int(w)):

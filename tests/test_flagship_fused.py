@@ -187,9 +187,11 @@ def test_over_budget_coverage_falls_back_without_collecting(
     cov.unpersist()
 
 
-def test_warmed_index_is_the_one_flagship_reads(spark):
+def test_warmed_index_is_the_one_flagship_reads(spark, monkeypatch):
     """coverage_index(spark, cov) warms exactly the entry flagship
-    uses: one cache entry, and building the plan runs no Spark job."""
+    uses: one cache entry, and building the plan runs no Spark job and
+    builds no polygon DataFrame."""
+    import h3ronpy_spark.plans.flagship as FL
     from h3ronpy_spark.operators.spatial_join import coverage_index
     from h3ronpy_spark.plans.flagship import flagship
 
@@ -197,10 +199,12 @@ def test_warmed_index_is_the_one_flagship_reads(spark):
     coverage_index(spark, cov)
     sc = spark.sparkContext
     sc.setJobGroup("flagship_plan_build", "plan build only")
-    try:
-        df = flagship(spark, 400, n_polygons=8, res=9, coverage=cov)
-    finally:
-        sc.setJobGroup(None, None)
+    with monkeypatch.context() as m:
+        m.setattr(FL, "synth_polygons", None)  # calling it would raise
+        try:
+            df = flagship(spark, 400, n_polygons=8, res=9, coverage=cov)
+        finally:
+            sc.setJobGroup(None, None)
     assert list(sc.statusTracker().getJobIdsForGroup(
         "flagship_plan_build")) == []
     assert _index_entries(cov) == 1
@@ -216,6 +220,23 @@ def test_fused_leaves_no_persisted_coverage(spark):
     for _ in range(2):
         flagship(spark, 300, n_polygons=6, res=9).count()
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_fallback_coverages_stay_bounded(spark):
+    """flagship(coverage=None) on the salted fallback keeps the coverage
+    it persisted in pip_join's bounded registry: at most _OWN_COV_MAX
+    stay persisted, and an evicted one's plan still runs."""
+    from h3ronpy_spark.operators.spatial_join import _OWN_COV_MAX
+    from h3ronpy_spark.plans.flagship import flagship
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    first = flagship(spark, 1000, n_polygons=20, res=9, salt=2)
+    want = sorted(map(tuple, first.collect()))
+    for k in range(1, _OWN_COV_MAX + 3):
+        flagship(spark, 1000, n_polygons=20 + k, res=9, salt=2).count()
+        assert jsc.getPersistentRDDs().size() - before <= _OWN_COV_MAX
+    assert sorted(map(tuple, first.collect())) == want and want
 
 
 def test_codec_override_reaches_the_salted_fallback(spark):

@@ -7,11 +7,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+import h3ronpy_spark.sources.jpeg as J
 from h3ronpy_spark.sources.jpeg import (
+    LOCKSTEP_MIN_LANES,
     decode_jpeg,
     decode_jpeg_batch,
     encode_jpeg,
     encode_jpeg_progressive,
+    jpeg_codec_batch,
 )
 
 
@@ -19,18 +22,36 @@ def _same(a: np.ndarray, b: np.ndarray) -> bool:
     return a.dtype == b.dtype and a.shape == b.shape and np.array_equal(a, b)
 
 
-def test_batch_identical_corpus():
+@pytest.fixture
+def lanes(monkeypatch):
+    """The lane count of every _entropy_decode_gray_lockstep call."""
+    seen: list = []
+    real = J._entropy_decode_gray_lockstep
+
+    def spy(datas, *args):
+        seen.append(len(datas))
+        return real(datas, *args)
+
+    monkeypatch.setattr(J, "_entropy_decode_gray_lockstep", spy)
+    return seen
+
+
+def test_batch_identical_corpus(lanes):
     from h3ronpy_spark.sources.images import gen_images_jpeg_pdf
 
     pdf = gen_images_jpeg_pdf(np.arange(400, dtype=np.int64))
     blobs = pdf["bytes"].tolist()
     ref = [decode_jpeg(b) for b in blobs]
     for chunk in (400, 64, 7):  # incl. uneven multi-chunk splits
+        lanes.clear()
         got = decode_jpeg_batch(blobs, chunk=chunk)
         assert all(_same(a, b) for a, b in zip(ref, got))
+        # ceil(400 / chunk) balanced chunks: no few-lane tail
+        assert len(lanes) == -(-400 // chunk) and sum(lanes) == 400
+        assert max(lanes) - min(lanes) <= 1
 
 
-def test_batch_identical_edge_cases():
+def test_batch_identical_edge_cases(lanes):
     rng = np.random.default_rng(5)
     bands = [
         np.zeros((8, 8), np.uint8),                    # all-zero DC only
@@ -50,9 +71,10 @@ def test_batch_identical_edge_cases():
     ref = [decode_jpeg(b) for b in blobs]
     got = decode_jpeg_batch(blobs, chunk=5)
     assert all(_same(a, b) for a, b in zip(ref, got))
+    assert lanes and sum(lanes) == len(blobs)
 
 
-def test_batch_mixed_fastpath_and_fallback():
+def test_batch_mixed_fastpath_and_fallback(lanes):
     rng = np.random.default_rng(9)
     gray = rng.integers(0, 256, (24, 24)).astype(np.uint8)
     rgb = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
@@ -66,6 +88,7 @@ def test_batch_mixed_fastpath_and_fallback():
     ref = [decode_jpeg(b) for b in blobs]
     got = decode_jpeg_batch(blobs)
     assert all(_same(a, b) for a, b in zip(ref, got))
+    assert lanes == [1, 1]  # one lane per table set
 
 
 def test_batch_malformed_raises_like_scalar():
@@ -84,6 +107,9 @@ def test_batch_malformed_raises_like_scalar():
         assert scalar_err is not None
         with pytest.raises(scalar_err):
             decode_jpeg_batch([good, truncated])
+        # a batch below LOCKSTEP_MIN_LANES takes the scalar path
+        with pytest.raises(scalar_err):
+            jpeg_codec_batch([good, truncated], [8, 8], [8, 8], "jpeg")
     assert decode_jpeg_batch([]) == []
     assert _same(decode_jpeg_batch([good])[0], decode_jpeg(good))
 
@@ -118,7 +144,7 @@ def _all_ones_stream(nblocks: int, nbytes: int) -> bytes:
     # bits: 32 blocks for 4 or 5 data bytes
     [(32, 4), (33, 4), (40, 4), (48, 4), (32, 5), (34, 5), (36, 5)],
 )
-def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes):
+def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes, lanes):
     blob = _all_ones_stream(nblocks, nbytes)
     try:
         want = decode_jpeg(blob)
@@ -130,9 +156,22 @@ def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes):
             decode_jpeg_batch([blob])
     else:
         assert _same(decode_jpeg_batch([blob])[0], want)
+    assert lanes == [1]
 
 
-def test_decode_images_with_batch_and_override():
+def test_decode_images_with_batch_and_override(lanes):
+    _check_decode_images_with(48, lanes)
+
+
+@pytest.mark.parametrize(
+    "n",
+    [1, LOCKSTEP_MIN_LANES - 1, LOCKSTEP_MIN_LANES, LOCKSTEP_MIN_LANES + 1],
+)
+def test_decode_images_with_lane_counts(n, lanes):
+    _check_decode_images_with(n, lanes)
+
+
+def _check_decode_images_with(n, lanes):
     from h3ronpy_spark.sources.images import (
         batch_codec_snapshot,
         codec_snapshot,
@@ -145,7 +184,7 @@ def test_decode_images_with_batch_and_override():
     register_jpeg_codec()
     codecs = codec_snapshot()
     batch = batch_codec_snapshot()
-    pdf = gen_images_jpeg_pdf(np.arange(48, dtype=np.int64))
+    pdf = gen_images_jpeg_pdf(np.arange(n, dtype=np.int64))
     blobs = pdf["bytes"].tolist()
     ws = pdf["w"].tolist()
     hs = pdf["h"].tolist()
@@ -155,7 +194,9 @@ def test_decode_images_with_batch_and_override():
         for i in range(len(blobs))
     ]
     got = decode_images_with(codecs, batch, blobs, ws, hs, fmts)
-    assert all(_same(a, b) for a, b in zip(ref, got))
+    assert len(got) == n and all(_same(a, b) for a, b in zip(ref, got))
+    # the lockstep decoder runs from LOCKSTEP_MIN_LANES images on
+    assert sum(lanes) == (n if n >= LOCKSTEP_MIN_LANES else 0)
 
     # an override replaces the per-image fn -> batch path must disable
     calls = []
