@@ -13,11 +13,7 @@ spark.range ids that, per chunk of ids, generates each image (byte
 generation, JPEG encode included, stands in for the storage read),
 decodes it through the codec registry snapshot (batch decoders where
 registered and not overridden) and tiles it.  An emitter decides what
-the chunk's tiles become.  The JPEG batch codec decodes a chunk's
-images image by image when they are fewer than
-sources.jpeg.LOCKSTEP_MIN_LANES, as the few the fused path's footprint
-prefilter keeps are; the fallback's full chunks take the lockstep
-decoder.
+the chunk's tiles become.
 
 Default path (fused): one Python stage, no joins.  Only the images whose
 footprint can reach the coverage (h3core.rasterh3.footprint_mask) are
@@ -263,11 +259,14 @@ def flagship(
     unchanged.  Trade-offs: a corrupt blob whose footprint misses every
     polygon is no longer decoded, so it no longer raises; and
     `codec_override` now sees only the surviving images.  The salted
-    fallback decodes everything, with the same decoder as the fused
-    path (batch decoders included), so it checks the prefilter and the
-    map-side probe but not the batch decoder.  perfbench's
-    sources.decode_us_per_image still times the codec on all images,
-    so the codec layer stays measured."""
+    fallback decodes everything, so it checks the prefilter and the
+    map-side probe.  The two paths do not run the same JPEG decoder:
+    the batch codec picks one by batch size (jpeg_codec_batch), so the
+    fused path's few prefiltered images per chunk decode one at a time
+    through decode_jpeg, while the fallback's full chunks take the
+    lockstep decoder.  perfbench's sources.decode_us_per_image times a
+    256-image batch, which takes the lockstep decoder: it measures the
+    fallback's decoder, not the fused op's."""
     if fmt not in _FORMATS:
         raise ValueError(
             f"flagship fmt must be 'raw8', 'png' or 'jpeg', got {fmt!r}"

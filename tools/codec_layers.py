@@ -14,11 +14,13 @@ is the median over repeats that together cover at least 0.3 s.
 
 Then it prints the decode crossover: the smallest batch size, on a finer
 ladder between the two sizes that bracket it, from which the lockstep
-decoder costs no more per image than the scalar one.  That size sets
-sources.jpeg.LOCKSTEP_MIN_LANES: jpeg_codec_batch decodes a smaller
-batch image by image.
+decoder costs no more per image than the scalar one.  Single timings on
+a shared host swing by tens of percent, so the table and the crossover
+are measured over several rounds, and the median crossover of the rounds
+is the figure that sets sources.jpeg.LOCKSTEP_MIN_LANES: jpeg_codec_batch
+decodes a smaller batch image by image.
 
-Run:  python tools/codec_layers.py [--seed 1]        (~1-2 min)
+Run:  python tools/codec_layers.py [--seed 1] [--rounds 3]   (~10-30 s per round)
 """
 
 from __future__ import annotations
@@ -76,23 +78,9 @@ def crossover(blobs, lo, hi):
     return None
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--seed", type=int, default=1,
-                    help="perfbench run seed the corpus derives from")
-    args = ap.parse_args()
-    image_seed = TileJoinJpeg(args.seed).image_seed
-    ids = np.arange(max(SIZES), dtype=np.int64)
-    raw = gen_images_pdf(ids, image_seed)
-    bands = [
-        np.frombuffer(b, np.uint8).reshape(h, w)
-        for b, w, h in zip(raw["bytes"], raw["w"], raw["h"])
-    ]
-    blobs = gen_images_jpeg_pdf(ids, image_seed)["bytes"].tolist()
-    J.decode_jpeg_batch(blobs[:8])  # build the cached Huffman LUTs
-
-    print(f"perfbench tile_join_jpeg corpus, seed {args.seed} "
-          f"(image seed {image_seed}), single core, µs/image")
+def one_round(bands, blobs):
+    """Print the µs/image table; return the refined crossover (None when
+    the lockstep decoder never catches up) and the 1024-image row."""
     print(f"{'batch':>6s} {'encode_batch':>13s} {'decode_batch':>13s} "
           f"{'decode_jpeg':>12s}")
     rows = []
@@ -107,11 +95,47 @@ def main():
     above = [b for b, lock, one in rows if lock <= one]
     if not above:
         print(f"crossover: none up to {max(SIZES)} images")
-        return
+        return None, rows[-1]
     hi = min(above)
     lo = max([b for b in below if b < hi], default=0)
     print(f"refining the crossover between {lo} and {hi}:")
-    print(f"crossover: {crossover(blobs, lo, hi)} images "
+    x = crossover(blobs, lo, hi)
+    print(f"crossover: {x} images")
+    return x, rows[-1]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--seed", type=int, default=1,
+                    help="perfbench run seed the corpus derives from")
+    ap.add_argument("--rounds", type=int, default=3,
+                    help="measurement rounds the median crossover is taken over")
+    args = ap.parse_args()
+    image_seed = TileJoinJpeg(args.seed).image_seed
+    ids = np.arange(max(SIZES), dtype=np.int64)
+    raw = gen_images_pdf(ids, image_seed)
+    bands = [
+        np.frombuffer(b, np.uint8).reshape(h, w)
+        for b, w, h in zip(raw["bytes"], raw["w"], raw["h"])
+    ]
+    blobs = gen_images_jpeg_pdf(ids, image_seed)["bytes"].tolist()
+    J.decode_jpeg_batch(blobs[:8])  # build the cached Huffman LUTs
+
+    print(f"perfbench tile_join_jpeg corpus, seed {args.seed} "
+          f"(image seed {image_seed}), single core, µs/image")
+    found = []
+    wide = []
+    for r in range(args.rounds):
+        print(f"round {r + 1}/{args.rounds}")
+        x, (_b, lock, one) = one_round(bands, blobs)
+        found.append(x)
+        wide.append(f"{lock:.0f}/{one:.0f}")
+    widest = max(SIZES)
+    print(f"crossovers: {found}")
+    print(f"lockstep/scalar µs/image at {widest} per round: {', '.join(wide)}")
+    # a round without a crossover counts as above every measured size
+    xs = sorted(widest + 1 if x is None else x for x in found)
+    print(f"median crossover: {xs[len(xs) // 2]} images "
           f"(LOCKSTEP_MIN_LANES is {J.LOCKSTEP_MIN_LANES})")
 
 
