@@ -9,16 +9,19 @@ Catalyst join, hash aggregation.  This is `entry(spark)` and the bench
 job.
 
 One image producer serves both paths (_image_kernel): a mapInPandas over
-spark.range ids that, per chunk of ids, generates each image (byte
-generation, JPEG encode included, stands in for the storage read),
-decodes it through the codec registry snapshot (batch decoders where
-registered and not overridden) and tiles it.  An emitter decides what
-the chunk's tiles become.
+spark.range ids that, per chunk of ids, generates the images it reads
+(byte generation, JPEG encode included, stands in for the storage
+read), decodes them through the codec registry snapshot (batch decoders
+where registered and not overridden) and tiles them.  An emitter
+decides what the chunk's tiles become.
 
-Default path (fused): one Python stage, no joins.  Only the images whose
+Default path (fused): one Python stage, no joins.  Late
+materialization: each image's footprint comes from its geometry (phash,
+w, h; sources.images.geometry_of_ids, the footprint columns a columnar
+image table keeps beside its blob column), and only the images whose
 footprint can reach the coverage (h3core.rasterh3.footprint_mask) are
-decoded and tiled; each tile is assigned to polygons by probing the
-broadcast coverage index with its bit-math ancestors
+generated, decoded and tiled.  Each tile is assigned to polygons by
+probing the broadcast coverage index with its bit-math ancestors
 (h3core.index.probe_ancestors, the condition pip_join's equi-join
 evaluates) and rolled up per (poly, image); the caption rides those
 rollup rows.  The coverage index is built once per coverage DataFrame
@@ -36,25 +39,25 @@ the largest corpus image (MAX_SIDE_PX): res 5 for res-9 tiling.
 
 Fallback: with `salt=`, or when operators.spatial_join.mapside_index
 finds the coverage empty or over the broadcast budget, the producer
-emits plain tile rows (image long, cell long, px_value long) for every
-image: no footprint mask, no string column.  They go through pip_join's
-Catalyst equi-join and a groupBy to (poly, image); a small mapInPandas
-over those rollup rows adds the caption from the image id
+generates every image and emits plain tile rows (image long, cell long,
+px_value long): no footprint mask, no string column.  They go through
+pip_join's Catalyst equi-join and a groupBy to (poly, image); a small
+mapInPandas over those rollup rows adds the caption from the image id
 (sources.images.caption_of_ids).  A coverage the fallback polyfilled
 itself (coverage=None) joins pip_join's bounded registry of the
 coverages it persisted (operators.spatial_join._keep_coverage), so
 repeated calls do not pile up persisted coverages.  The polygon
 DataFrame is built only where it is read: that polyfill and the
-fallback's pip_join.  The fallback is the independent check
-of the fused path's footprint prefilter and map-side probe; it shares
-the fused path's decoder, so the scalar-vs-batch decoder cross-check
-lives in tests (test_fused_equals_legacy builds its reference plan from
-operators.tiling.tile_images).
+fallback's pip_join.  The fallback is the independent check of the
+fused path's footprint prefilter and map-side probe.  The two paths do
+not run the same JPEG decoder: the batch codec picks one by batch size,
+so the fused path's few surviving images per chunk decode one at a time
+and the fallback's full chunks take the lockstep decoder (flagship
+docstring).  test_fused_equals_legacy builds a third
+reference plan from operators.tiling.tile_images.
 """
 
 from __future__ import annotations
-
-import functools
 
 import numpy as np
 import pandas as pd
@@ -105,14 +108,18 @@ def _footprint_index(spark, cov, res, res_list):
     return coverage_footprint_index(spark, cov, rp)
 
 
-def _image_kernel(gen_fn, codecs, batch_codecs, res, emit, fp_index=None):
+def _image_kernel(gen, seed, codecs, batch_codecs, res, emit,
+                  fp_index=None):
     """The image producer of both flagship paths (module docstring): a
-    mapInPandas function over `id` batches.  Per chunk of ids it
-    generates the images, keeps only those whose footprint can reach
-    the coverage when fp_index (h3core.rasterh3.footprint_index) is
-    given, decodes and tiles them, and yields emit(ids, pdf, img, vals,
-    cells), where img indexes the chunk's rows.  A chunk with no tile
-    left, or whose emit returns None, yields nothing.
+    mapInPandas function over `id` batches.  Per chunk of ids, when
+    fp_index (h3core.rasterh3.footprint_index) is given, it keeps only
+    the ids whose footprint can reach the coverage, deciding from each
+    image's geometry (sources.images.geometry_of_ids) alone.  It then
+    generates the kept images with gen(ids, seed), the stand-in for the
+    storage read, decodes and tiles them, and yields emit(ids, pdf, img,
+    vals, cells): ids and pdf are the generated rows, and img indexes
+    them.  A chunk with no id left generates nothing; a chunk with no
+    tile left, or whose emit returns None, yields nothing.
 
     The stage runs ONE task wave (big tasks — guide §2.2), so the
     kernel bounds per-worker memory itself by processing the id range
@@ -120,30 +127,31 @@ def _image_kernel(gen_fn, codecs, batch_codecs, res, emit, fp_index=None):
 
     def one_chunk(ids):
         from ..h3core.rasterh3 import footprint_mask, rasters_to_cells_batch
-        from ..sources.images import decode_images_with, transforms_of_phash
-
-        pdf = gen_fn(ids)
-        tfs = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
-        wcol = pdf["w"].to_numpy(np.int64)
-        hcol = pdf["h"].to_numpy(np.int64)
-        if fp_index is None:
-            sel = np.arange(len(ids))
-        else:
-            sel = np.flatnonzero(footprint_mask(tfs, wcol, hcol, fp_index))
-            if sel.size == 0:
-                return None
-        blobs = pdf["bytes"].tolist()
-        fmts = pdf["fmt"].tolist()
-        bands = decode_images_with(
-            codecs, batch_codecs, [blobs[i] for i in sel],
-            wcol[sel], hcol[sel], [fmts[i] for i in sel],
+        from ..sources.images import (
+            decode_images_with,
+            geometry_of_ids,
+            transforms_of_phash,
         )
-        img_idx, vals, cells = rasters_to_cells_batch(
-            bands, tfs[sel], res, nodata_value=0
+
+        if fp_index is not None:
+            phash, w, h = geometry_of_ids(ids, seed)
+            ids = ids[footprint_mask(transforms_of_phash(phash), w, h,
+                                     fp_index)]
+            if ids.size == 0:
+                return None
+        pdf = gen(ids, seed)
+        bands = decode_images_with(
+            codecs, batch_codecs, pdf["bytes"].tolist(),
+            pdf["w"].to_numpy(np.int64), pdf["h"].to_numpy(np.int64),
+            pdf["fmt"].tolist(),
+        )
+        img, vals, cells = rasters_to_cells_batch(
+            bands, transforms_of_phash(pdf["phash"].to_numpy(np.int64)),
+            res, nodata_value=0,
         )
         if cells.size == 0:
             return None
-        return emit(ids, pdf, sel[img_idx], vals, cells)
+        return emit(ids, pdf, img, vals, cells)
 
     def run(batches):
         for b in batches:
@@ -252,21 +260,26 @@ def flagship(
     stage as one task wave, so `partitions` has no effect; it is kept
     because existing callers (bench.py) pass it.
 
-    Footprint prefilter (fused path only): every image is generated,
-    but only images whose footprint can reach the coverage are decoded
-    and tiled — a provable superset of the contributing images (bound
-    in h3core.rasterh3.footprint_prefilter), so the rollup is
-    unchanged.  Trade-offs: a corrupt blob whose footprint misses every
-    polygon is no longer decoded, so it no longer raises; and
-    `codec_override` now sees only the surviving images.  The salted
-    fallback decodes everything, so it checks the prefilter and the
-    map-side probe.  The two paths do not run the same JPEG decoder:
-    the batch codec picks one by batch size (jpeg_codec_batch), so the
-    fused path's few prefiltered images per chunk decode one at a time
-    through decode_jpeg, while the fallback's full chunks take the
-    lockstep decoder.  perfbench's sources.decode_us_per_image times a
-    256-image batch, which takes the lockstep decoder: it measures the
-    fallback's decoder, not the fused op's."""
+    Footprint prefilter (fused path only): the kernel decides from each
+    image's geometry (phash, w, h) alone whether its footprint can
+    reach the coverage, and generates, decodes and tiles only those
+    images — a provable superset of the contributing images (bound in
+    h3core.rasterh3.footprint_prefilter), so the rollup is unchanged.
+    Generation stands in for the storage read, so the payload of an
+    image outside every polygon is never read.  Trade-offs: a corrupt
+    blob whose footprint misses every polygon is never even read, so it
+    never raises; and `codec_override` sees only the surviving images.
+    The salted fallback generates and decodes everything, so it checks
+    the prefilter and the map-side probe.  The two paths do not run the
+    same JPEG decoder: the batch codec picks one by batch size
+    (jpeg_codec_batch), so the fused path's few surviving images per
+    chunk decode one at a time through decode_jpeg, while the
+    fallback's full chunks take the lockstep decoder.  perfbench's
+    sources.generate_us_per_image and sources.decode_us_per_image time
+    the generator and the codec directly on a 256-image batch, outside
+    the timed op, which generates and decodes only the few survivors
+    per chunk; the decode probe's batch takes the lockstep decoder, the
+    fallback's, not the fused op's."""
     if fmt not in _FORMATS:
         raise ValueError(
             f"flagship fmt must be 'raw8', 'png' or 'jpeg', got {fmt!r}"
@@ -302,7 +315,6 @@ def flagship(
     # size; tiny inputs get fewer tasks.
     dp = spark.sparkContext.defaultParallelism
     ids = spark.range(0, n_images, 1, max(1, min(dp, (n_images + 255) // 256)))
-    gen_fn = functools.partial(gen, seed=seed)
 
     index = mapside_index(spark, cov) if salt is None else None
     if index is not None:
@@ -311,7 +323,7 @@ def flagship(
         if coverage is None:
             cov.unpersist()
         per_img = ids.mapInPandas(
-            _image_kernel(gen_fn, codecs, batch_codecs, res,
+            _image_kernel(gen, seed, codecs, batch_codecs, res,
                           _rollup_emitter(bc, res_list), fp_index),
             "image_id string, poly_id string, "
             "n_tiles long, sum_px long, caption string",
@@ -324,7 +336,7 @@ def flagship(
             # pip_join's bounded registry of the coverages it persisted
             _keep_coverage(cov)
         tiles = ids.mapInPandas(
-            _image_kernel(gen_fn, codecs, batch_codecs, res, _tile_rows),
+            _image_kernel(gen, seed, codecs, batch_codecs, res, _tile_rows),
             "image long, cell long, px_value long",
         )
 

@@ -78,6 +78,20 @@ def transforms_of_phash(phash: np.ndarray) -> np.ndarray:
     return tfs
 
 
+def geometry_of_ids(
+    ids: np.ndarray, seed: int = 42
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(phash, w, h) of the images with these ids: the table's phash
+    column (int64, the splitmix64 phash with the sign bit cleared, which
+    georef_of_phash reads) and the int32 sides, each drawn from
+    [16, MAX_SIDE_PX].  A pure function of id and seed, so a reader can
+    decide an image's footprint without generating its payload."""
+    ph = phash_of_ids(np.asarray(ids, dtype=np.int64), seed)
+    w = (16 + (ph % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    h = (16 + ((ph >> np.uint64(8)) % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    return ph.view(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF), w, h
+
+
 def caption_of_ids(ids: np.ndarray, seed: int = 42) -> list[str]:
     """The caption of each image id: a pure function of id + phash."""
     ph = phash_of_ids(np.asarray(ids, dtype=np.int64), seed)
@@ -90,9 +104,10 @@ def caption_of_ids(ids: np.ndarray, seed: int = 42) -> list[str]:
 def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
     """Generate the image rows for the given int64 ids (row-local)."""
     ids = np.asarray(ids, dtype=np.int64)
+    # the pixels read the raw phash; the phash column has its sign bit
+    # cleared (geometry_of_ids)
     ph = phash_of_ids(ids, seed)
-    w = (16 + (ph % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
-    h = (16 + ((ph >> np.uint64(8)) % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    phash, w, h = geometry_of_ids(ids, seed)
     blobs = []
     for i in range(len(ids)):
         # deterministic pixel grid: value = (x*3 + y*7 + phash) & 0xFF,
@@ -112,7 +127,7 @@ def gen_images_pdf(ids: np.ndarray, seed: int = 42) -> pd.DataFrame:
             "h": h,
             "fmt": "raw8",
             "caption": caption_of_ids(ids, seed),
-            "phash": ph.view(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF),
+            "phash": phash,
         }
     )
 
@@ -448,8 +463,7 @@ def gen_images_typed_pdf(
     dt = np.dtype(RAW_DTYPES[fmt])
     ids = np.asarray(ids, dtype=np.int64)
     ph = phash_of_ids(ids, seed)
-    w = (16 + (ph % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
-    h = (16 + ((ph >> np.uint64(8)) % np.uint64(MAX_SIDE_PX - 15))).astype(np.int32)
+    phash, w, h = geometry_of_ids(ids, seed)
     blobs = []
     for i in range(len(ids)):
         hh, ww = int(h[i]), int(w[i])
@@ -474,7 +488,7 @@ def gen_images_typed_pdf(
             "h": h,
             "fmt": fmt,
             "caption": caption_of_ids(ids, seed),
-            "phash": ph.view(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF),
+            "phash": phash,
         }
     )
 

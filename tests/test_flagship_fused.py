@@ -7,6 +7,8 @@ Expand, no caption join on either path)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -286,3 +288,113 @@ def test_codec_override_restored_when_build_raises(spark, monkeypatch):
         assert codec_snapshot() == before
     finally:
         unregister_codec("jpeg")
+
+
+# --- late materialization: the fused kernel generates only the images
+# that pass the footprint prefilter.  These drive _image_kernel in this
+# process: inside Spark the generator is pickled by reference, so a
+# driver-side spy would never see the workers' calls.
+
+def _recording(gen):
+    calls = []
+
+    def spy(ids, seed):
+        calls.append(np.array(ids))
+        return gen(ids, seed)
+
+    return spy, calls
+
+
+def _center_index(ids, seed=42, res=9, rp=5):
+    """footprint_index of a coverage made of the res-`res` cells holding
+    the centres of these images (from the generated table's columns)."""
+    from h3ronpy_spark.h3core.latlng import latlng_to_cell
+    from h3ronpy_spark.h3core.rasterh3 import footprint_index
+    from h3ronpy_spark.sources.images import gen_images_pdf, transforms_of_phash
+
+    pdf = gen_images_pdf(np.asarray(ids, dtype=np.int64), seed)
+    tf = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
+    lng = tf[:, 2] + tf[:, 0] * pdf["w"].to_numpy() / 2
+    lat = tf[:, 5] + tf[:, 4] * pdf["h"].to_numpy() / 2
+    return footprint_index(
+        latlng_to_cell(np.radians(lat), np.radians(lng), res), rp)
+
+
+def _survivors(chunk, fp_index, seed=42):
+    """The chunk's ids that footprint_mask keeps, deciding from the
+    generated table's own geometry columns."""
+    from h3ronpy_spark.h3core.rasterh3 import footprint_mask
+    from h3ronpy_spark.sources.images import gen_images_pdf, transforms_of_phash
+
+    pdf = gen_images_pdf(chunk, seed)
+    tf = transforms_of_phash(pdf["phash"].to_numpy(np.int64))
+    return chunk[footprint_mask(tf, pdf["w"].to_numpy(), pdf["h"].to_numpy(),
+                                fp_index)]
+
+
+def _drive(batches, fp_index, seed=42):
+    from h3ronpy_spark.plans.flagship import _image_kernel, _tile_rows
+    from h3ronpy_spark.sources.images import gen_images_pdf
+
+    spy, calls = _recording(gen_images_pdf)
+    run = _image_kernel(spy, seed, {}, {}, 9, _tile_rows, fp_index)
+    out = list(run(iter(pd.DataFrame({"id": b}) for b in batches)))
+    return calls, out
+
+
+# two mapInPandas batches of 1500 ids: chunks 0..1024, 1024..1500,
+# 1500..2524 and 2524..3000
+_BATCHES = [np.arange(0, 1500, dtype=np.int64),
+            np.arange(1500, 3000, dtype=np.int64)]
+_CHUNKS = [c for b in _BATCHES for c in (b[:1024], b[1024:])]
+
+
+def test_kernel_generates_only_the_survivors():
+    fp_index = _center_index([10, 500, 2600])
+    want = [_survivors(c, fp_index) for c in _CHUNKS]
+    # the coverage reaches the first and last chunk, and leaves at
+    # least one chunk without a survivor
+    assert {10, 500} <= set(want[0]) and 2600 in want[3]
+    assert any(w.size == 0 for w in want)
+    calls, out = _drive(_BATCHES, fp_index)
+    assert [c.tolist() for c in calls] == [w.tolist() for w in want
+                                           if w.size]
+    # the survivors' tile rows are the unpruned kernel's rows of the
+    # same images, in the same order
+    _, full = _drive(_BATCHES, None)
+    full = pd.concat(full, ignore_index=True)
+    kept = np.concatenate(want)
+    got = pd.concat(out, ignore_index=True)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(
+        got, full[full["image"].isin(kept)].reset_index(drop=True))
+
+
+def test_kernel_chunk_without_survivor_generates_nothing():
+    fp_index = _center_index([10])
+    chunk = np.arange(1024, 2048, dtype=np.int64)
+    assert _survivors(chunk, fp_index).size == 0
+    calls, out = _drive([chunk], fp_index)
+    assert calls == [] and out == []
+
+
+def test_kernel_without_index_generates_every_id():
+    calls, out = _drive(_BATCHES, None)
+    assert [c.tolist() for c in calls] == [c.tolist() for c in _CHUNKS]
+    ids = set(pd.concat(out)["image"])
+    assert ids <= set(range(3000)) and len(ids) > 2900
+
+
+@pytest.mark.parametrize("fmt", ["raw8", "png", "jpeg"])
+def test_survivor_rows_equal_the_full_chunk_rows(fmt):
+    """Generation is row-local: generating a subset of a chunk's ids
+    gives byte-identical rows to the same rows of the whole chunk (the
+    JPEG batch encoder groups images, and its bytes do not depend on the
+    group)."""
+    from h3ronpy_spark.plans.flagship import _FORMATS
+
+    gen = _FORMATS[fmt][0]
+    chunk = np.arange(5000, 6024, dtype=np.int64)
+    pick = np.array([3, 64, 65, 200, 511, 1000, 1023])
+    full = gen(chunk, 7).iloc[pick].reset_index(drop=True)
+    pd.testing.assert_frame_equal(gen(chunk[pick], 7), full)

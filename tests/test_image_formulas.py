@@ -1,7 +1,9 @@
-"""The caption and geotransform formulas of the synthetic image corpus,
-pinned to literal values: every image table, tile_images and both
-flagship paths derive captions and georeference from these two helpers,
-so a drift in either changes every rollup."""
+"""The caption, geometry and geotransform formulas of the synthetic
+image corpus, pinned to literal values: every image table, tile_images
+and both flagship paths derive captions, sizes and georeference from
+these helpers, and the fused flagship decides which images to generate
+from geometry_of_ids alone, so a drift in any of them changes every
+rollup."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ from h3ronpy_spark.sources.images import (
     caption_of_ids,
     gen_images_pdf,
     gen_images_typed_pdf,
+    geometry_of_ids,
     phash_of_ids,
     transforms_of_phash,
 )
@@ -33,6 +36,38 @@ def test_caption_of_ids_literal(seed):
     assert list(gen_images_pdf(IDS, seed)["caption"]) == CAPTIONS[seed]
     assert (list(gen_images_typed_pdf(IDS, "raw_f32", seed)["caption"])
             == CAPTIONS[seed])
+
+# (phash column, w, h) per seed.  Seed 42's ids 0 and 2**40 + 7 and
+# seed 7's ids 123456789 and 2**40 + 7 have the splitmix64 sign bit set,
+# so the column value differs from the raw phash there.
+GEOMETRY = {
+    42: ([8152469300490781707, 1878545532072252084, 4533058112329070631],
+         [45, 29, 51], [31, 32, 29]),
+    7: ([1311325525161987955, 6255809214513118384, 2600243505291411561],
+        [62, 22, 39], [32, 54, 62]),
+}
+
+
+@pytest.mark.parametrize("seed", [42, 7])
+def test_geometry_of_ids_literal(seed):
+    phash, w, h = geometry_of_ids(IDS, seed)
+    assert (phash.dtype, w.dtype, h.dtype) == (np.int64, np.int32, np.int32)
+    assert (phash.tolist(), w.tolist(), h.tolist()) == GEOMETRY[seed]
+    # the sign bit is cleared, never the low bits georef_of_phash reads
+    raw = phash_of_ids(IDS, seed).view(np.int64)
+    assert (raw < 0).any()
+    assert (phash == raw & np.int64(0x7FFFFFFFFFFFFFFF)).all()
+
+
+@pytest.mark.parametrize("seed", [42, 7])
+def test_geometry_of_ids_is_the_table_columns(seed):
+    ids = np.concatenate([np.arange(3000, dtype=np.int64), IDS])
+    phash, w, h = geometry_of_ids(ids, seed)
+    for pdf in (gen_images_pdf(ids, seed),
+                gen_images_typed_pdf(ids, "raw_u16", seed)):
+        assert (pdf["phash"].to_numpy() == phash).all()
+        assert (pdf["w"].to_numpy() == w).all()
+        assert (pdf["h"].to_numpy() == h).all()
 
 
 def test_transforms_of_phash_literal():

@@ -3,11 +3,17 @@
 Runs every queries() entry at sf0.01 and compares against oracle_sql()
 via DuckDB: row count, column names, and an order-insensitive value
 comparison (columns sorted by name, rows sorted, values normalized).
+A full run (no query names given) then runs tools/validate_rasterh3.py's
+byte-identity check of the tiling kernel (~2-4 min) and fails on a
+MISMATCH.
+
+Run:  python tools/verify_contract.py [query ...]
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import time
 
@@ -104,9 +110,15 @@ def main(only: list[str] | None = None) -> int:
             fails.append(name)
             continue
         print(f"OK   {name}: {len(a)} rows match  ({dt:.1f}s)")
+    spark.stop()
+    if not only:
+        print()
+        check = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "validate_rasterh3.py")
+        if subprocess.run([sys.executable, check]).returncode:
+            fails.append("validate_rasterh3")
     print()
     print(f"{len(fails)} failures: {fails}" if fails else "ALL MATCH")
-    spark.stop()
     return 1 if fails else 0
 
 
