@@ -11,8 +11,8 @@ job.
 One image producer serves both paths (_image_kernel): a mapInPandas over
 spark.range ids that, per chunk of ids, generates the images it reads
 (byte generation, JPEG encode included, stands in for the storage
-read), decodes them through the codec registry snapshot (batch decoders
-where registered and not overridden) and tiles them.  An emitter
+read), decodes each through the codec registry snapshot (one per-image
+codec per format) and tiles them.  An emitter
 decides what the chunk's tiles become.
 
 Default path (fused): one Python stage, no joins.  Late
@@ -49,11 +49,8 @@ coverages it persisted (operators.spatial_join._keep_coverage), so
 repeated calls do not pile up persisted coverages.  The polygon
 DataFrame is built only where it is read: that polyfill and the
 fallback's pip_join.  The fallback is the independent check of the
-fused path's footprint prefilter and map-side probe.  The two paths do
-not run the same JPEG decoder: the batch codec picks one by batch size,
-so the fused path's few surviving images per chunk decode one at a time
-and the fallback's full chunks take the lockstep decoder (flagship
-docstring).  test_fused_equals_legacy builds a third
+fused path's footprint prefilter and map-side probe; both paths decode
+with the same per-image codec.  test_fused_equals_legacy builds a third
 reference plan from operators.tiling.tile_images.
 """
 
@@ -71,7 +68,6 @@ from ..operators.spatial_join import (
     polyfill_polygons,
 )
 from ..sources.images import (
-    batch_codec_snapshot,
     caption_of_ids,
     codec_snapshot,
     codecs_overridden,
@@ -108,8 +104,7 @@ def _footprint_index(spark, cov, res, res_list):
     return coverage_footprint_index(spark, cov, rp)
 
 
-def _image_kernel(gen, seed, codecs, batch_codecs, res, emit,
-                  fp_index=None):
+def _image_kernel(gen, seed, codecs, res, emit, fp_index=None):
     """The image producer of both flagship paths (module docstring): a
     mapInPandas function over `id` batches.  Per chunk of ids, when
     fp_index (h3core.rasterh3.footprint_index) is given, it keeps only
@@ -141,7 +136,7 @@ def _image_kernel(gen, seed, codecs, batch_codecs, res, emit,
                 return None
         pdf = gen(ids, seed)
         bands = decode_images_with(
-            codecs, batch_codecs, pdf["bytes"].tolist(),
+            codecs, {}, pdf["bytes"].tolist(),
             pdf["w"].to_numpy(np.int64), pdf["h"].to_numpy(np.int64),
             pdf["fmt"].tolist(),
         )
@@ -270,16 +265,13 @@ def flagship(
     blob whose footprint misses every polygon is never even read, so it
     never raises; and `codec_override` sees only the surviving images.
     The salted fallback generates and decodes everything, so it checks
-    the prefilter and the map-side probe.  The two paths do not run the
-    same JPEG decoder: the batch codec picks one by batch size
-    (jpeg_codec_batch), so the fused path's few surviving images per
-    chunk decode one at a time through decode_jpeg, while the
-    fallback's full chunks take the lockstep decoder.  perfbench's
-    sources.generate_us_per_image and sources.decode_us_per_image time
-    the generator and the codec directly on a 256-image batch, outside
-    the timed op, which generates and decodes only the few survivors
-    per chunk; the decode probe's batch takes the lockstep decoder, the
-    fallback's, not the fused op's."""
+    the prefilter and the map-side probe.  Both paths decode each image
+    with the same per-image codec (decode_jpeg for fmt='jpeg').
+    perfbench's sources.generate_us_per_image and
+    sources.decode_us_per_image time the generator and that codec
+    directly on a 256-image batch, outside the timed op, which generates
+    and decodes only the few survivors per chunk; the decode probe times
+    the decoder the op runs."""
     if fmt not in _FORMATS:
         raise ValueError(
             f"flagship fmt must be 'raw8', 'png' or 'jpeg', got {fmt!r}"
@@ -292,7 +284,6 @@ def flagship(
     # override is registered for the build only
     with codecs_overridden(codec_override):
         codecs = codec_snapshot()
-    batch_codecs = batch_codec_snapshot()
 
     # the polygon DataFrame is built only where it is read: the
     # polyfill below and the fallback's pip_join
@@ -323,7 +314,7 @@ def flagship(
         if coverage is None:
             cov.unpersist()
         per_img = ids.mapInPandas(
-            _image_kernel(gen, seed, codecs, batch_codecs, res,
+            _image_kernel(gen, seed, codecs, res,
                           _rollup_emitter(bc, res_list), fp_index),
             "image_id string, poly_id string, "
             "n_tiles long, sum_px long, caption string",
@@ -336,7 +327,7 @@ def flagship(
             # pip_join's bounded registry of the coverages it persisted
             _keep_coverage(cov)
         tiles = ids.mapInPandas(
-            _image_kernel(gen, seed, codecs, batch_codecs, res, _tile_rows),
+            _image_kernel(gen, seed, codecs, res, _tile_rows),
             "image long, cell long, px_value long",
         )
 

@@ -302,15 +302,6 @@ RAW_DTYPES = {
 # executor with no extra deployment step.
 _CODECS: dict = {}
 
-# Batch decoders (round 8, guide §4.2): fmt -> (batch_fn, companion).
-# batch_fn(blobs, ws, hs, fmt) -> list of arrays, one per blob,
-# element-identical to calling the companion per-image decode_fn.  The
-# companion is the per-image fn the batch fn shadows: decode_images_with
-# uses the batch path ONLY while codecs[fmt] IS that companion, so a
-# codec_override (or any re-registration) silently disables batching
-# and keeps override semantics exact.
-_BATCH_CODECS: dict = {}
-
 
 def register_codec(fmt: str, decode_fn) -> None:
     """Register (or replace) a decoder for `fmt`.  decode_fn(blob, w, h,
@@ -346,59 +337,18 @@ def codecs_overridden(override: dict | None):
                 unregister_codec(fmt)
 
 
-def register_batch_codec(fmt: str, batch_fn, companion) -> None:
-    """Register a batch decoder for `fmt` (see _BATCH_CODECS note)."""
-    _BATCH_CODECS[fmt] = (batch_fn, companion)
-
-
-def unregister_batch_codec(fmt: str) -> None:
-    _BATCH_CODECS.pop(fmt, None)
-
-
 def batch_codec_snapshot() -> dict:
-    """The current batch registry, for capture into a UDF closure."""
-    return dict(_BATCH_CODECS)
+    """{}: kept only for perfbench's decode probe (ROADMAP L removes it)."""
+    return {}
 
 
-def decode_images_with(
-    codecs: dict,
-    batch_codecs: dict,
-    blobs,
-    ws,
-    hs,
-    fmts,
-) -> list:
-    """Decode a batch of image rows; returns a list of arrays in row
-    order, each element-identical to decode_image_with on that row.
-
-    Rows whose fmt has a registered batch decoder AND whose per-image
-    codec is still that decoder's companion go through the batch path
-    (one lockstep/vectorized call over all such rows); everything else
-    — raw formats, overridden codecs, fmts without a batch decoder —
-    decodes per image exactly as before."""
-    n = len(blobs)
-    out: list = [None] * n
-    by_fmt: dict = {}
-    for i in range(n):
-        f = fmts[i]
-        bc = batch_codecs.get(f)
-        if bc is not None and codecs.get(f) is bc[1]:
-            by_fmt.setdefault(f, []).append(i)
-    for f, idxs in by_fmt.items():
-        arrs = batch_codecs[f][0](
-            [blobs[i] for i in idxs],
-            [int(ws[i]) for i in idxs],
-            [int(hs[i]) for i in idxs],
-            f,
-        )
-        for i, a in zip(idxs, arrs):
-            out[i] = a
-    for i in range(n):
-        if out[i] is None:
-            out[i] = decode_image_with(
-                codecs, blobs[i], int(ws[i]), int(hs[i]), fmts[i]
-            )
-    return out
+def decode_images_with(codecs: dict, _ignored, blobs, ws, hs, fmts) -> list:
+    """decode_image_with per row; `_ignored` stays only for perfbench's
+    decode probe (ROADMAP L removes it)."""
+    return [
+        decode_image_with(codecs, b, int(w), int(h), f)
+        for b, w, h, f in zip(blobs, ws, hs, fmts)
+    ]
 
 
 def _decode_raw(blob: bytes, w: int, h: int, fmt: str) -> np.ndarray:

@@ -1913,395 +1913,6 @@ def apply_exif_orientation(arr: np.ndarray, orientation) -> np.ndarray:
     return np.ascontiguousarray(arr)
 
 
-# ---------------------------------------------------------------------------
-# batched decode (round 8) — cross-stream lockstep entropy decoding
-# ---------------------------------------------------------------------------
-#
-# The scalar decoder's per-coefficient Python bit loop is ~77% of its
-# ~500 us/image on the bench corpus (guide §4.2: move whole batches to
-# vectorized native code).  Huffman decoding of ONE stream is inherently
-# sequential, but a batch of images is many INDEPENDENT streams, so the
-# batch decoder advances all of them in lockstep: one iteration decodes
-# one token per live stream with ~30 numpy ops over stream-wide arrays
-# (a 64-bit window gather, one complete-16-bit-LUT gather, masked state
-# transitions).  Amortized cost falls from ~2.5 us/token (Python) to
-# tens of ns/token.  Streams are sorted by entropy-data length before
-# chunking so lockstep groups finish together.
-#
-# Byte-identity argument: the lockstep loop reproduces the scalar
-# reader's token semantics exactly over INTEGER state (bit position,
-# block index, run/size, DC prediction), emits the same sparse
-# (index, value) coefficient set in the same order, and feeds the same
-# _reconstruct math — so equality with decode_jpeg is testable
-# coefficient-for-coefficient and pinned by tests/test_jpeg_batch_decode.py.
-# Any stream the fast path cannot prove trivial (progressive, color,
-# restart markers, missing tables, invalid codes, overdraw) falls back
-# to the scalar decode_jpeg, keeping its exact result/error behavior.
-#
-# Lockstep cost is about (iterations) x (a fixed numpy cost per
-# iteration), whatever the number of lanes: ~28 ms for 1 image, 90-150 ms
-# for 128, single core on the perfbench corpus, against ~0.5 ms per
-# image for decode_jpeg.  So it pays only on wide batches, and the
-# registry adapter jpeg_codec_batch decodes a batch of fewer than
-# LOCKSTEP_MIN_LANES blobs image by image — the fused flagship's
-# chunks, which keep a few images each after the footprint prefilter.
-# LOCKSTEP_MIN_LANES is the median lockstep/scalar crossover that
-# tools/codec_layers.py measured: 12 rounds over perfbench seeds 1-3 on
-# a shared 4-vCPU host read 168-304 images.  At 1024 images, the
-# salted fallback's chunk, lockstep took 276-461 µs/image against
-# 485-901 for decode_jpeg in every round.
-LOCKSTEP_MIN_LANES = 224
-
-
-def _parse_gray_baseline(blob: bytes):
-    """Header walk for the batched fast path.
-
-    Returns (fh, fw, qtable, dc_payload, ac_payload, scan_start) for an
-    8-bit single-component baseline (SOF0/1) restart-free single-scan
-    stream with all referenced tables present — or None for anything
-    else.  A None can never change results, only speed: the caller
-    falls back to the exact scalar decode_jpeg."""
-    if len(blob) < 4 or blob[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    hpayloads: dict[int, tuple[bytes, bytes]] = {}
-    sof = None
-    n = len(blob)
-    while pos < n:
-        if blob[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = blob[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        if pos + 2 > n:
-            return None
-        (seglen,) = struct.unpack(">H", blob[pos : pos + 2])
-        seg = blob[pos + 2 : pos + seglen]
-        if marker == 0xDB:
-            try:
-                _parse_dqt(seg, qtables)
-            except ValueError:
-                return None
-        elif marker == 0xC4:
-            p = 0
-            while p + 17 <= len(seg):
-                tid = seg[p]
-                bits = bytes(seg[p + 1 : p + 17])
-                cnt = sum(bits)
-                hpayloads[tid] = (bits, bytes(seg[p + 17 : p + 17 + cnt]))
-                p += 17 + cnt
-        elif marker in (0xC0, 0xC1):
-            if len(seg) < 9:
-                return None
-            prec, fh, fw, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8 or nc != 1 or fh == 0 or fw == 0:
-                return None
-            if seg[7] != 0x11:  # sampling factors must be 1x1
-                return None
-            sof = (fh, fw, seg[8])
-        elif marker == 0xDD:
-            return None  # restart markers: scalar path
-        elif marker == 0xDA:
-            if sof is None or len(seg) < 3 or seg[0] != 1:
-                return None
-            td, ta = seg[2] >> 4, seg[2] & 0x0F
-            dcp = hpayloads.get(td)
-            acp = hpayloads.get(0x10 | ta)
-            q = qtables.get(sof[2])
-            if dcp is None or acp is None or q is None:
-                return None
-            return (sof[0], sof[1], q, dcp, acp, pos + seglen)
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            return None  # progressive / exotic SOFs: scalar path
-        pos += seglen
-    return None
-
-
-@functools.lru_cache(maxsize=64)
-def _lockstep_lut(bits: bytes, values: bytes, is_ac: bool) -> np.ndarray:
-    """Complete 65536-entry Huffman LUT for the lockstep decoder, fully
-    pre-decoded: one gather per token yields every field the state
-    transition needs.  Entry (int64) packs
-
-        codelen | size << 5 | run << 10 | kadd << 14 | done << 21
-
-    where `kadd` is the coefficient-index advance (DC: 1; AC
-    coefficient: run+1; ZRL: 16; EOB: 0) and `done` marks EOB.  Invalid
-    16-bit windows are 0 (no valid entry has codelen 0), which freezes
-    the stream's state so the caller's bad-flag sweep can hand it to
-    the scalar path.  JPEG codes are at most 16 bits, so this needs no
-    long-code fallback."""
-    lut = np.zeros(1 << 16, np.int64)
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        span = 1 << (16 - length)
-        for _ in range(bits[length - 1]):
-            sym = values[k]
-            if is_ac:
-                size = sym & 0x0F
-                run = sym >> 4
-                if size:
-                    kadd, done = run + 1, 0
-                elif sym == 0xF0:  # ZRL
-                    kadd, done, run = 16, 0, 0
-                else:  # EOB (any size-0 symbol but ZRL, as the
-                    kadd, done, run = 0, 1, 0  # scalar loop treats it)
-            else:
-                size, run, kadd, done = sym, 0, 1, 0
-            if size <= 16:  # the 16-bit value-extract trick's ceiling;
-                # a wilder size category falls back to the scalar path
-                base = code << (16 - length)
-                lut[base : base + span] = (
-                    length
-                    | (size << 5)
-                    | (run << 10)
-                    | (kadd << 14)
-                    | (done << 21)
-                )
-            code += 1
-            k += 1
-        code <<= 1
-    return lut
-
-
-def _entropy_decode_gray_lockstep(datas, nblocks, dcp, acp):
-    """Decode S restart-free single-component scans in lockstep.
-
-    `datas` are unstuffed entropy segments; `nblocks[i]` the block count
-    of stream i; `dcp`/`acp` the raw DHT payloads (cached packed LUTs —
-    see _lockstep_lut).  Returns (idx_list, val_list, bad): per-stream
-    int64 sparse coefficient indices/values in emission order (last
-    write wins on scatter — same semantics as the scalar path's
-    collected appends), and a bool array marking streams that hit an
-    invalid window, coefficient overrun, or overdraw; the caller
-    re-decodes those with the scalar path so malformed streams keep its
-    exact result/error behavior.
-
-    Loop-economy notes (this is the hot loop of the batched decoder —
-    every line is one numpy op over the live-stream array):
-      * finished/bad lanes are NOT compacted every iteration — they
-        keep decoding garbage harmlessly (gather clamped into the
-        buffer, emissions filtered afterwards by the `blk < nblocks`
-        bound, bad-ness latched before `fin`), and lanes are compacted
-        only when an eighth of them are dead;
-      * emissions are appended UNFILTERED per iteration (arrays are
-        fresh objects) and masked once at the end — no per-iteration
-        .any()/boolean-gather;
-      * the packed LUT folds run/size/k-advance/EOB decoding into the
-        single per-token gather."""
-    S = len(datas)
-    lens = np.fromiter((len(d) for d in datas), np.int64, S)
-    starts = np.zeros(S, np.int64)
-    np.cumsum(lens[:-1] + 16, out=starts[1:])
-    total = int(lens.sum()) + 16 * S
-    # 16 guard bytes of 0xFF per stream: the scalar reader overdraws at
-    # most 8 bytes past the last coefficient; the extra 8 keep the
-    # 64-bit window gather inside this stream's slice right up to the
-    # overdraw cut below
-    buf = np.full(total + 8, 0xFF, np.uint8)
-    for i in range(S):
-        o = int(starts[i])
-        buf[o : o + int(lens[i])] = np.frombuffer(datas[i], np.uint8)
-    # big-endian 64-bit window at every byte offset (8 strided passes)
-    b64 = buf.astype(np.uint64)
-    W = np.zeros(total, np.uint64)
-    for j in range(8):
-        W |= b64[j : total + j] << np.uint64(56 - 8 * j)
-    wmax = np.int64(total - 1)
-    lut2 = np.concatenate(
-        [_lockstep_lut(*acp, True), _lockstep_lut(*dcp, False)]
-    )  # index = la | isdc << 16
-
-    nblk0 = np.asarray(nblocks, np.int64)
-    sid = np.arange(S, dtype=np.int64)
-    bit = starts * 8
-    # the scalar reader's refill bound: it pads 8 bytes, refills 4
-    # bytes at a time, and raises once it needs bits while fewer than
-    # 32 remain, i.e. before a token starting past bit
-    # 32 * ((len + 8) // 4) - 32.  A lane past it goes to the scalar
-    # path and raises there.
-    maxbit = starts * 8 + 32 * ((lens + 8) // 4) - 32
-    blk = np.zeros(S, np.int64)
-    k = np.zeros(S, np.int64)
-    pred = np.zeros(S, np.int64)
-    nblk = nblk0.copy()
-    badacc = np.zeros(S, bool)
-    finprev = np.zeros(S, bool)
-    bad = np.zeros(S, bool)
-    out_sid: list = []
-    out_idx: list = []
-    out_val: list = []
-    out_emit: list = []
-    u7 = np.uint64(7)
-    u48 = np.uint64(48)
-
-    while sid.size:
-        w = W[np.minimum(bit >> 3, wmax)]
-        wsh = w << (bit.view(np.uint64) & u7)
-        la = (wsh >> u48).astype(np.int64)
-        isdc = k == 0
-        ent = lut2[la | (isdc.astype(np.int64) << 16)]
-        codelen = ent & 31
-        size = (ent >> 5) & 31
-        run = (ent >> 10) & 15
-        # value bits after the code, sign-extended (T.81 F.2.2.1);
-        # size == 0 falls out naturally: raw16 >> 16 == 0
-        raw = ((wsh << codelen.view(np.uint64)) >> u48).astype(
-            np.int64
-        ) >> (16 - size)
-        half = (np.int64(1) << size) >> 1
-        v = np.where(raw < half, raw + 1 - (half << 1), raw)
-        bit = bit + codelen + size
-        pred = pred + np.where(isdc, v, 0)
-        knew = k + run
-        bad_now = (ent == 0) | (knew > 63)
-        # emission slab: filtered once at the end (see docstring)
-        out_sid.append(sid)
-        out_idx.append((blk << 6) + knew)
-        out_val.append(np.where(isdc, pred, v))
-        out_emit.append(
-            np.where(isdc, pred != 0, size > 0) & ~bad_now
-        )
-        k_next = k + ((ent >> 14) & 31)
-        blk_done = (ent >> 21 != 0) | (k_next >= 64)
-        blk = blk + blk_done
-        k = np.where(blk_done, 0, k_next)
-        # latch bad-ness only for tokens decoded BEFORE the lane
-        # finished (finprev): garbage tokens on finished lanes must not
-        # demote them to the scalar path, but an overrun on the very
-        # token that would have finished a block is still bad (the
-        # scalar path raises there)
-        badacc |= bad_now & ~finprev
-        fin = blk >= nblk
-        badacc |= (bit > maxbit) & ~fin
-        finprev = fin
-        dead = fin | badacc
-        ndead = int(dead.sum())
-        if ndead and (ndead << 3) >= sid.size:
-            if badacc.any():
-                bad[sid[badacc]] = True
-            live = ~dead
-            sid = sid[live]
-            bit = bit[live]
-            blk = blk[live]
-            k = k[live]
-            pred = pred[live]
-            nblk = nblk[live]
-            maxbit = maxbit[live]
-            badacc = badacc[live]
-            finprev = finprev[live]
-
-    idx_list: list = [np.empty(0, np.int64)] * S
-    val_list: list = [np.empty(0, np.int64)] * S
-    if out_sid:
-        asid = np.concatenate(out_sid)
-        aidx = np.concatenate(out_idx)
-        aval = np.concatenate(out_val)
-        aemit = np.concatenate(out_emit)
-        # drop non-emitting tokens, post-finish garbage (blk beyond the
-        # stream's true block count) and bad streams in one mask
-        keep = aemit & (aidx < (nblk0[asid] << 6)) & ~bad[asid]
-        asid = asid[keep]
-        aidx = aidx[keep]
-        aval = aval[keep]
-        order = np.argsort(asid, kind="stable")
-        asid = asid[order]
-        aidx = aidx[order]
-        aval = aval[order]
-        bounds = np.searchsorted(asid, np.arange(S + 1))
-        for i in range(S):
-            lo, hi = int(bounds[i]), int(bounds[i + 1])
-            if hi > lo:
-                idx_list[i] = aidx[lo:hi]
-                val_list[i] = aval[lo:hi]
-    return idx_list, val_list, bad
-
-
-def decode_jpeg_batch(blobs, chunk: int = 512) -> list:
-    """Decode a batch of JPEG blobs; result[i] == decode_jpeg(blobs[i])
-    exactly (pinned by test), including raising the scalar path's error
-    for malformed streams.  Single-component baseline streams sharing a
-    table set run through the lockstep entropy decoder + one batched
-    dequant/IDCT, in ceil(n / chunk) equal chunks; everything else
-    decodes per image.  This is the lockstep entry point whatever the
-    batch size; jpeg_codec_batch sends narrow batches to decode_jpeg."""
-    out: list = [None] * len(blobs)
-    fast: list = []
-    for i, blob in enumerate(blobs):
-        try:
-            info = _parse_gray_baseline(bytes(blob))
-        except Exception:
-            info = None
-        if info is None:
-            out[i] = decode_jpeg(blob)
-        else:
-            fast.append((i, info))
-    groups: dict = {}
-    for i, info in fast:
-        fh, fw, q, dcp, acp, ss = info
-        groups.setdefault((dcp, acp, q.tobytes()), []).append((i, info))
-    for (dcp, acp, _qb), items in groups.items():
-        entries = []
-        for i, (fh, fw, q, _d, _a, ss) in items:
-            data, _ = _unstuff_scan(blobs[i], ss)
-            entries.append((i, fh, fw, q, data))
-        # sort by entropy length so lockstep chunks finish together, and
-        # split into equal chunks so none is a few-lane tail
-        entries.sort(key=lambda e: len(e[4]))
-        m = len(entries)
-        nparts = -(-m // chunk)
-        for c in range(nparts):
-            part = entries[c * m // nparts : (c + 1) * m // nparts]
-            nb = np.array(
-                [((e[2] + 7) // 8) * ((e[1] + 7) // 8) for e in part],
-                np.int64,
-            )
-            idxs, vals, bad = _entropy_decode_gray_lockstep(
-                [e[4] for e in part], nb, dcp, acp
-            )
-            good = np.flatnonzero(~bad)
-            if good.size:
-                nbg = nb[good]
-                offs = np.zeros(good.size + 1, np.int64)
-                np.cumsum(nbg, out=offs[1:])
-                zzcat = np.zeros((int(offs[-1]), 64), np.int32)
-                flat = zzcat.reshape(-1)
-                for jj, j in enumerate(good):
-                    if idxs[j].size:
-                        flat[idxs[j] + (offs[jj] << 6)] = vals[j]
-                q = part[int(good[0])][3]
-                # same math (and the same stacked-8x8 matmul) as
-                # _reconstruct's grayscale branch, over the whole chunk
-                coef = (
-                    zzcat[:, _UNZIGZAG].reshape(-1, 8, 8) * q
-                ).astype(np.float64)
-                pix = _D.T @ coef @ _D + 128.0
-                # round/clip/uint8 once per chunk: elementwise, so
-                # identical to the scalar path's crop-then-round order
-                pixu8 = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-                for jj, j in enumerate(good):
-                    i, fh, fw, _q, _data = part[j]
-                    bw_i = (fw + 7) // 8
-                    bh_i = (fh + 7) // 8
-                    plane = (
-                        pixu8[offs[jj] : offs[jj + 1]]
-                        .reshape(bh_i, bw_i, 8, 8)
-                        .transpose(0, 2, 1, 3)
-                        .reshape(bh_i * 8, bw_i * 8)
-                    )
-                    out[i] = np.ascontiguousarray(plane[:fh, :fw])
-            for j in np.flatnonzero(bad):
-                out[part[int(j)][0]] = decode_jpeg(blobs[part[int(j)][0]])
-    return out
-
-
 def jpeg_codec(blob: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     """Codec-registry adapter with geometry sanity check."""
     a = decode_jpeg(blob)
@@ -2313,28 +1924,10 @@ def jpeg_codec(blob: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     return a
 
 
-def jpeg_codec_batch(blobs, ws, hs, fmt) -> list:
-    """Batch codec-registry adapter (companion of jpeg_codec): same
-    geometry check per image.  A batch of LOCKSTEP_MIN_LANES blobs or
-    more decodes through decode_jpeg_batch; a smaller one decodes image
-    by image through jpeg_codec, which is cheaper there."""
-    if len(blobs) < LOCKSTEP_MIN_LANES:
-        return [jpeg_codec(b, w, h, fmt) for b, w, h in zip(blobs, ws, hs)]
-    arrs = decode_jpeg_batch(blobs)
-    for a, w, h in zip(arrs, ws, hs):
-        if a.shape[:2] != (int(h), int(w)):
-            raise ValueError(
-                f"JPEG geometry mismatch: decoded {a.shape[:2]}, "
-                f"metadata says {(int(h), int(w))}"
-            )
-    return arrs
-
-
 def register_jpeg_codec() -> None:
-    from .images import register_batch_codec, register_codec
+    from .images import register_codec
 
     register_codec("jpeg", jpeg_codec)
-    register_batch_codec("jpeg", jpeg_codec_batch, jpeg_codec)
 
 
 def psnr_db(a: np.ndarray, b: np.ndarray) -> float:

@@ -337,7 +337,7 @@ def _drive(batches, fp_index, seed=42):
     from h3ronpy_spark.sources.images import gen_images_pdf
 
     spy, calls = _recording(gen_images_pdf)
-    run = _image_kernel(spy, seed, {}, {}, 9, _tile_rows, fp_index)
+    run = _image_kernel(spy, seed, {}, 9, _tile_rows, fp_index)
     out = list(run(iter(pd.DataFrame({"id": b}) for b in batches)))
     return calls, out
 

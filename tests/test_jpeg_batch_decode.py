@@ -1,5 +1,6 @@
-"""Round-8: decode_jpeg_batch must be element-identical per image to
-decode_jpeg — the fused flagship's jpeg leg decodes through it, and the
+"""decode_images_with, the row decoder of the flagship's image kernel,
+must return per row exactly what decode_jpeg / decode_image_with return
+for that row, including raising the scalar decoder's errors; the
 driver's jpeg-path query values depend on the decoded pixels."""
 
 from __future__ import annotations
@@ -7,14 +8,17 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-import h3ronpy_spark.sources.jpeg as J
+from h3ronpy_spark.sources.images import (
+    codec_snapshot,
+    decode_image_with,
+    decode_images_with,
+    gen_images_jpeg_pdf,
+)
 from h3ronpy_spark.sources.jpeg import (
-    LOCKSTEP_MIN_LANES,
     decode_jpeg,
-    decode_jpeg_batch,
     encode_jpeg,
     encode_jpeg_progressive,
-    jpeg_codec_batch,
+    register_jpeg_codec,
 )
 
 
@@ -22,36 +26,29 @@ def _same(a: np.ndarray, b: np.ndarray) -> bool:
     return a.dtype == b.dtype and a.shape == b.shape and np.array_equal(a, b)
 
 
-@pytest.fixture
-def lanes(monkeypatch):
-    """The lane count of every _entropy_decode_gray_lockstep call."""
-    seen: list = []
-    real = J._entropy_decode_gray_lockstep
-
-    def spy(datas, *args):
-        seen.append(len(datas))
-        return real(datas, *args)
-
-    monkeypatch.setattr(J, "_entropy_decode_gray_lockstep", spy)
-    return seen
+def _decode_rows(blobs):
+    """decode_images_with over JPEG rows, geometry read from decode_jpeg."""
+    register_jpeg_codec()
+    shapes = [decode_jpeg(b).shape for b in blobs]
+    return decode_images_with(
+        codec_snapshot(), {}, blobs, [s[1] for s in shapes],
+        [s[0] for s in shapes], ["jpeg"] * len(blobs),
+    )
 
 
-def test_batch_identical_corpus(lanes):
-    from h3ronpy_spark.sources.images import gen_images_jpeg_pdf
-
+def test_batch_identical_corpus():
     pdf = gen_images_jpeg_pdf(np.arange(400, dtype=np.int64))
     blobs = pdf["bytes"].tolist()
     ref = [decode_jpeg(b) for b in blobs]
-    for chunk in (400, 64, 7):  # incl. uneven multi-chunk splits
-        lanes.clear()
-        got = decode_jpeg_batch(blobs, chunk=chunk)
-        assert all(_same(a, b) for a, b in zip(ref, got))
-        # ceil(400 / chunk) balanced chunks: no few-lane tail
-        assert len(lanes) == -(-400 // chunk) and sum(lanes) == 400
-        assert max(lanes) - min(lanes) <= 1
+    register_jpeg_codec()
+    got = decode_images_with(
+        codec_snapshot(), {}, blobs, pdf["w"].tolist(), pdf["h"].tolist(),
+        pdf["fmt"].tolist(),
+    )
+    assert len(got) == 400 and all(_same(a, b) for a, b in zip(ref, got))
 
 
-def test_batch_identical_edge_cases(lanes):
+def test_batch_identical_edge_cases():
     rng = np.random.default_rng(5)
     bands = [
         np.zeros((8, 8), np.uint8),                    # all-zero DC only
@@ -63,40 +60,39 @@ def test_batch_identical_edge_cases(lanes):
         rng.integers(0, 256, (7, 200)).astype(np.uint8),  # wide strip
         rng.integers(0, 256, (200, 7)).astype(np.uint8),  # tall strip
     ]
-    # mixed qualities in ONE batch: distinct quantization tables force
-    # the per-table-set grouping path
+    # mixed qualities (distinct quantization tables) in one call
     blobs = [
         encode_jpeg(b, q) for b in bands for q in (93, 75, 25, 5)
     ]
     ref = [decode_jpeg(b) for b in blobs]
-    got = decode_jpeg_batch(blobs, chunk=5)
+    got = _decode_rows(blobs)
     assert all(_same(a, b) for a, b in zip(ref, got))
-    assert lanes and sum(lanes) == len(blobs)
 
 
-def test_batch_mixed_fastpath_and_fallback(lanes):
+def test_batch_mixed_fastpath_and_fallback():
     rng = np.random.default_rng(9)
     gray = rng.integers(0, 256, (24, 24)).astype(np.uint8)
     rgb = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
     blobs = [
-        encode_jpeg(gray, 90),                      # fast path
-        encode_jpeg_progressive(gray, 90),          # scalar: SOF2
-        encode_jpeg(rgb, 90),                       # scalar: 3 components
-        encode_jpeg(rgb, 90, subsampling="420"),    # scalar: sampling
-        encode_jpeg(gray, 40),                      # fast path, other table set
+        encode_jpeg(gray, 90),                      # baseline gray
+        encode_jpeg_progressive(gray, 90),          # SOF2
+        encode_jpeg(rgb, 90),                       # 3 components
+        encode_jpeg(rgb, 90, subsampling="420"),    # chroma sampling
+        encode_jpeg(gray, 40),                      # other table set
     ]
     ref = [decode_jpeg(b) for b in blobs]
-    got = decode_jpeg_batch(blobs)
+    got = _decode_rows(blobs)
     assert all(_same(a, b) for a, b in zip(ref, got))
-    assert lanes == [1, 1]  # one lane per table set
 
 
 def test_batch_malformed_raises_like_scalar():
     gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
     good = encode_jpeg(gray, 90)
+    register_jpeg_codec()
+    codecs = codec_snapshot()
     # header truncation (dies in the marker walk) and entropy-segment
-    # truncation (parses fine, overdraws in the lockstep loop -> bad ->
-    # scalar fallback raises): both must raise the scalar path's error
+    # truncation (parses fine, overdraws the scan): both must raise the
+    # scalar decoder's error through the row decoder
     for cut in (len(good) // 2, len(good) - 6):
         truncated = good[:cut]
         try:
@@ -106,12 +102,10 @@ def test_batch_malformed_raises_like_scalar():
             scalar_err = type(e)
         assert scalar_err is not None
         with pytest.raises(scalar_err):
-            decode_jpeg_batch([good, truncated])
-        # a batch below LOCKSTEP_MIN_LANES takes the scalar path
-        with pytest.raises(scalar_err):
-            jpeg_codec_batch([good, truncated], [8, 8], [8, 8], "jpeg")
-    assert decode_jpeg_batch([]) == []
-    assert _same(decode_jpeg_batch([good])[0], decode_jpeg(good))
+            decode_images_with(codecs, {}, [good, truncated], [8, 8],
+                               [8, 8], ["jpeg", "jpeg"])
+    assert decode_images_with(codecs, {}, [], [], [], []) == []
+    assert _same(_decode_rows([good])[0], decode_jpeg(good))
 
 
 def _all_ones_stream(nblocks: int, nbytes: int) -> bytes:
@@ -144,47 +138,25 @@ def _all_ones_stream(nblocks: int, nbytes: int) -> bytes:
     # bits: 32 blocks for 4 or 5 data bytes
     [(32, 4), (33, 4), (40, 4), (48, 4), (32, 5), (34, 5), (36, 5)],
 )
-def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes, lanes):
+def test_batch_overdraw_bound_matches_scalar(nblocks, nbytes):
     blob = _all_ones_stream(nblocks, nbytes)
-    try:
-        want = decode_jpeg(blob)
-    except ValueError:
-        want = None
-    assert (want is None) == (nblocks > 32)
-    if want is None:
+    register_jpeg_codec()
+    rows = (codec_snapshot(), {}, [blob], [8 * nblocks], [8], ["jpeg"])
+    if nblocks > 32:
         with pytest.raises(ValueError):
-            decode_jpeg_batch([blob])
+            decode_jpeg(blob)
+        with pytest.raises(ValueError):
+            decode_images_with(*rows)
     else:
-        assert _same(decode_jpeg_batch([blob])[0], want)
-    assert lanes == [1]
+        want = decode_jpeg(blob)
+        assert want.shape == (8, 8 * nblocks)
+        assert _same(decode_images_with(*rows)[0], want)
 
 
-def test_decode_images_with_batch_and_override(lanes):
-    _check_decode_images_with(48, lanes)
-
-
-@pytest.mark.parametrize(
-    "n",
-    [1, LOCKSTEP_MIN_LANES - 1, LOCKSTEP_MIN_LANES, LOCKSTEP_MIN_LANES + 1],
-)
-def test_decode_images_with_lane_counts(n, lanes):
-    _check_decode_images_with(n, lanes)
-
-
-def _check_decode_images_with(n, lanes):
-    from h3ronpy_spark.sources.images import (
-        batch_codec_snapshot,
-        codec_snapshot,
-        decode_image_with,
-        decode_images_with,
-        gen_images_jpeg_pdf,
-    )
-    from h3ronpy_spark.sources.jpeg import register_jpeg_codec
-
+def test_decode_images_with_batch_and_override():
     register_jpeg_codec()
     codecs = codec_snapshot()
-    batch = batch_codec_snapshot()
-    pdf = gen_images_jpeg_pdf(np.arange(n, dtype=np.int64))
+    pdf = gen_images_jpeg_pdf(np.arange(48, dtype=np.int64))
     blobs = pdf["bytes"].tolist()
     ws = pdf["w"].tolist()
     hs = pdf["h"].tolist()
@@ -193,12 +165,10 @@ def _check_decode_images_with(n, lanes):
         decode_image_with(codecs, blobs[i], ws[i], hs[i], fmts[i])
         for i in range(len(blobs))
     ]
-    got = decode_images_with(codecs, batch, blobs, ws, hs, fmts)
-    assert len(got) == n and all(_same(a, b) for a, b in zip(ref, got))
-    # the lockstep decoder runs from LOCKSTEP_MIN_LANES images on
-    assert sum(lanes) == (n if n >= LOCKSTEP_MIN_LANES else 0)
+    got = decode_images_with(codecs, {}, blobs, ws, hs, fmts)
+    assert len(got) == 48 and all(_same(a, b) for a, b in zip(ref, got))
 
-    # an override replaces the per-image fn -> batch path must disable
+    # an override replaces the per-image fn: called once per row
     calls = []
 
     def counting(blob, w, h, fmt):
@@ -207,6 +177,6 @@ def _check_decode_images_with(n, lanes):
 
     over = dict(codecs)
     over["jpeg"] = counting
-    got2 = decode_images_with(over, batch, blobs, ws, hs, fmts)
+    got2 = decode_images_with(over, {}, blobs, ws, hs, fmts)
     assert len(calls) == len(blobs)
     assert all(_same(a, b) for a, b in zip(ref, got2))
