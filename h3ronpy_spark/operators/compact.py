@@ -26,43 +26,61 @@ from .. import functions as H
 
 _GROUP_RES = 2
 
-# most-recent persisted intermediate PER SparkSession (round-5, ADVICE
-# r04): bookkeeping is keyed by session id and guarded by a lock so two
-# driver threads interleaving compact_cells on different sessions cannot
-# pop/unpersist each other's cache mid-query; within one session, each
-# new call still releases the previous call's intermediate (bounding
-# default cache growth at one small, compacted DataFrame per session).
-# Callers that interleave actions on OLDER compact results of the same
-# session simply recompute (correctness unaffected; documented).
-_PERSIST_LOCK = threading.Lock()
-_LAST_PERSISTED: dict = {}  # session key -> [DataFrame]
-
-
-def _session_key(df: DataFrame):
-    try:
-        return id(df.sparkSession)
-    except Exception:
-        return None
-
-
 _ALL_SESSIONS = object()
+
+
+class SessionSlot:
+    """One persisted DataFrame per SparkSession (round-5, ADVICE r04):
+    hold(df) persists df and releases the one held before in its
+    session, so default cache growth stays at one frame per session.
+    Keyed by session id and guarded by a lock, so two driver threads on
+    different sessions cannot unpersist each other's frame mid-query.
+    A caller still running an action on an OLDER frame of the same
+    session simply recomputes it (correctness unaffected)."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.held: dict = {}  # session key -> DataFrame
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        try:
+            key = id(df.sparkSession)
+        except Exception:
+            key = None
+        h = df.persist()
+        with self.lock:
+            old = self.held.pop(key, None)
+            self.held[key] = h
+        if old is not None:
+            _unpersist(old)
+        return h
+
+    def release(self, session_key=_ALL_SESSIONS) -> None:
+        """Release the frame held for one session key, or with no
+        argument every session's."""
+        with self.lock:
+            keys = (list(self.held) if session_key is _ALL_SESSIONS
+                    else [session_key])
+            olds = [self.held.pop(k) for k in keys if k in self.held]
+        for old in olds:
+            _unpersist(old)
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass
+
+
+# the most recent compact_cells call's persisted intermediate
+_INTERMEDIATES = SessionSlot()
 
 
 def unpersist_intermediates(session_key=_ALL_SESSIONS) -> None:
     """Release intermediates compact_cells persisted (blocking=False).
     With no argument, releases across ALL sessions."""
-    with _PERSIST_LOCK:
-        keys = (
-            list(_LAST_PERSISTED)
-            if session_key is _ALL_SESSIONS
-            else [session_key]
-        )
-        for k in keys:
-            for h in _LAST_PERSISTED.pop(k, []):
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
+    _INTERMEDIATES.release(session_key)
 
 
 def compact_cells(
@@ -97,11 +115,7 @@ def compact_cells(
 
     grouped = fine.groupBy("__anc").applyInPandas(_compact_group, "cell long")
     if persist_intermediate:
-        grouped = grouped.persist()
-        key = _session_key(df)
-        unpersist_intermediates(key)
-        with _PERSIST_LOCK:
-            _LAST_PERSISTED.setdefault(key, []).append(grouped)
+        grouped = _INTERMEDIATES.hold(grouped)
     # cells promoted all the way to the group ancestor (res == _GROUP_RES)
     # may form complete sibling sets ACROSS groups; finish them with the
     # same kernel in a single-group second stage together with the

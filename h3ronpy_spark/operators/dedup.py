@@ -20,8 +20,6 @@ is the property that survives 100x data growth.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -29,44 +27,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .compact import SessionSlot
+
 # bounded per-session cache of ad-hoc signature frames (round-5, VERDICT
 # r04 item 4): when minhash_lsh_pairs computes signatures itself
 # (sigs=None) AND the skew guard is on, the guard's hot-bucket
 # aggregation branch would re-run the signature kernel subtree; the
-# frame is persisted instead, with the same one-slot-per-session
-# bookkeeping as operators/compact.py (each new ad-hoc call releases
-# the previous call's persisted signatures; thread-safe).
-_SIG_LOCK = threading.Lock()
-_SIG_PERSISTED: dict = {}  # session key -> [DataFrame]
-
-
-def _persist_bounded(df: DataFrame) -> DataFrame:
-    try:
-        key = id(df.sparkSession)
-    except Exception:
-        key = None
-    h = df.persist()
-    with _SIG_LOCK:
-        for old in _SIG_PERSISTED.pop(key, []):
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _SIG_PERSISTED[key] = [h]
-    return h
+# frame is persisted instead, one per session (each new ad-hoc call
+# releases the previous call's persisted signatures).
+_SIGNATURES = SessionSlot()
 
 
 def unpersist_signatures() -> None:
     """Release every ad-hoc signature frame persisted by the pair
     families (all sessions)."""
-    with _SIG_LOCK:
-        for hs in _SIG_PERSISTED.values():
-            for h in hs:
-                try:
-                    h.unpersist()
-                except Exception:
-                    pass
-        _SIG_PERSISTED.clear()
+    _SIGNATURES.release()
 
 # ---------------------------------------------------------------------------
 # exact
@@ -298,7 +273,7 @@ def minhash_lsh_pairs(
             # persist so the pandas-UDF kernel runs exactly one pass
             # even on the ad-hoc path (VERDICT r04 item 4 — callers at
             # scale still pass materialized sigs= and skip this)
-            sigs = _persist_bounded(sigs)
+            sigs = _SIGNATURES.hold(sigs)
     rows_per_band = _N_HASHES // _BANDS
     bands = sigs.select(
         "id",
@@ -566,7 +541,7 @@ def simhash_pairs(
         ).filter(F.col("sim").isNotNull())
         if max_bucket is not None:
             # one kernel pass on the ad-hoc path (see minhash_lsh_pairs)
-            sigs = _persist_bounded(sigs)
+            sigs = _SIGNATURES.hold(sigs)
     bands = sigs.select(
         "id",
         "sim",

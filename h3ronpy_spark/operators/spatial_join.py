@@ -20,8 +20,16 @@ Strategy chooser (SURVEY.md §4.2 custom item 1):
   * otherwise -> shuffle hash join on the prefix key, with optional key
     salting for skewed dense regions on top of AQE skew handling
   * strategy='mapside' (and the fused flagship) -> one mapInArrow probe
-    of a cached broadcast coverage index, when mapside_index finds the
-    coverage non-empty and within the same budget
+    of a cached broadcast coverage index, when the coverage's
+    mapside_index finds it non-empty and within the same budget
+
+One coverage registry serves both joins and the flagship: join_coverage
+builds (polyfill, persist) or looks up the coverage a join reads, and
+its entry holds everything read of it — row count and resolutions, the
+broadcast index, the footprint index — plus whether the engine
+persisted it.  The map-side plan collects the index and releases an own
+coverage; the Catalyst plan reads the coverage, which stays persisted
+until the registry (one lock, _REGISTRY_MAX entries) evicts its entry.
 """
 
 from __future__ import annotations
@@ -33,95 +41,143 @@ from pyspark.sql import functions as F
 
 from .. import functions as H
 
-# Input metadata of a coverage (row count, distinct resolutions), cached
-# per DataFrame object: callers amortize one persisted coverage across
-# many joins, and each lookup otherwise costs a grouped aggregate.  Results
-# are never cached; every join recomputes fully.
-_COV_META_LOCK = threading.Lock()
-_COV_META_CACHE: dict = {}  # id(df) -> (df, n_cov, res_list)
-_COV_META_MAX = 16
-
-
-def _seed_meta(cov: DataFrame, n_cov: int, res_list: list[int]) -> None:
-    with _COV_META_LOCK:
-        if len(_COV_META_CACHE) >= _COV_META_MAX:
-            _COV_META_CACHE.pop(next(iter(_COV_META_CACHE)))
-        _COV_META_CACHE[id(cov)] = (cov, n_cov, res_list)
-
-
-def _coverage_meta(cov: DataFrame) -> tuple[int, list[int]]:
-    with _COV_META_LOCK:
-        hit = _COV_META_CACHE.get(id(cov))
-    if hit is not None and hit[0] is cov:
-        return hit[1], hit[2]
-    # one aggregate gives both: the row count is the sum of the
-    # per-resolution counts
-    counts = cov.groupBy(
-        H.cells_resolution(F.col("__poly_cell")).alias("r")
-    ).count().collect()
-    n_cov = sum(c["count"] for c in counts)
-    res_list = sorted(c["r"] for c in counts)
-    _seed_meta(cov, n_cov, res_list)
-    return n_cov, res_list
-
-
 # Coverage rows a map-side probe or a broadcast join may ship to every
 # executor; a larger coverage takes the shuffle join.
 BROADCAST_BUDGET_ROWS = 2_000_000
 
-# The collected coverage index, cached per (DataFrame object, attribute
-# columns) like the metadata above: an input index, not results.
-_COV_INDEX_LOCK = threading.Lock()
-# (id(cov), attr_cols) ->
-#     (cov, broadcast, res_list, n_cov, {rp: footprint_index})
-_COV_INDEX_CACHE: dict = {}
-_COV_INDEX_MAX = 8
+# The prefilter's coarse cover may have at most this many rows: a larger
+# cover (500k) costs more in the single-threaded driver broadcast build
+# than its extra selectivity returns (BENCH_round7_prefilter.json).
+PREFILTER_MAX_ROWS = 65_536
+
+# The coverage registry: one entry per coverage DataFrame object, holding
+# the inputs a join reads of it (row count and resolutions, the collected
+# broadcast indexes and their footprint indexes) and whether the engine
+# persisted the coverage itself.  Callers amortize one coverage across
+# many joins; results are never cached, every join recomputes fully.
+# Past _REGISTRY_MAX entries the least recently used one is released.
+_REGISTRY_LOCK = threading.Lock()
+_REGISTRY: dict = {}  # id(cov) -> _Coverage
+_REGISTRY_MAX = 4
 
 
-# Coverages pip_join built and persisted itself (coverage=None) for the
-# Catalyst plans it returned: those plans read the cached rows, so the
-# newest stay persisted and the oldest is unpersisted on overflow (a plan
-# built on it still runs, recomputing the polyfill).
-_OWN_COV_LOCK = threading.Lock()
-_OWN_COVERAGES: list = []
-_OWN_COV_MAX = 4
+class _Coverage:
+    """A registry entry; each input is computed on its first read."""
+
+    __slots__ = ("cov", "sc", "owned", "meta", "indexes", "footprints")
+
+    def __init__(self, cov: DataFrame, sc, owned: bool):
+        self.cov, self.sc, self.owned = cov, sc, owned
+        self.meta = None  # (n_cov, res_list)
+        self.indexes: dict = {}  # attr_cols -> (broadcast, res_list, n_cov)
+        self.footprints: dict = {}  # rp -> rasterh3.footprint_index
+
+    def coverage_meta(self) -> tuple[int, list[int]]:
+        """(row count, sorted distinct resolutions) of the coverage."""
+        if self.meta is None:
+            # one aggregate gives both: the row count is the sum of the
+            # per-resolution counts
+            counts = self.cov.groupBy(
+                H.cells_resolution(F.col("__poly_cell")).alias("r")
+            ).count().collect()
+            self.meta = (sum(c["count"] for c in counts),
+                         sorted(c["r"] for c in counts))
+        return self.meta
+
+    def index(self, attr_cols: tuple = ("poly_id",)):
+        """The coverage collected into a broadcast index for the map-side
+        probe (coverage_index)."""
+        if attr_cols not in self.indexes:
+            index = _collect_index(self.cov, self.sc, attr_cols)
+            self.indexes[attr_cols] = index
+            self.meta = (index[2], index[1])
+        return self.indexes[attr_cols]
+
+    def mapside_index(self, attr_cols: tuple = ("poly_id",),
+                      max_rows: int | None = None):
+        """index(attr_cols) when a map-side probe may run, else None: the
+        coverage is empty or has more than `max_rows` rows (default
+        BROADCAST_BUDGET_ROWS, read at call time), counted before
+        anything is collected.  A coverage the engine persisted is
+        released once its index is collected: the map-side plan reads
+        only the broadcast."""
+        n_cov, res_list = self.coverage_meta()
+        budget = BROADCAST_BUDGET_ROWS if max_rows is None else max_rows
+        if not res_list or n_cov > budget:
+            return None
+        index = self.index(attr_cols)
+        if self.owned:
+            self.cov.unpersist()
+            self.owned = False
+        return index
+
+    def footprint_index(self, rp: int) -> tuple:
+        """h3core.rasterh3.footprint_index of the coverage cells at
+        coarse resolution rp, built on the driver once per rp."""
+        from ..h3core.rasterh3 import footprint_index
+
+        if rp not in self.footprints:
+            self.footprints[rp] = footprint_index(self.index()[0].value[0],
+                                                  rp)
+        return self.footprints[rp]
 
 
-def _keep_coverage(cov: DataFrame) -> None:
+def _release(entry: _Coverage) -> None:
+    # unpersist, not destroy: a DataFrame built on an evicted index still
+    # runs (its tasks re-fetch the value), and one built on an evicted
+    # coverage recomputes the polyfill
+    for bc, _, _ in entry.indexes.values():
+        bc.unpersist()
+    if entry.owned:
+        entry.cov.unpersist()
+
+
+def _entry(cov: DataFrame, owned: bool = False) -> _Coverage:
+    """The registry entry of `cov`, made on a miss; either way it
+    becomes the most recently used."""
     sc = cov.sparkSession.sparkContext
-    with _OWN_COV_LOCK:
-        # a stopped SparkContext took its cached rows with it, and
-        # unpersist on its DataFrames fails
-        _OWN_COVERAGES[:] = [
-            d for d in _OWN_COVERAGES if d.sparkSession.sparkContext is sc
-        ]
-        _OWN_COVERAGES.append(cov)
-        while len(_OWN_COVERAGES) > _OWN_COV_MAX:
-            _OWN_COVERAGES.pop(0).unpersist()
+    with _REGISTRY_LOCK:
+        entry = _REGISTRY.pop(id(cov), None)
+        if entry is None:
+            # a stopped SparkContext took its cached rows and broadcasts
+            # with it, and unpersist on its DataFrames fails: its entries
+            # leave uncalled
+            for k in [k for k, e in _REGISTRY.items() if e.sc is not sc]:
+                del _REGISTRY[k]
+            entry = _Coverage(cov, sc, owned)
+        _REGISTRY[id(cov)] = entry
+        while len(_REGISTRY) > _REGISTRY_MAX:
+            _release(_REGISTRY.pop(next(iter(_REGISTRY))))
+    return entry
 
 
-def _cached_index(key, cov):
-    with _COV_INDEX_LOCK:
-        hit = _COV_INDEX_CACHE.get(key)
-    return hit if hit is not None and hit[0] is cov else None
+def join_coverage(polygons: DataFrame | None, res: int,
+                  mode: str = "containscentroid",
+                  coverage: DataFrame | None = None) -> _Coverage:
+    """The registry entry of the coverage a join reads.
+
+    With coverage=None the polygons are polyfilled to a compact coverage
+    and persisted, because the budget count, the index collect and a
+    Catalyst plan all read it and the polyfill should run once.  The
+    entry owns that coverage: its mapside_index releases it once the
+    index is collected, and otherwise it stays persisted for the
+    Catalyst plan until the registry evicts the entry.  A given
+    coverage is used as it is, its cell column named __poly_cell."""
+    if coverage is None:
+        cov = polyfill_polygons(polygons, res, mode, compact=True)
+        return _entry(cov.withColumnRenamed("cell", "__poly_cell")
+                      .persist(), owned=True)
+    if "__poly_cell" not in coverage.columns:
+        coverage = coverage.withColumnRenamed("cell", "__poly_cell")
+    return _entry(coverage)
 
 
-def coverage_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",)):
-    """Collect a coverage DataFrame into a broadcast index for the
-    map-side probe: returns (broadcast[(cells_sorted, codes_sorted,
-    {col: values_by_code})], res_list, n_cov).  `code` indexes the
-    distinct attribute-row tuples; the values are Arrow arrays, so nulls
-    and int64 past 2^53 stay exact.  Cached per (DataFrame object,
-    attr_cols), and seeds the coverage's metadata cache."""
+def _collect_index(cov: DataFrame, sc, attr_cols: tuple):
     import numpy as np
     import pyarrow as pa
 
     from ..h3core import index as IDX
 
-    key = (id(cov), attr_cols)
-    hit = _cached_index(key, cov)
-    if hit is not None:
-        return hit[1], hit[2], hit[3]
     cell_col = "__poly_cell" if "__poly_cell" in cov.columns else "cell"
     tbl = cov.select(
         F.col(cell_col).alias("cell"), *[F.col(c) for c in attr_cols]
@@ -149,43 +205,18 @@ def coverage_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",)):
     cells = cells[order]
     codes = tup[order].astype(np.int64)
     res_list = sorted(int(r) for r in np.unique(IDX.get_resolution(cells)))
-    bc = spark.sparkContext.broadcast((cells, codes, attrs))
-    with _COV_INDEX_LOCK:
-        if len(_COV_INDEX_CACHE) >= _COV_INDEX_MAX:
-            old = _COV_INDEX_CACHE.pop(next(iter(_COV_INDEX_CACHE)))
-            # unpersist, not destroy: a DataFrame built on the evicted
-            # index still runs (its tasks re-fetch the value)
-            old[1].unpersist()
-        _COV_INDEX_CACHE[key] = (cov, bc, res_list, len(cells), {})
-    _seed_meta(cov, len(cells), res_list)
-    return bc, res_list, len(cells)
+    return sc.broadcast((cells, codes, attrs)), res_list, len(cells)
 
 
-def mapside_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",),
-                  max_rows: int | None = None):
-    """coverage_index(spark, cov, attr_cols) when a map-side probe may
-    run, else None: the coverage is empty or has more than `max_rows`
-    rows (default BROADCAST_BUDGET_ROWS).  The rows are counted before
-    anything is collected."""
-    n_cov, res_list = _coverage_meta(cov)
-    budget = BROADCAST_BUDGET_ROWS if max_rows is None else max_rows
-    if not res_list or n_cov > budget:
-        return None
-    return coverage_index(spark, cov, attr_cols)
-
-
-def coverage_footprint_index(spark, cov: DataFrame, rp: int) -> tuple:
-    """h3core.rasterh3.footprint_index of the coverage_index entry at
-    coarse resolution rp, built on the driver once per (coverage, rp)
-    and kept with the entry."""
-    from ..h3core.rasterh3 import footprint_index
-
-    bc, _, _ = coverage_index(spark, cov)
-    entry = _cached_index((id(cov), ("poly_id",)), cov)
-    memo = entry[4] if entry is not None else {}
-    if rp not in memo:
-        memo[rp] = footprint_index(bc.value[0], rp)
-    return memo[rp]
+def coverage_index(spark, cov: DataFrame, attr_cols: tuple = ("poly_id",)):
+    """Collect a coverage DataFrame into a broadcast index for the
+    map-side probe: returns (broadcast[(cells_sorted, codes_sorted,
+    {col: values_by_code})], res_list, n_cov).  `code` indexes the
+    distinct attribute-row tuples; the values are Arrow arrays, so nulls
+    and int64 past 2^53 stay exact.  Kept per (DataFrame object,
+    attr_cols) in the coverage's registry entry, broadcast on the
+    coverage's own SparkContext (`spark`'s)."""
+    return _entry(cov).index(attr_cols)
 
 
 def _pip_join_mapside(
@@ -312,9 +343,7 @@ def pip_join(
     salt: int | None = None,
     how: str = "inner",
     coverage: DataFrame | None = None,
-    min_coverage_res: int | None = None,
     prefilter: bool = True,
-    prefilter_max_rows: int = 65_536,
     strategy: str = "auto",
 ) -> DataFrame:
     """Assign polygon attributes to rows of `left_cells` (which must carry
@@ -325,27 +354,26 @@ def pip_join(
     pure bit math -> stays in whole-stage codegen).  Pass a precomputed
     `coverage` (from polyfill_polygons(..., compact=True), persisted) to
     amortize the polyfill across joins at multiple point resolutions —
-    coverage at res R serves any left side at res >= R.  Use
-    `min_coverage_res` to trade a slightly larger broadcast for fewer
-    exploded probe rows (see lift_coverage) — measured 1.5x on the
-    24M-point scaling workload.
+    coverage at res R serves any left side at res >= R.  A provided
+    coverage may be lifted first (lift_coverage, then persist) to trade
+    a slightly larger broadcast for fewer exploded probe rows — measured
+    1.5x on the 24M-point scaling workload.
 
     prefilter (default True): on the NON-broadcast paths, a two-stage
     probe — an exact single-resolution cover of the coverage (parents
     of finer cells + uncompacted children of coarser ones; exact size
     known WITHOUT building it because compact cells are disjoint),
-    chosen as the finest resolution fitting `prefilter_max_rows`, is
+    chosen as the finest resolution fitting PREFILTER_MAX_ROWS, is
     broadcast-semi-joined against the unexploded left, so rows that
     cannot match never reach the explode or the shuffle.  Measured at
     24M points / 880k-cell coverage (BENCH_round7_prefilter.json): the
     plain-shuffle path goes 23.0 s -> 4.3 s, BROADCAST PARITY (4.9 s)
     — beyond the broadcast threshold, prefilter + AQE skew handling is
-    the recommended default.  The cap default (64k) is the measured
-    sweet spot: a bigger cover (500k) costs more in the single-threaded
-    driver broadcast build than its extra selectivity returns.  The
-    explicit `salt` path keeps its own floor (~2-3x broadcast) because
-    the coverage is replicated per salt value and sort-merge-joined —
-    reserve it for measured hot-key skew that AQE cannot split.
+    the recommended default.  The 64k cap is the measured sweet spot
+    (PREFILTER_MAX_ROWS).  The explicit `salt` path keeps its own floor
+    (~2-3x broadcast) because the coverage is replicated per salt value
+    and sort-merge-joined — reserve it for measured hot-key skew that
+    AQE cannot split.
 
     how: "inner" (default) attaches polygon attributes; "left_semi" /
     "left_anti" return the left rows that do / don't fall in any
@@ -382,30 +410,12 @@ def pip_join(
             salt=salt,
             how="inner",
             coverage=coverage,
-            min_coverage_res=min_coverage_res,
+            prefilter=prefilter,
             strategy=strategy,
         ).select(cell_col).distinct()
         return left_cells.join(matched_cells, cell_col, how)
-    if coverage is None:
-        cov = polyfill_polygons(polygons, res, mode, compact=True)
-        cov = cov.withColumnRenamed("cell", "__poly_cell")
-        if min_coverage_res is not None:
-            cov = lift_coverage(cov, min_coverage_res)
-        cov = cov.persist()
-    else:
-        cov = coverage
-        if "__poly_cell" not in cov.columns:
-            cov = cov.withColumnRenamed("cell", "__poly_cell")
-        if min_coverage_res is not None:
-            # a caller-provided coverage is usually persisted by the
-            # caller; lifting it here would re-run the uncompact explode
-            # on every evaluation of the join plan — apply lift_coverage
-            # (and persist) on your side instead
-            raise ValueError(
-                "min_coverage_res only applies when pip_join builds the "
-                "coverage; pre-lift a provided coverage with "
-                "lift_coverage(...) and persist it"
-            )
+    entry = join_coverage(polygons, res, mode, coverage)
+    cov = entry.cov
     # strategy='mapside': run the inner join as a map-side probe of the
     # cached coverage index instead of a Catalyst BroadcastHashJoin,
     # skipping the per-action driver-serial hash-relation build.  Needs
@@ -413,37 +423,32 @@ def pip_join(
     # coverage within the budget; otherwise the general plan below runs.
     attr_cols = tuple(c for c in cov.columns if c != "__poly_cell")
     if strategy == "mapside" and how == "inner" and not salt and attr_cols:
-        index = mapside_index(left_cells.sparkSession, cov, attr_cols,
-                              broadcast_threshold_rows)
+        index = entry.mapside_index(attr_cols, broadcast_threshold_rows)
         if index is not None:
-            out = _pip_join_mapside(left_cells, cov, cell_col, attr_cols,
-                                    index)
-            if coverage is None:
-                # the index is collected; the plan reads only the
-                # broadcast, so the coverage persisted above can go
-                cov.unpersist()
-            return out
-    if coverage is None:
-        _keep_coverage(cov)
-    n_cov, res_list = _coverage_meta(cov)
+            return _pip_join_mapside(left_cells, cov, cell_col, attr_cols,
+                                     index)
+    n_cov, res_list = entry.coverage_meta()
     if not res_list:
         return left_cells.join(
             polygons.drop("wkb").limit(0), F.lit(False), how
         )
 
-    # left side: ancestor cell at every coverage resolution (bit math);
-    # explode drops the NULLs (res finer than the row's own cell res)
-    prefixed = left_cells.withColumn(
-        "__pref",
-        F.explode(
-            F.array(
-                *[
-                    H.change_resolution_parent(F.col(cell_col), r)
-                    for r in res_list
-                ]
-            )
-        ),
-    ).filter(F.col("__pref").isNotNull())
+    def ancestors(rows: DataFrame) -> DataFrame:
+        # ancestor cell at every coverage resolution (bit math); explode
+        # drops the NULLs (res finer than the row's own cell res)
+        return rows.withColumn(
+            "__pref",
+            F.explode(
+                F.array(
+                    *[
+                        H.change_resolution_parent(F.col(cell_col), r)
+                        for r in res_list
+                    ]
+                )
+            ),
+        ).filter(F.col("__pref").isNotNull())
+
+    prefixed = ancestors(left_cells)
 
     if n_cov <= broadcast_threshold_rows:
         out = prefixed.join(
@@ -464,7 +469,7 @@ def pip_join(
     # the explode and the shuffle to the survivors.  For a coverage
     # spanning most of the key space the filter passes everything and
     # costs one small broadcast probe; the coarse set is capped at
-    # prefilter_max_rows because a broadcast hash relation is built
+    # PREFILTER_MAX_ROWS because a broadcast hash relation is built
     # single-threaded on the driver (the round-3 Amdahl rule).
     if prefilter:
         # candidate prefilter resolutions: from the coverage's coarsest
@@ -496,7 +501,7 @@ def pip_join(
         pres = None
         for r in sorted(cand, reverse=True):  # finest fitting candidate
             total = int(stats[f"p{r}"] or 0) + int(stats[f"k{r}"] or 0)
-            if total <= prefilter_max_rows:
+            if total <= PREFILTER_MAX_ROWS:
                 pres = r
                 break
         if pres is not None:
@@ -520,17 +525,7 @@ def pip_join(
                 == coarse["__coarse_cell"],
                 "left_semi",
             )
-            prefixed = survivors.withColumn(
-                "__pref",
-                F.explode(
-                    F.array(
-                        *[
-                            H.change_resolution_parent(F.col(cell_col), r)
-                            for r in res_list
-                        ]
-                    )
-                ),
-            ).filter(F.col("__pref").isNotNull())
+            prefixed = ancestors(survivors)
 
     if salt and salt > 1:
         salted_cov = cov.withColumn(

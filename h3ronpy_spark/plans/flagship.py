@@ -24,8 +24,9 @@ generated, decoded and tiled.  Each tile is assigned to polygons by
 probing the broadcast coverage index with its bit-math ancestors
 (h3core.index.probe_ancestors, the condition pip_join's equi-join
 evaluates) and rolled up per (poly, image); the caption rides those
-rollup rows.  The coverage index is built once per coverage DataFrame
-(operators.spatial_join.coverage_index) and cached, so a scan that
+rollup rows.  The coverage index and its footprint index are built once
+per coverage DataFrame and kept in the coverage's entry of
+operators.spatial_join's registry (join_coverage), so a scan that
 reuses one persisted coverage collects it once.
 
 The footprint test is a provable superset: it works at a coarse
@@ -37,16 +38,17 @@ sample stays within the measured slack of that drift (footprint_prefilter
 states the bound).  rp is the finest resolution whose safe radius covers
 the largest corpus image (MAX_SIDE_PX): res 5 for res-9 tiling.
 
-Fallback: with `salt=`, or when operators.spatial_join.mapside_index
+Fallback: with `salt=`, or when the coverage entry's mapside_index
 finds the coverage empty or over the broadcast budget, the producer
 generates every image and emits plain tile rows (image long, cell long,
 px_value long): no footprint mask, no string column.  They go through
 pip_join's Catalyst equi-join and a groupBy to (poly, image); a small
 mapInPandas over those rollup rows adds the caption from the image id
-(sources.images.caption_of_ids).  A coverage the fallback polyfilled
-itself (coverage=None) joins pip_join's bounded registry of the
-coverages it persisted (operators.spatial_join._keep_coverage), so
-repeated calls do not pile up persisted coverages.  The polygon
+(sources.images.caption_of_ids).  A coverage flagship polyfilled
+itself (coverage=None) is owned by its registry entry, like one
+pip_join builds: released once the fused path collects its index, kept
+persisted for the fallback's plan until the bounded registry evicts it,
+so repeated calls do not pile up persisted coverages.  The polygon
 DataFrame is built only where it is read: that polyfill and the
 fallback's pip_join.  The fallback is the independent check of the
 fused path's footprint prefilter and map-side probe; both paths decode
@@ -61,12 +63,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.spatial_join import (
-    _keep_coverage,
-    mapside_index,
-    pip_join,
-    polyfill_polygons,
-)
+from ..operators.spatial_join import join_coverage, pip_join
 from ..sources.images import (
     caption_of_ids,
     codec_snapshot,
@@ -88,20 +85,18 @@ _FORMATS = {
     "jpeg": (gen_images_jpeg_pdf, register_jpeg_codec),
 }
 
-def _footprint_index(spark, cov, res, res_list):
-    """The coverage's footprint-prefilter index at the finest coarse
-    resolution whose safe radius covers the largest synthetic image
-    (MAX_SIDE_PX square; a larger image would be kept unpruned)."""
+def _footprint_res(res, res_list):
+    """The footprint prefilter's coarse resolution: the finest whose safe
+    radius covers the largest synthetic image (MAX_SIDE_PX square; a
+    larger image would be kept unpruned)."""
     from ..h3core.rasterh3 import footprint_prefilter_res, footprint_radius
-    from ..operators.spatial_join import coverage_footprint_index
     from ..sources.images import MAX_SIDE_PX, PIXEL_DEG
 
     radius = footprint_radius(
         [PIXEL_DEG, 0.0, 0.0, 0.0, -PIXEL_DEG, 0.0],
         [MAX_SIDE_PX], [MAX_SIDE_PX],
     )[0]
-    rp = footprint_prefilter_res(radius, min(res, res_list[-1]))
-    return coverage_footprint_index(spark, cov, rp)
+    return footprint_prefilter_res(radius, min(res, res_list[-1]))
 
 
 def _image_kernel(gen, seed, codecs, res, emit, fp_index=None):
@@ -249,7 +244,7 @@ def flagship(
     Execution strategy: the default path fuses generate -> decode ->
     tile -> map-side PIP join -> per-(poly, image) partial aggregation
     into one Python stage (module docstring).  `salt=`, or a coverage
-    that operators.spatial_join.mapside_index rejects (empty or over
+    whose registry entry's mapside_index rejects (empty or over
     the broadcast budget), sends the same producer's tile rows through
     the Catalyst pip_join plan instead.  Both paths size the image
     stage as one task wave, so `partitions` has no effect; it is kept
@@ -286,18 +281,10 @@ def flagship(
         codecs = codec_snapshot()
 
     # the polygon DataFrame is built only where it is read: the
-    # polyfill below and the fallback's pip_join
-    polys = None
-    cov = coverage
-    if cov is None:
-        # persisted: the budget check, the index collect and the
-        # fallback's pip_join all read it, and the polyfill runs once
-        polys = synth_polygons(spark, n_polygons, seed=seed)
-        cov = (
-            polyfill_polygons(polys, res, compact=True)
-            .withColumnRenamed("cell", "__poly_cell")
-            .persist()
-        )
+    # polyfill of an own coverage and the fallback's pip_join
+    polys = None if coverage is not None else synth_polygons(
+        spark, n_polygons, seed=seed)
+    entry = join_coverage(polys, res, coverage=coverage)
 
     # ONE task wave for the image stage: the pandas runner costs
     # ~15-20 ms per task, so 256 tasks of a 60k-image scan burned ~4 s
@@ -307,12 +294,10 @@ def flagship(
     dp = spark.sparkContext.defaultParallelism
     ids = spark.range(0, n_images, 1, max(1, min(dp, (n_images + 255) // 256)))
 
-    index = mapside_index(spark, cov) if salt is None else None
+    index = entry.mapside_index() if salt is None else None
     if index is not None:
         bc, res_list, _ = index
-        fp_index = _footprint_index(spark, cov, res, res_list)
-        if coverage is None:
-            cov.unpersist()
+        fp_index = entry.footprint_index(_footprint_res(res, res_list))
         per_img = ids.mapInPandas(
             _image_kernel(gen, seed, codecs, res,
                           _rollup_emitter(bc, res_list), fp_index),
@@ -322,10 +307,6 @@ def flagship(
     else:
         if polys is None:
             polys = synth_polygons(spark, n_polygons, seed=seed)
-        if coverage is None:
-            # the returned plan reads the persisted coverage: it joins
-            # pip_join's bounded registry of the coverages it persisted
-            _keep_coverage(cov)
         tiles = ids.mapInPandas(
             _image_kernel(gen, seed, codecs, res, _tile_rows),
             "image long, cell long, px_value long",
@@ -338,7 +319,7 @@ def flagship(
                 yield b
 
         per_img = (
-            pip_join(tiles, polys, res=res, salt=salt, coverage=cov)
+            pip_join(tiles, polys, res=res, salt=salt, coverage=entry.cov)
             .groupBy("poly_id", "image")
             .agg(F.count("*").alias("n_tiles"),
                  F.sum("px_value").alias("sum_px"))

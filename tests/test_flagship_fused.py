@@ -168,7 +168,8 @@ def _own_coverage(spark, n_polygons, res, seed=42):
 def _index_entries(cov):
     from h3ronpy_spark.operators import spatial_join as SJ
 
-    return sum(1 for v in SJ._COV_INDEX_CACHE.values() if v[0] is cov)
+    return sum(1 for e in SJ._REGISTRY.values()
+               if e.cov is cov and e.indexes)
 
 
 def test_over_budget_coverage_falls_back_without_collecting(
@@ -214,6 +215,31 @@ def test_warmed_index_is_the_one_flagship_reads(spark, monkeypatch):
     cov.unpersist()
 
 
+def test_one_registry_entry_per_coverage(spark):
+    """One coverage read by the fused flagship (index and footprint
+    index) and by a Catalyst pip_join (metadata) has exactly one
+    registry entry, holding all three."""
+    import h3ronpy_spark.functions as H
+    from h3ronpy_spark.operators import spatial_join as SJ
+    from h3ronpy_spark.plans.flagship import flagship
+    from h3ronpy_spark.sources.polygons import synth_polygons
+
+    cov = _own_coverage(spark, 8, 9)
+    assert flagship(spark, 400, n_polygons=8, res=9, coverage=cov).count()
+    pts = spark.range(500).select(H.coordinates_to_cells(
+        F.lit(-60.0) + F.col("id") * 0.24, F.col("id") * 0.7 - 175.0,
+        F.lit(9)).alias("cell"))
+    joined = SJ.pip_join(pts, synth_polygons(spark, 8, seed=42), res=9,
+                         coverage=cov)
+    assert "BroadcastHashJoin" in (
+        joined._jdf.queryExecution().executedPlan().toString())
+    joined.count()
+    entries = [e for e in SJ._REGISTRY.values() if e.cov is cov]
+    assert len(entries) == 1
+    assert entries[0].meta and entries[0].indexes and entries[0].footprints
+    cov.unpersist()
+
+
 def test_fused_leaves_no_persisted_coverage(spark):
     from h3ronpy_spark.plans.flagship import flagship
 
@@ -226,18 +252,19 @@ def test_fused_leaves_no_persisted_coverage(spark):
 
 def test_fallback_coverages_stay_bounded(spark):
     """flagship(coverage=None) on the salted fallback keeps the coverage
-    it persisted in pip_join's bounded registry: at most _OWN_COV_MAX
-    stay persisted, and an evicted one's plan still runs."""
-    from h3ronpy_spark.operators.spatial_join import _OWN_COV_MAX
+    it persisted in the bounded coverage registry: at most
+    _REGISTRY_MAX stay persisted, and an evicted one's plan still
+    runs."""
+    from h3ronpy_spark.operators.spatial_join import _REGISTRY_MAX
     from h3ronpy_spark.plans.flagship import flagship
 
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     first = flagship(spark, 1000, n_polygons=20, res=9, salt=2)
     want = sorted(map(tuple, first.collect()))
-    for k in range(1, _OWN_COV_MAX + 3):
+    for k in range(1, _REGISTRY_MAX + 3):
         flagship(spark, 1000, n_polygons=20 + k, res=9, salt=2).count()
-        assert jsc.getPersistentRDDs().size() - before <= _OWN_COV_MAX
+        assert jsc.getPersistentRDDs().size() - before <= _REGISTRY_MAX
     assert sorted(map(tuple, first.collect())) == want and want
 
 

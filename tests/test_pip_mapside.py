@@ -171,18 +171,18 @@ def test_mapside_leaves_no_persisted_coverage(spark, setup):
 
 def test_catalyst_coverages_stay_bounded(spark, setup):
     """pip_join(coverage=None) on the Catalyst path keeps at most
-    _OWN_COV_MAX of the coverages it persisted; an evicted one's plan
+    _REGISTRY_MAX of the coverages it persisted; an evicted one's plan
     still runs."""
-    from h3ronpy_spark.operators.spatial_join import _OWN_COV_MAX
+    from h3ronpy_spark.operators.spatial_join import _REGISTRY_MAX
 
     polys, _cov, cells = setup
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     first = pip_join(cells, polys.limit(3), res=8)
     want = _rows(first)
-    for k in range(_OWN_COV_MAX + 3):
+    for k in range(_REGISTRY_MAX + 3):
         pip_join(cells, polys.limit(4 + k), res=8).count()
-        assert jsc.getPersistentRDDs().size() - before <= _OWN_COV_MAX
+        assert jsc.getPersistentRDDs().size() - before <= _REGISTRY_MAX
     assert _rows(first) == want
 
 
@@ -199,13 +199,14 @@ def test_empty_provided_coverage_stays_persisted(spark, setup):
 
 
 def test_kept_coverages_of_a_stopped_context_are_dropped(monkeypatch):
-    """Coverages kept under an earlier (stopped) SparkContext leave the
-    registry without an unpersist call, which would fail on them."""
+    """Entries registered under an earlier (stopped) SparkContext leave
+    the registry without an unpersist call, which would fail on them:
+    owned coverages, broadcast indexes and metadata alike."""
     from types import SimpleNamespace
 
     from h3ronpy_spark.operators import spatial_join as SJ
 
-    monkeypatch.setattr(SJ, "_OWN_COVERAGES", [])
+    monkeypatch.setattr(SJ, "_REGISTRY", {})
     unpersisted = []
 
     def cov(sc, name):
@@ -215,17 +216,45 @@ def test_kept_coverages_of_a_stopped_context_are_dropped(monkeypatch):
         )
 
     old_sc, new_sc = object(), object()
-    for i in range(3):
-        SJ._keep_coverage(cov(old_sc, f"old{i}"))
-    for i in range(SJ._OWN_COV_MAX + 1):
-        SJ._keep_coverage(cov(new_sc, f"new{i}"))
+    old = [cov(old_sc, f"old{i}") for i in range(3)]
+    SJ._entry(old[0], owned=True)
+    SJ._entry(old[1]).indexes[("poly_id",)] = (
+        cov(old_sc, "old1-index"), [7], 1)
+    SJ._entry(old[2]).meta = (1, [7])
+    for i in range(SJ._REGISTRY_MAX + 1):
+        SJ._entry(cov(new_sc, f"new{i}"), owned=True)
     assert unpersisted == ["new0"]
-    assert len(SJ._OWN_COVERAGES) == SJ._OWN_COV_MAX
+    assert len(SJ._REGISTRY) == SJ._REGISTRY_MAX
+    assert not {id(c) for c in old} & set(SJ._REGISTRY)
+
+
+def test_eviction_releases_index_and_own_coverage(spark, setup,
+                                                  monkeypatch):
+    """Evicting an entry unpersists its broadcast index, and its
+    coverage only when the engine built it."""
+    from h3ronpy_spark.operators import spatial_join as SJ
+
+    polys, cov, _cells = setup
+    own = SJ.join_coverage(polys.limit(3), 7)
+    own.coverage_meta()
+    assert own.owned and own.cov.is_cached
+    given = cov.select("*")
+    bc, _, _ = SJ.coverage_index(spark, given)
+    released = []
+    monkeypatch.setattr(bc, "unpersist", lambda *a: released.append("bc"))
+    monkeypatch.setattr(given, "unpersist",
+                        lambda *a: released.append("given"))
+    for _ in range(SJ._REGISTRY_MAX):
+        SJ.coverage_index(spark, cov.select("*"))
+    assert id(own.cov) not in SJ._REGISTRY
+    assert id(given) not in SJ._REGISTRY
+    assert released == ["bc"]
+    assert not own.cov.is_cached
 
 
 def test_evicted_index_dataframe_still_runs(spark, setup):
     from h3ronpy_spark.operators.spatial_join import (
-        _COV_INDEX_MAX,
+        _REGISTRY_MAX,
         coverage_index,
     )
 
@@ -234,6 +263,6 @@ def test_evicted_index_dataframe_still_runs(spark, setup):
     df = pip_join(cells, polys, res=8, coverage=own, strategy="mapside")
     want = _rows(df)
     # new coverage objects miss the cache and evict the oldest entries
-    for _ in range(_COV_INDEX_MAX + 1):
+    for _ in range(_REGISTRY_MAX + 1):
         coverage_index(spark, cov.select("*"))
     assert _rows(df) == want

@@ -224,6 +224,34 @@ class TestNonBroadcastBranches:
         got = sorted(map(tuple, sp.select("id", "poly_id").collect()))
         assert got == want
 
+    def test_pip_join_semi_anti_forward_prefilter(self, spark):
+        """prefilter=False reaches the inner join that semi/anti run
+        on: past the broadcast threshold their plan has the coarse
+        prefilter leg only when it is on, with the same rows."""
+        from h3ronpy_spark.operators.spatial_join import pip_join
+        from h3ronpy_spark.sources.polygons import synth_polygons
+
+        pts = spark.range(4000).select(
+            F.col("id"),
+            H.coordinates_to_cells(
+                (F.pmod(F.col("id") * 2654435761, F.lit(1700000)) / 10000.0
+                 - 85.0),
+                (F.pmod(F.col("id") * 40503, F.lit(3600000)) / 10000.0
+                 - 180.0),
+                F.lit(8),
+            ).alias("cell"),
+        )
+        polys = synth_polygons(spark, 8, seed=3)
+        for how in ("left_semi", "left_anti"):
+            on = pip_join(pts, polys, res=8, how=how,
+                          broadcast_threshold_rows=1)
+            off = pip_join(pts, polys, res=8, how=how,
+                           broadcast_threshold_rows=1, prefilter=False)
+            assert "__coarse_cell" in _plan(on)
+            assert "__coarse_cell" not in _plan(off), _plan(off)[:3000]
+            assert sorted(on.select("id").collect()) == sorted(
+                off.select("id").collect())
+
     def test_pip_join_semi_anti_partition(self, spark):
         """Round-5 regression: semi/anti must PARTITION the left rows
         exactly (semi distinct == inner distinct, anti == complement,

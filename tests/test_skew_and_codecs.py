@@ -454,7 +454,7 @@ class TestAdhocSigPersist:
         """max_bucket=None keeps the unguarded single-reader plan
         persist-free (nothing to share; don't spend cache)."""
         from h3ronpy_spark.operators.dedup import (
-            _SIG_PERSISTED,
+            _SIGNATURES,
             minhash_lsh_pairs,
             unpersist_signatures,
         )
@@ -467,7 +467,7 @@ class TestAdhocSigPersist:
             ),
         )
         minhash_lsh_pairs(docs, max_bucket=None).count()
-        assert not any(_SIG_PERSISTED.values())
+        assert not any(_SIGNATURES.held.values())
         unpersist_signatures()
 
 
